@@ -237,33 +237,28 @@ final class CdcEngine(
     val t0 = System.nanoTime()
     log.info(s"export_started job=$jobId type=$exportType consumer=$consumerId")
     try {
-      val df = plan
-      // One pass over the data for the batch, cached so the empty-guard,
-      // CSV write, and max(updated_at) agree on the same snapshot (the
-      // reference materializes the batch once, exports.py:85,125,161 —
-      // at cluster scale this cache would be a persisted staging dir).
-      df.persist()
-      try {
-        Ops.maxUpdatedAt(df) match {
-          case None => // empty batch: no file, watermark untouched
-            log.info(s"export_completed job=$jobId rowsExported=0")
-            ExportJob(jobId, "completed", exportType, "", 0L)
-          case Some(wm) =>
-            val rows = CsvSink.write(df, s"$outputDir/$filename")
-            CdcEngine.afterSink()
-            // advance-last ordering: state moves only after the sink
-            // succeeded (app/services/jobs.py:42 commit discipline).
-            // A crash in between leaves the exported file WITHOUT the
-            // watermark advance — the retry re-exports the same rows
-            // (at-least-once, the reference's own window; consumers
-            // dedup by id) — never the reverse, which would LOSE rows.
-            wmStore.upsert(consumerId, wm)
-            val secs = (System.nanoTime() - t0) / 1e9
-            log.info(
-              f"export_completed job=$jobId rowsExported=$rows durationSeconds=$secs%.3f")
-            ExportJob(jobId, "completed", exportType, filename, rows)
-        }
-      } finally df.unpersist()
+      // One pass: the CSV write itself counts the batch and takes its
+      // max(updated_at), so the rows published and the watermark stored
+      // come from the same evaluation of the batch (the reference
+      // materializes it once, exports.py:85,125,161).
+      val written = CsvSink.writeBatch(plan, s"$outputDir/$filename")
+      if (written.rows == 0) { // empty batch: no file, watermark untouched
+        log.info(s"export_completed job=$jobId rowsExported=0")
+        ExportJob(jobId, "completed", exportType, "", 0L)
+      } else {
+        CdcEngine.afterSink()
+        // advance-last ordering: state moves only after the sink
+        // succeeded (app/services/jobs.py:42 commit discipline).
+        // A crash in between leaves the exported file WITHOUT the
+        // watermark advance — the retry re-exports the same rows
+        // (at-least-once, the reference's own window; consumers
+        // dedup by id) — never the reverse, which would LOSE rows.
+        written.maxUpdatedAt.foreach(wmStore.upsert(consumerId, _))
+        val secs = (System.nanoTime() - t0) / 1e9
+        log.info(
+          f"export_completed job=$jobId rowsExported=${written.rows} durationSeconds=$secs%.3f")
+        ExportJob(jobId, "completed", exportType, filename, written.rows)
+      }
     } catch {
       case e: Throwable =>
         log.error(s"export_failed job=$jobId error=${e.getMessage}")

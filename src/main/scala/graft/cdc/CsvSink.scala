@@ -1,10 +1,14 @@
 package graft.cdc
 
+import java.sql.Timestamp
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, TimestampType}
+import org.apache.spark.util.CollectionAccumulator
 
 /** Single-file CSV export sink with a stable, caller-chosen filename.
   *
@@ -32,48 +36,73 @@ object CsvSink {
   /** Python `datetime.isoformat()` shape for tz-aware UTC values. */
   val IsoTimestampFormat = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSxxx"
 
+  /** What one write pass saw: the rows it wrote and the max `updated_at`
+    * among them (None for an empty batch or a frame without that column).
+    */
+  final case class Written(rows: Long, maxUpdatedAt: Option[Timestamp])
+
   /** Write `df` (already projected + ordered) as CSV under `outPath`.
     * Returns the number of rows written. If `singleFile`, `outPath` is a
-    * single CSV file; otherwise it is a directory of part-files.
+    * single CSV file (header-only when `df` is empty); otherwise it is a
+    * directory of part-files.
     */
-  def write(df: DataFrame, outPath: String, singleFile: Boolean = true): Long = {
-    // Render booleans as True/False (reference stringifies Python bools,
-    // exports.py:54,63). Spark csv writes true/false, so pre-render.
-    val rendered = df.schema.fields.foldLeft(df) { (acc, f) =>
+  def write(df: DataFrame, outPath: String, singleFile: Boolean = true): Long =
+    if (singleFile) writeSingle(render(df), outPath, publishEmpty = true).rows
+    else writeSharded(render(df), outPath)
+
+  /** The CDC batch write: `df` (already projected + ordered) as one CSV
+    * file at `outPath`, published only when the batch has rows. The row
+    * count and the max `updated_at` come from the write pass itself, so
+    * the caller's watermark describes exactly the rows in the file and
+    * the whole export is one Spark action.
+    */
+  def writeBatch(df: DataFrame, outPath: String): Written =
+    writeSingle(render(df), outPath, publishEmpty = false)
+
+  // Render booleans as True/False (reference stringifies Python bools,
+  // exports.py:54,63). Spark csv writes true/false, so pre-render.
+  private def render(df: DataFrame): DataFrame =
+    df.schema.fields.foldLeft(df) { (acc, f) =>
       f.dataType match {
-        case org.apache.spark.sql.types.BooleanType =>
+        case BooleanType =>
           acc.withColumn(f.name, when(col(f.name), "True").otherwise("False"))
         case _ => acc
       }
     }
-    if (!singleFile) return writeSharded(rendered, outPath)
 
-    // Rows are counted DURING the one write job (per-partition
-    // accumulator), not by re-reading the written file on the driver —
-    // the count costs nothing extra regardless of export size.
-    val spark = rendered.sparkSession
+  /** Stage the single part-file under a sibling temp dir, then publish it
+    * by one rename. The staging dir is removed whether the write
+    * succeeded, failed, or had nothing to publish.
+    */
+  private def writeSingle(rendered: DataFrame, outPath: String,
+      publishEmpty: Boolean): Written = {
+    val fs = rawFs(rendered.sparkSession, outPath)
     val (counted, acc) = countingRows(rendered.coalesce(1))
-    val tmp = outPath + ".tmpdir-" + java.util.UUID.randomUUID()
-    counted.write
-      .option("header", "true")
-      .option("timestampFormat", IsoTimestampFormat)
-      // RFC-4180 quote doubling ("" inside quoted fields), matching the
-      // reference's Python csv.writer — Spark's default is backslash
-      // escaping, which csv-standard readers would misparse
-      .option("escape", "\"")
-      .mode("overwrite")
-      .csv(tmp)
-    val rows = partCounts(acc).values.sum
-    val fs = rawFs(spark, outPath)
-    val part = fs.listStatus(new Path(tmp)).toSeq.map(_.getPath)
-      .find(_.getName.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException(s"no part file in $tmp"))
-    val target = new Path(outPath)
-    Option(target.getParent).foreach(fs.mkdirs)
-    if (fs.exists(target)) fs.delete(target, false)
-    require(fs.rename(part, target), s"rename $part -> $target failed")
-    fs.delete(new Path(tmp), true)
-    rows
+    val tmp = new Path(outPath + ".tmpdir-" + java.util.UUID.randomUUID())
+    try {
+      counted.write
+        .option("header", "true")
+        .option("timestampFormat", IsoTimestampFormat)
+        // RFC-4180 quote doubling ("" inside quoted fields), matching the
+        // reference's Python csv.writer — Spark's default is backslash
+        // escaping, which csv-standard readers would misparse
+        .option("escape", "\"")
+        .mode("overwrite")
+        .csv(tmp.toString)
+      val parts = partStats(acc).values
+      val written = Written(parts.map(_.rows).sum,
+        parts.flatMap(_.maxUpdatedAt).reduceOption(later))
+      if (written.rows > 0 || publishEmpty) {
+        val part = fs.listStatus(tmp).toSeq.map(_.getPath)
+          .find(_.getName.startsWith("part-"))
+          .getOrElse(throw new IllegalStateException(s"no part file in $tmp"))
+        val target = new Path(outPath)
+        Option(target.getParent).foreach(fs.mkdirs)
+        if (fs.exists(target)) fs.delete(target, false)
+        require(fs.rename(part, target), s"rename $part -> $target failed")
+      }
+      written
+    } finally fs.delete(tmp, true)
   }
 
   /** Cluster-scale export: one CSV part per partition, each writer
@@ -96,8 +125,8 @@ object CsvSink {
       .option("escape", "\"")
       .mode("overwrite")
       .csv(outPath)
-    val perPart = partCounts(acc)
-    val total = perPart.values.sum
+    val perPart = partStats(acc)
+    val total = perPart.values.map(_.rows).sum
     // part-<%05d> carries the task partition index: join names to
     // counts without touching file contents
     val fs = rawFs(spark, outPath)
@@ -108,7 +137,7 @@ object CsvSink {
     val entries = parts.map { st =>
       val name = st.getPath.getName
       val idx = name.stripPrefix("part-").takeWhile(_.isDigit).toInt
-      (name, perPart.getOrElse(idx, 0L), st.getLen)
+      (name, perPart.get(idx).fold(0L)(_.rows), st.getLen)
     }
     val partSum = entries.map(_._2).sum
     require(partSum == total,
@@ -136,40 +165,58 @@ object CsvSink {
       case f => f
     }
 
-  /** Thread a per-partition counting iterator into `rendered`: rows are
-    * tallied as the CSV writer pulls them, reported once at iterator
-    * exhaustion. Action-task accumulator semantics make the report
-    * exactly-once per successful task (a retried task's partial count
-    * is discarded with the task); [[partCounts]] takes the max per
-    * partition id as a belt-and-braces guard against speculative twins.
+  /** Thread a per-partition counting iterator into `rendered`: rows and
+    * their max `updated_at` are tallied as the CSV writer pulls them,
+    * reported once at iterator exhaustion. Action-task accumulator
+    * semantics make the report exactly-once per successful task (a
+    * retried task's partial tally is discarded with the task);
+    * [[partStats]] keeps one report per partition id as a
+    * belt-and-braces guard against speculative twins.
     */
   private def countingRows(rendered: DataFrame)
-      : (DataFrame, org.apache.spark.util.CollectionAccumulator[(Int, Long)]) = {
+      : (DataFrame, CollectionAccumulator[(Int, Written)]) = {
     val acc = rendered.sparkSession.sparkContext
-      .collectionAccumulator[(Int, Long)]("csv-part-rows")
+      .collectionAccumulator[(Int, Written)]("csv-part-rows")
+    val tsIdx = rendered.schema.fields.indexWhere(f =>
+      f.name == "updated_at" && f.dataType == TimestampType)
     val counted = rendered.mapPartitions { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
-      new scala.collection.AbstractIterator[org.apache.spark.sql.Row] {
+      new scala.collection.AbstractIterator[Row] {
         private var n = 0L
+        private var max: Timestamp = null
         private var reported = false
         override def hasNext: Boolean = {
           val h = it.hasNext
-          if (!h && !reported) { acc.add(pid -> n); reported = true }
+          if (!h && !reported) {
+            acc.add(pid -> Written(n, Option(max)))
+            reported = true
+          }
           h
         }
-        override def next(): org.apache.spark.sql.Row = {
-          val r = it.next(); n += 1; r
+        override def next(): Row = {
+          val r = it.next()
+          n += 1
+          if (tsIdx >= 0 && !r.isNullAt(tsIdx)) {
+            val t = r.get(tsIdx) match {
+              case i: java.time.Instant => Timestamp.from(i) // java8API on
+              case t: Timestamp => t
+            }
+            max = if (max == null) t else later(max, t)
+          }
+          r
         }
       }
-    }(org.apache.spark.sql.Encoders.row(rendered.schema))
+    }(Encoders.row(rendered.schema))
     (counted, acc)
   }
 
-  private def partCounts(
-      acc: org.apache.spark.util.CollectionAccumulator[(Int, Long)])
-      : Map[Int, Long] =
+  private def partStats(acc: CollectionAccumulator[(Int, Written)])
+      : Map[Int, Written] =
     acc.value.asScala.toSeq
-      .groupBy(_._1).map { case (pid, xs) => pid -> xs.map(_._2).max }
+      .groupBy(_._1).map { case (pid, xs) => pid -> xs.map(_._2).maxBy(_.rows) }
+
+  private def later(a: Timestamp, b: Timestamp): Timestamp =
+    if (b.after(a)) b else a
 
   /** Consumer-side reader for this sink's dialect: the round-trip
     * contract a downstream of the reference relies on. Parses the

@@ -78,9 +78,11 @@ object Ops {
     df.orderBy(col("updated_at"), col("id"))
 
   /** New-watermark aggregate: max `updated_at` of the exported batch
-    * (`/root/reference/app/services/exports.py:92,132,168`). Computed
-    * from the same DataFrame that was exported — never from a re-read
-    * (a row arriving between two reads would be skipped forever).
+    * (reference `app/services/exports.py:92,132,168`). This is the
+    * reference formulation: [[CdcEngine]] takes the watermark from the
+    * CSV write pass itself ([[CsvSink.writeBatch]]), so the exported
+    * rows and the watermark come from one pass, and tests check that
+    * value against this aggregate over the exported rows.
     */
   def maxUpdatedAt(df: DataFrame): Option[Timestamp] = {
     val row = df.agg(max(col("updated_at"))).head()

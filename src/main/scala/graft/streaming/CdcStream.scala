@@ -70,15 +70,14 @@ final class CdcStream(
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$checkpointRoot/$consumerId-$exportType")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val sorted = batch.orderBy(col("updated_at"), col("id"))
-          val stamp = java.time.format.DateTimeFormatter
-            .ofPattern("yyyyMMdd'T'HHmmss'Z'")
-            .withZone(java.time.ZoneOffset.UTC)
-            .format(java.time.Instant.now())
-          CsvSink.write(sorted,
-            s"$outputDir/${exportType}_${consumerId.replace(" ", "_")}_b${batchId}_$stamp.csv")
-        }
+        // the sink counts the batch in its one write pass and publishes
+        // no file for an empty one
+        val stamp = java.time.format.DateTimeFormatter
+          .ofPattern("yyyyMMdd'T'HHmmss'Z'")
+          .withZone(java.time.ZoneOffset.UTC)
+          .format(java.time.Instant.now())
+        CsvSink.writeBatch(batch.orderBy(col("updated_at"), col("id")),
+          s"$outputDir/${exportType}_${consumerId.replace(" ", "_")}_b${batchId}_$stamp.csv")
         ()
       }
       .start()

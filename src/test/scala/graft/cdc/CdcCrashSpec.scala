@@ -26,6 +26,11 @@ class CdcCrashSpec extends SparkSpec
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
+  /** Entries of `dir` left behind by the sink's staging step. */
+  private def stagingLeftovers(dir: String): Seq[String] =
+    Option(new java.io.File(dir).list()).toSeq.flatten
+      .filter(_.contains(".tmpdir-"))
+
   private def usersDf = Seq(
     (1L, "A", "a@x.com", ts("2026-01-01 10:00:00"), ts("2026-01-01 10:00:00"), false),
     (2L, "B", "b@x.com", ts("2026-01-02 10:00:00"), ts("2026-01-05 10:00:00"), false),
@@ -47,6 +52,8 @@ class CdcCrashSpec extends SparkSpec
     val finals = Option(outDir.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".csv"))
     assert(finals.isEmpty, s"partial export leaked: ${finals.mkString(",")}")
+    assert(stagingLeftovers(s"$root/out").isEmpty,
+      s"staging dir survived the failed write: ${stagingLeftovers(s"$root/out")}")
     assert(engine.watermark("c1").isEmpty, "watermark advanced past a crash")
   }
 
@@ -80,8 +87,18 @@ class CdcCrashSpec extends SparkSpec
     intercept[Exception] { CsvSink.write(poison, out) }
     assert(!Files.exists(Paths.get(out)),
       "failed write left something under the final name")
+    assert(stagingLeftovers(root).isEmpty,
+      s"staging dir survived the failed write: ${stagingLeftovers(root)}")
+    // a publish that fails after the part is staged: the final name is
+    // held by a non-empty directory, which the sink refuses to replace
+    val blocked = s"$root/blocked.csv"
+    Files.createDirectories(Paths.get(blocked, "keep"))
+    intercept[Exception] { CsvSink.write(usersDf, blocked) }
+    assert(stagingLeftovers(root).isEmpty,
+      s"staging dir survived the failed publish: ${stagingLeftovers(root)}")
     // a later healthy write of the same name succeeds cleanly
     val rows = CsvSink.write(usersDf.orderBy("updated_at"), out)
     assert(rows == 3L && Files.exists(Paths.get(out)))
+    assert(stagingLeftovers(root).isEmpty)
   }
 }

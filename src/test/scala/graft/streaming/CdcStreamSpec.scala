@@ -56,6 +56,40 @@ class CdcStreamSpec extends SparkSpec {
     assert(lines2(1).startsWith("INSERT,4,"))
   }
 
+  test("AvailableNow over no new input or an all-filtered batch writes no file") {
+    val root = tmpDir("stream-empty")
+    val usersDir = s"$root/users"
+    val outDir = s"$root/out"
+    def outEntries = Option(new java.io.File(outDir).list()).toSeq.flatten.toSet
+
+    Seq(
+      UserRow(1, "A", "a@x.com", ts("2026-01-01 10:00:00"), ts("2026-01-01 10:00:00"), false),
+    ).toDF().coalesce(1).write.mode("append").parquet(usersDir)
+    val stream = new CdcStream(spark, usersDir, s"$root/ckpt", outDir)
+    stream.incrementalExport("c1").awaitTermination()
+    val first = outEntries
+    assert(first.count(_.endsWith(".csv")) == 1)
+
+    // no new input: the resumed stream drains nothing
+    val q1 = stream.incrementalExport("c1")
+    q1.awaitTermination()
+    assert(q1.exception.isEmpty)
+    assert(outEntries == first)
+
+    // a new file holding only soft-deletes: the incremental micro-batch
+    // runs but is empty after the active-only filter
+    Seq(
+      UserRow(2, "B", "b@x.com", ts("2026-01-02 10:00:00"), ts("2026-01-02 10:00:00"), true),
+    ).toDF().coalesce(1).write.mode("append").parquet(usersDir)
+    val q2 = stream.incrementalExport("c1")
+    q2.awaitTermination()
+    assert(q2.exception.isEmpty)
+    assert(Files.exists(Paths.get(s"$root/ckpt/c1-incremental/commits/1")),
+      "the soft-delete file was never committed as a micro-batch")
+    assert(outEntries == first,
+      s"empty micro-batch left ${(outEntries -- first).mkString(",")}")
+  }
+
   test("streaming windowed operation rates aggregate with watermark") {
     val root = tmpDir("streamagg")
     val usersDir = s"$root/users"
