@@ -1,6 +1,5 @@
 package graft.cdc
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -107,24 +106,14 @@ object AggView {
       require(!Set("cnt", "total", "nncnt", "vmin", "vmax", "bucket")
           .contains(key.toLowerCase),
         s"key column '$key' collides with the view's state columns"))
-    val fs = TxLog.fs(spark, dir)
-    Seq("manifest", "data", ".staging", "meta")
-      .foreach(sub => fs.delete(new Path(s"$dir/$sub"), true))
-    TxLog.invalidate(dir)
-    val txn = new TableTxn(spark, dir, baseVersion = -1L)
+    val txn = TableTxn.create(spark, dir)
     val state = partials(df, keys, valueCol, minMax)
       .withColumn("bucket", bucketOf(keys.map(col), nBuckets))
-    state
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("bucket") +: keys.map(col): _*)
-      .write.partitionBy("bucket").mode("overwrite")
-      .parquet(s"${txn.staging}/data")
-    val staged = txn.stagedBucketIds()
-    txn.installAndCommit(
+    val staged = txn.stage(state.repartition(col("bucket")), keys)
+    txn.commit(
       staged.map(b => b -> txn.bucketRel(b)).toMap,
       coreProps(keys, valueCol, nBuckets, batchId,
         state.drop("bucket").schema.json, minMax))
-    txn.cleanup()
   }
 
   private def snap(spark: SparkSession, dir: String): TxLog.Snapshot = {
@@ -264,22 +253,17 @@ object AggView {
       if (s.props("n_buckets").toInt == newNBuckets) return
       TxLog.sweep(spark, dir)
       val txn = new TableTxn(spark, dir, s.version)
-      storedData(spark, dir, s)
-        .withColumn("bucket", bucketOf(keys.map(col), newNBuckets))
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("bucket") +: keys.map(col): _*)
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(s"${txn.staging}/data")
-      val staged = txn.stagedBucketIds()
-      txn.installAndCommit(
+      val staged = txn.stage(
+        storedData(spark, dir, s)
+          .withColumn("bucket", bucketOf(keys.map(col), newNBuckets))
+          .repartition(col("bucket")),
+        keys)
+      txn.commit(
         staged.map(b => b -> txn.bucketRel(b)).toMap,
         coreProps(keys, valueCol, newNBuckets,
           s.props("last_batch_id").toLong, s.props("schema_json"),
-          hasMinMax(s)) ++ Compaction.fenceProps(s))
-      TxLog.hygiene {
-        txn.cleanup()
-        if (!retainHistory) TxLog.vacuum(spark, dir, txn.newVersion)
-      }
+          hasMinMax(s)) ++ Compaction.fenceProps(s),
+        vacuum = !retainHistory)
     }
   }
 
@@ -406,29 +390,29 @@ object AggView {
       val txn = new TableTxn(spark, dir, s.version)
       val rels = dirty.toSeq.flatMap(b => s.buckets.get(b)) ++
         dirty.toSeq.flatMap(b => s.deltas.getOrElse(b, Nil))
-      foldPartials(readPaths(spark, schemaOf(s),
-          rels.map(rel => s"$dir/data/$rel")), keys)
-        .withColumn("bucket", bucketOf(keys.map(col), nBuckets))
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("bucket") +: keys.map(col): _*)
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(s"${txn.staging}/data")
-      val staged = txn.stagedBucketIds()
-      val carried = s.props.filter { case (k, _) =>
-        k.startsWith("delta.") &&
-          !dirty.contains(k.drop("delta.".length).toInt)
-      }
-      txn.installAndCommit(
+      val staged = txn.stage(
+        foldPartials(readPaths(spark, schemaOf(s),
+            rels.map(rel => s"$dir/data/$rel")), keys)
+          .withColumn("bucket", bucketOf(keys.map(col), nBuckets))
+          .repartition(col("bucket")),
+        keys)
+      txn.commit(
         (s.buckets -- dirty) ++ staged.map(b => b -> txn.bucketRel(b)).toMap,
         coreProps(keys, valueCol, nBuckets,
           s.props("last_batch_id").toLong, s.props("schema_json"),
-          hasMinMax(s)) ++ Compaction.fenceProps(s) ++ carried)
-      TxLog.hygiene {
-        txn.cleanup()
-        if (!retainHistory) TxLog.vacuum(spark, dir, txn.newVersion)
-      }
+          hasMinMax(s)) ++ Compaction.fenceProps(s) ++
+          carriedChains(s, dirty),
+        vacuum = !retainHistory)
     }
   }
+
+  /** Delta chains of buckets a commit does NOT rewrite/restage carry
+    * verbatim; a CoW rewrite folds its buckets' chains in and drops
+    * them, a MoR write appends to them.
+    */
+  private def carriedChains(s: TxLog.Snapshot,
+      restaged: Set[Int]): Map[String, String] =
+    Compaction.carriedStats(s.props, restaged, Compaction.DeltaPrefixes)
 
   /** Per-bucket merge-on-read pressure: (bucket, chain length). */
   def deltaStats(spark: SparkSession, dir: String): Seq[(Int, Int)] = {
@@ -490,27 +474,14 @@ object AggView {
     val txn = new TableTxn(spark, dir, s.version)
     var newBuckets = s.buckets
     val touchedSet = touched.toSet
-    // delta chains of buckets this commit does NOT rewrite/restage
-    // carry verbatim; a CoW rewrite folds its buckets' chains in and
-    // drops them, a MoR write appends to them
-    def carriedChains(restaged: Set[Int]): Map[String, String] =
-      s.props.filter { case (k, _) =>
-        k.startsWith("delta.") &&
-          !restaged.contains(k.drop("delta.".length).toInt)
-      }
-    var extraProps: Map[String, String] = carriedChains(
+    var extraProps: Map[String, String] = carriedChains(s,
       if (mergeOnRead) Set.empty else touchedSet)
     if (touched.nonEmpty && mergeOnRead) {
       // O(batch): stage the delta partials themselves; base entries
       // (and prior chains) carry verbatim, reads fold by summation
       TxLog.sweep(spark, dir)
-      delta
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("bucket") +: keys.map(col): _*)
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(s"${txn.staging}/data")
-      val staged = txn.stagedBucketIds()
-      extraProps = carriedChains(staged.toSet) ++ staged.map { b =>
+      val staged = txn.stage(delta.repartition(col("bucket")), keys)
+      extraProps = carriedChains(s, staged.toSet) ++ staged.map { b =>
         val rels = s.deltas.getOrElse(b, Nil) :+ txn.bucketRel(b)
         s"delta.$b" -> rels.mkString(",")
       }
@@ -538,27 +509,22 @@ object AggView {
         .filter(!lit(canRetract || touched.exists(s.deltas.contains)) ||
           col("cnt") =!= 0)
         .select((keys ++ stateCols(minMax) :+ "bucket").map(col): _*)
-      merged
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("bucket") +: keys.map(col): _*)
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(s"${txn.staging}/data")
       // a retraction can empty a touched bucket entirely: it staged no
       // partition and simply leaves the bucket map — no stale
       // directory can resurrect its rows because readers only ever
       // resolve manifest-listed paths
-      val staged = txn.stagedBucketIds()
+      val staged = txn.stage(merged.repartition(col("bucket")), keys)
       newBuckets = (s.buckets -- touched) ++
         staged.map(b => b -> txn.bucketRel(b))
     }
     // ONE commit publishes the new bucket contents AND the advanced
     // fence — the atomic data+meta write (a no-data batch still
     // commits a manifest: the fence must advance exactly-once too)
-    txn.installAndCommit(newBuckets,
+    txn.commit(newBuckets,
       coreProps(keys, valueCol, nBuckets, batchId,
         s.props("schema_json"), hasMinMax(s)) ++
-        Compaction.fenceProps(s) ++ extraProps)
-    TxLog.hygiene { txn.cleanup(); TxLog.vacuum(spark, dir, txn.newVersion) }
+        Compaction.fenceProps(s) ++ extraProps,
+      vacuum = true)
     MergeStats(applied = true, touched)
   }
 }

@@ -369,7 +369,7 @@ object Compaction {
   }
 
   /** Parse a `_tp=<n>` directory name. NULL partition-source values
-    * are refused at write time ([[withTp]]), so a non-numeric value —
+    * are refused at write time ([[TableTxn.stage]]), so a non-numeric value —
     * Hive's `__HIVE_DEFAULT_PARTITION__` from an external writer —
     * is a layout violation reported loudly instead of a
     * NumberFormatException deep in a scan.
@@ -389,23 +389,13 @@ object Compaction {
     * otherwise still land as Hive's default partition, which no reader
     * of this layout can place.
     */
-  private def tpColumnChecked(u: String,
+  private[cdc] def tpColumnChecked(u: String,
       c: String): org.apache.spark.sql.Column = {
     val v = tpColumn(u, col(c))
     when(v.isNull, raise_error(lit(
       s"time-partition source column '$c' must not be null (or " +
         "fail to convert to a timestamp)")).cast("int"))
       .otherwise(v)
-  }
-
-  /** Add the derived `_tp` column and return the staged write's
-    * partition column list.
-    */
-  private def withTp(df: DataFrame,
-      tp: Option[(String, String)]): (DataFrame, Seq[String]) = tp match {
-    case None => (df, Seq("bucket"))
-    case Some((u, c)) =>
-      (df.withColumn("_tp", tpColumnChecked(u, c)), Seq("bucket", "_tp"))
   }
 
   /** Read-side partition admission: the retention floor
@@ -515,30 +505,17 @@ object Compaction {
       "clusterBy supports one (sort) or two (Z-order) columns")
     clusterBy.foreach(c => require(df.columns.contains(c),
       s"cluster column '$c' missing from the snapshot schema"))
-    val fs = TxLog.fs(spark, dir)
-    // "_mv" too: a re-init is a FULL table replace, and a surviving
-    // materialized-view dir would otherwise RE-ATTACH (stale) on the
-    // next CREATE instead of re-seeding from the new table
-    Seq("manifest", "data", "feed", ".staging", "meta", "_history",
-        "_mv")
-      .foreach(sub => fs.delete(new Path(s"$dir/$sub"), true))
-    TxLog.invalidate(dir)
-    val txn = new TableTxn(spark, dir, baseVersion = -1L)
-    val (staged0, partCols) = withTp(
+    val txn = TableTxn.create(spark, dir)
+    val staged = txn.stage(
       df.filter(!isDeleted(deleteCol))
-        .withColumn("bucket", bucketOf(keys.map(col), nBuckets)),
-      timePartition)
-    staged0
-      // hash-partition on bucket + in-partition (bucket, key) sort:
-      // one writer task per bucket, deterministic file content, and
-      // no per-write range-sampling job (measured on the merge-family
-      // bench queries — three writes each paid a sampling pass)
-      .repartition(col("bucket"))
-      .sortWithinPartitions(stagedSort(partCols, keys, clusterBy): _*)
-      .write.partitionBy(partCols: _*).mode("overwrite")
-      .parquet(s"${txn.staging}/data")
-    val staged = txn.stagedBucketIds()
-    txn.installAndCommit(
+        .withColumn("bucket", bucketOf(keys.map(col), nBuckets))
+        // hash-partition on bucket + in-partition (bucket, key) sort:
+        // one writer task per bucket, deterministic file content, and
+        // no per-write range-sampling job (measured on the merge-family
+        // bench queries — three writes each paid a sampling pass)
+        .repartition(col("bucket")),
+      keys, clusterBy, timePartition)
+    txn.commit(
       newBuckets = staged.map(b => b -> txn.bucketRel(b)).toMap,
       props = coreProps(keys, versionCol, deleteCol, nBuckets,
         df.schema.json, clusterBy) ++
@@ -549,7 +526,6 @@ object Compaction {
         rowProps(stagedStats(spark, txn.staging, staged, versionCol,
           clusterBy, ndvP.getOrElse(HllP))) +
         ("op" -> "init"))
-    txn.cleanup()
   }
 
   /** Create an EMPTY maintained table: commit a v0 manifest carrying
@@ -583,16 +559,7 @@ object Compaction {
       "clusterBy supports one (sort) or two (Z-order) columns")
     clusterBy.foreach(c => require(schema.fieldNames.contains(c),
       s"cluster column '$c' missing from the table schema"))
-    val fs = TxLog.fs(spark, dir)
-    // "_mv" too: a re-init is a FULL table replace, and a surviving
-    // materialized-view dir would otherwise RE-ATTACH (stale) on the
-    // next CREATE instead of re-seeding from the new table
-    Seq("manifest", "data", "feed", ".staging", "meta", "_history",
-        "_mv")
-      .foreach(sub => fs.delete(new Path(s"$dir/$sub"), true))
-    TxLog.invalidate(dir)
-    val txn = new TableTxn(spark, dir, baseVersion = -1L)
-    txn.installAndCommit(newBuckets = Map.empty,
+    TableTxn.create(spark, dir).commit(newBuckets = Map.empty,
       props = coreProps(keys, versionCol, deleteCol, nBuckets,
         schema.json, clusterBy) ++
         (if (feed) Map("feed" -> "true") else Map.empty) ++
@@ -600,35 +567,6 @@ object Compaction {
           Map("tp_unit" -> u, "tp_col" -> c) }.getOrElse(Map.empty) ++
         ndvP.map(v => Map("ndv_p" -> v.toString)).getOrElse(Map.empty) +
         ("op" -> "create"))
-    txn.cleanup()
-  }
-
-  /** The deterministic in-bucket sort every staged write applies:
-    * cluster expression first (row-group stat locality), key columns
-    * as the tiebreak (stable file content).
-    */
-  private def inBucketSort(keys: Seq[String],
-      clusterBy: Seq[String]): Seq[org.apache.spark.sql.Column] =
-    stagedSort(Seq("bucket"), keys, clusterBy)
-
-  /** The full staged-write sort (r16): the write's partition columns
-    * first — ALL of them, so the V1 write's required ordering
-    * (partition columns) is satisfied by this explicit sort and the
-    * planner inserts no second sort of its own (time-partitioned
-    * layouts previously paid a planner-inserted (bucket, _tp) sort on
-    * top of the explicit one) — then the cluster expression
-    * (row-group stat locality), then the key columns as the tiebreak
-    * (stable file content).
-    */
-  private def stagedSort(partCols: Seq[String], keys: Seq[String],
-      clusterBy: Seq[String]): Seq[org.apache.spark.sql.Column] = {
-    val cluster = clusterBy match {
-      case Nil => Nil
-      case Seq(c) => Seq(col(c))
-      case Seq(x, y) => Seq(graft.sources.ZOrder.mortonCode(col(x), col(y)))
-      case _ => Nil
-    }
-    (partCols.map(col) ++ cluster) ++ keys.map(col)
   }
 
   /** Per-bucket stats of the staged generation — row count and the
@@ -1124,12 +1062,41 @@ object Compaction {
     else None
   }
 
+  /** The merge-on-read delta-chain families among [[StatPrefixes]]. */
+  private[cdc] val DeltaPrefixes = Seq("delta.", "drows.", "dmaxv.")
+
   /** The per-bucket stat-key families a commit carries/filters. */
   private[cdc] val StatPrefixes =
     Seq("rows.", "minv.", "maxv.", "vminl.", "vmaxl.",
       "lvdeg.", "lcdeg.",
-      "cmin.", "cmax.", "cndv.", "cnul.",
-      "delta.", "drows.", "dmaxv.")
+      "cmin.", "cmax.", "cndv.", "cnul.") ++ DeltaPrefixes
+
+  /** The per-bucket stat props a commit carries forward from `props`:
+    * every [[StatPrefixes]] key except the `restated` families' keys of
+    * the `replaced` buckets — the ones this commit rewrites, restates
+    * or drops. A key whose bucket suffix does not parse carries
+    * ([[statBucket]]).
+    */
+  private[cdc] def carriedStats(props: Map[String, String], replaced: Set[Int],
+      restated: Seq[String] = StatPrefixes): Map[String, String] =
+    props.filter { case (k, _) =>
+      StatPrefixes.exists(p => k.startsWith(p) &&
+        !(restated.contains(p) && statBucket(k, p).exists(replaced)))
+    }
+
+  /** The manifest schema after a rewrite that stored `out`: widened
+    * when the write introduced columns (fields forced nullable —
+    * pre-evolution files genuinely lack them, and untouched buckets'
+    * narrower files null-extend under the explicit read schema),
+    * otherwise the stored one.
+    */
+  private[cdc] def widenedSchemaJson(out: DataFrame,
+      stored: org.apache.spark.sql.types.StructType): String = {
+    val outData = out.drop("bucket").schema
+    if (outData.fieldNames.toSeq == stored.fieldNames.toSeq) stored.json
+    else org.apache.spark.sql.types.StructType(
+      outData.fields.map(_.copy(nullable = true))).json
+  }
 
   /** Exact live row count answered from the manifest alone — zero I/O,
     * zero Spark jobs: every commit records each bucket's count, so the
@@ -1793,19 +1760,14 @@ object Compaction {
       // version in `_seq` exactly like morMerge's files. In-group
       // rows carry a null `_seq` (base files read it back null).
       val inGroup = col("bucket").isInCollection(bucketIds.toSeq)
-      val (replStage, replParts) = withTp(
+      val staged = txn.stage(
         replacement.select(m.schema.fieldNames.map(col).toSeq: _*)
           .filter(!isDeleted(m.deleteCol))
           .withColumn("bucket", bucketOf(m.keyCols, m.nBuckets))
           .withColumn("_seq", when(inGroup,
-            lit(null).cast("long")).otherwise(lit(txn.newVersion))),
-        m.tp)
-      replStage
-        .repartition(col("bucket"))
-        .sortWithinPartitions(stagedSort(replParts, m.keys, m.clusterBy): _*)
-        .write.partitionBy(replParts: _*).mode("overwrite")
-        .parquet(s"${txn.staging}/data")
-      val staged = txn.stagedBucketIds()
+            lit(null).cast("long")).otherwise(lit(txn.newVersion)))
+          .repartition(col("bucket")),
+        m.keys, m.clusterBy, m.tp)
       val escaped = staged.toSet -- bucketIds
       if (escaped.nonEmpty && !insertsOutsideGroups) {
         TxLog.hygiene(txn.cleanup())
@@ -1818,12 +1780,7 @@ object Compaction {
       val stagedIn = staged.filter(bucketIds.contains)
       val newBuckets = (m.buckets -- bucketIds) ++
         stagedIn.map(b => b -> txn.bucketRel(b))
-      val carried = m.snap.props.collect {
-        case (k, v) if StatPrefixes.exists(p =>
-            k.startsWith(p) &&
-              !statBucket(k, p).exists(bucketIds.contains))
-          => k -> v
-      }
+      val carried = carriedStats(m.snap.props, bucketIds)
       val newStats = stagedStats(spark, txn.staging, staged,
         m.versionCol, m.clusterBy, ndvPOf(m.snap))
       // escapee buckets keep base + prior deltas and APPEND one delta
@@ -1878,11 +1835,9 @@ object Compaction {
         ("op" -> "replace")
       // catalog tables keep history: VERSION AS OF serves every commit
       // until an explicit vacuum, exactly like the DML lowering
-      txn.installAndCommit(newBuckets, props)
-      feedBatch.foreach(n => publishFeed(TxLog.fs(spark, dir),
-        txn.staging, dir, n, txn.newVersion, m.schema.json,
-        m.tp.map(_._1)))
-      TxLog.hygiene(txn.cleanup())
+      txn.commit(newBuckets, props, publish = feedBatch.foreach(n =>
+        publishFeed(TxLog.fs(spark, dir), txn.staging, dir, n,
+          txn.newVersion, m.schema.json, m.tp.map(_._1))))
     }
   }
 
@@ -2207,16 +2162,11 @@ object Compaction {
       if (m.nBuckets == newNBuckets) return
       TxLog.sweep(spark, dir)
       val txn = new TableTxn(spark, dir, m.snap.version)
-      val (rbStage, rbParts) = withTp(
+      val staged = txn.stage(
         storedData(spark, dir, m).drop("bucket")
-          .withColumn("bucket", bucketOf(m.keyCols, newNBuckets)),
-        m.tp)
-      rbStage
-        .repartition(col("bucket"))
-        .sortWithinPartitions(stagedSort(rbParts, m.keys, m.clusterBy): _*)
-        .write.partitionBy(rbParts: _*).mode("overwrite")
-        .parquet(s"${txn.staging}/data")
-      val staged = txn.stagedBucketIds()
+          .withColumn("bucket", bucketOf(m.keyCols, newNBuckets))
+          .repartition(col("bucket")),
+        m.keys, m.clusterBy, m.tp)
       val props = coreProps(m.keys, m.versionCol, m.deleteCol,
         newNBuckets, m.schema.json, m.clusterBy) ++
         evolutionProps(m.snap) ++
@@ -2224,12 +2174,8 @@ object Compaction {
           m.clusterBy, ndvPOf(m.snap))) ++
         m.snap.prop("next_feed_batch").map("next_feed_batch" -> _) +
         ("op" -> "rebucket")
-      txn.installAndCommit(
-        staged.map(b => b -> txn.bucketRel(b)).toMap, props)
-      TxLog.hygiene {
-        txn.cleanup()
-        if (!retainHistory) TxLog.vacuum(spark, dir, txn.newVersion)
-      }
+      txn.commit(staged.map(b => b -> txn.bucketRel(b)).toMap, props,
+        vacuum = !retainHistory)
     }
   }
 
@@ -2243,7 +2189,7 @@ object Compaction {
     * footer pass, readers never see an intermediate state (staged
     * write + manifest CAS), and a concurrent merge either commits
     * first (this rewrite OCC-retries over its result) or loses the
-    * CAS and re-runs against the new spec — `withTp` derives `_tp`
+    * CAS and re-runs against the new spec — the staged write derives `_tp`
     * from the manifest each attempt resolves. The retention floor
     * (`tp_min`) does NOT carry: it is a promise in the OLD granularity
     * about data that is already gone, and the rewrite materializes
@@ -2269,16 +2215,11 @@ object Compaction {
       val txn = new TableTxn(spark, dir, m.snap.version)
       // the fold inside storedData reconciles merge-on-read chains, so
       // the rewrite doubles as a full compaction (dirty buckets clean)
-      val (stage, parts) = withTp(
+      val staged = txn.stage(
         storedData(spark, dir, m).drop("bucket")
-          .withColumn("bucket", bucketOf(m.keyCols, m.nBuckets)),
-        timePartition)
-      stage
-        .repartition(col("bucket"))
-        .sortWithinPartitions(stagedSort(parts, m.keys, m.clusterBy): _*)
-        .write.partitionBy(parts: _*).mode("overwrite")
-        .parquet(s"${txn.staging}/data")
-      val staged = txn.stagedBucketIds()
+          .withColumn("bucket", bucketOf(m.keyCols, m.nBuckets))
+          .repartition(col("bucket")),
+        m.keys, m.clusterBy, timePartition)
       val props = coreProps(m.keys, m.versionCol, m.deleteCol,
         m.nBuckets, m.schema.json, m.clusterBy) ++
         (evolutionProps(m.snap) -- Seq("tp_unit", "tp_col", "tp_min")) ++
@@ -2292,12 +2233,8 @@ object Compaction {
         // layout-aware listing route forever after
         ("tp_evolved" -> "true") +
         ("op" -> "repartition")
-      txn.installAndCommit(
-        staged.map(b => b -> txn.bucketRel(b)).toMap, props)
-      TxLog.hygiene {
-        txn.cleanup()
-        if (!retainHistory) TxLog.vacuum(spark, dir, txn.newVersion)
-      }
+      txn.commit(staged.map(b => b -> txn.bucketRel(b)).toMap, props,
+        vacuum = !retainHistory)
     }
   }
 
@@ -2542,14 +2479,13 @@ object Compaction {
         // reserved batch above stays feed-table-only.
         ("feed_epoch" -> (cur.counter("feed_epoch") + 1L).toString) +
         ("op" -> "restore") + ("restored_from" -> version.toString)
-      txn.installAndCommit(target.buckets, props)
       // the empty batch publishes only after the state it fences is
-      // committed; a failure here surfaces as the non-retryable
+      // committed; a failure there surfaces as the non-retryable
       // PostCommitPublishFailure, exactly like a merge's
-      feedBatch.foreach(n => publishFeed(fs, txn.staging, dir, n,
-        txn.newVersion, target.props.getOrElse("schema_json", "{}"),
-        target.prop("tp_unit")))
-      TxLog.hygiene { txn.cleanup() }
+      txn.commit(target.buckets, props, publish = feedBatch.foreach(n =>
+        publishFeed(fs, txn.staging, dir, n, txn.newVersion,
+          target.props.getOrElse("schema_json", "{}"),
+          target.prop("tp_unit"))))
       txn.newVersion
     }
   }
@@ -2648,7 +2584,7 @@ object Compaction {
             (st.getPath, dst)
           }
         }
-      // same grace-clock re-stamp installAndCommit performs: the
+      // same grace-clock re-stamp the commit's install performs: the
       // rename preserves the staging-era mtime, which could make the
       // adopted (about-to-be-live) generations sweep-eligible in the
       // adopt-to-commit window
@@ -2679,7 +2615,10 @@ object Compaction {
         ("op" -> "replace") +
         ("replaced_from" -> cur.version.toString) +
         ("lineage_floor" -> txn.newVersion.toString)
-      try txn.installAndCommit(staged.buckets, props)
+      try txn.commit(staged.buckets, props, publish = feedBatch.foreach(n =>
+        publishFeed(fs, txn.staging, dir, n, txn.newVersion,
+          staged.props.getOrElse("schema_json", "{}"),
+          staged.prop("tp_unit"))))
       catch {
         case e: TxLog.CommitConflict =>
           // un-adopt so the OCC retry re-adopts against the new head
@@ -2689,11 +2628,7 @@ object Compaction {
             fs.rename(dst, src) } }
           throw e
       }
-      feedBatch.foreach(n => publishFeed(fs, txn.staging, dir, n,
-        txn.newVersion, staged.props.getOrElse("schema_json", "{}"),
-        staged.prop("tp_unit")))
       TxLog.hygiene {
-        txn.cleanup()
         TxLog.invalidate(stageDir)
         fs.delete(new Path(stageDir), true)
       }
@@ -3511,19 +3446,12 @@ object Compaction {
     // stage the new bucket contents while every pre-image directory is
     // still live (they stay live until a LATER merge's sweep — commit
     // never deletes): the write job reads the real committed files, so
-    // losing cache blocks mid-write merely recomputes
-    prof("merge.stageWinners") {
-      val (wStage, wParts) = withTp(winners, m.tp)
-      // already hash-distributed by bucket (the merge's ONE exchange,
-      // established before the ranking window) — no repartition here;
-      // the sort is prefixed by every write partition column so the
-      // V1 write inserts no second sort
-      wStage
-        .sortWithinPartitions(stagedSort(wParts, m.keys, m.clusterBy): _*)
-        .write.partitionBy(wParts: _*).mode("overwrite")
-        .parquet(s"$staging/data")
+    // losing cache blocks mid-write merely recomputes. `winners` is
+    // already hash-distributed by bucket (the merge's ONE exchange,
+    // established before the ranking window) — no repartition here
+    val staged = prof("merge.stageWinners") {
+      txn.stage(winners, m.keys, m.clusterBy, m.tp)
     }
-    val staged = txn.stagedBucketIds()
     // a touched bucket with zero surviving keys staged no partition:
     // it leaves the manifest's bucket map and its old directory is
     // swept once unreferenced
@@ -3534,14 +3462,8 @@ object Compaction {
       staged.map(b => b -> txn.bucketRel(b))
 
     // widen the manifest schema when the changelog introduced columns,
-    // so future reads project them (untouched buckets' narrower files
-    // null-extend under the explicit read schema). Fields are forced
-    // nullable: pre-evolution files genuinely lack the new column.
-    val winnerData = winners.drop("bucket").schema
-    val schemaJson = if (winnerData.fieldNames.toSeq != m.schema.fieldNames.toSeq)
-      org.apache.spark.sql.types.StructType(
-        winnerData.fields.map(_.copy(nullable = true))).json
-    else m.schema.json
+    // so future reads project them
+    val schemaJson = widenedSchemaJson(winners, m.schema)
 
     val feedBatch = if (emitFeed) Some(nextBatch(spark, dir, m)) else None
     feedBatch.foreach(n => stampFeedIntent(fs, staging, n))
@@ -3553,11 +3475,7 @@ object Compaction {
     // delta props carry for UNTOUCHED buckets only: a copy-on-write
     // merge folds a touched bucket's deltas into its new base, so the
     // commit drops them (and the sweep reclaims the directories)
-    val carriedRows = m.snap.props.collect {
-      case (k, v) if StatPrefixes.exists(p =>
-          k.startsWith(p) && !statBucket(k, p).exists(touched.contains))
-        => k -> v
-    }
+    val carriedRows = carriedStats(m.snap.props, touched.toSet)
     val newStats = prof("merge.stagedStats") {
       stagedStats(spark, staging, staged, versionCol, m.clusterBy,
         ndvPOf(m.snap))
@@ -3585,31 +3503,23 @@ object Compaction {
 
     // THE commit: one manifest rename publishes data + schema + fence
     // (on a lost CAS the txn reclaims its install and the OCC loop
-    // recomputes against the winner's snapshot)
-    prof("merge.commit") { txn.installAndCommit(newBuckets, props) }
-
-    // publish the feed batch only now that the table state it
-    // describes is committed (see scaladoc for the residual window).
-    // A failure here must NOT re-enter the OCC loop: the version just
-    // moved — by our own commit — so a generic retry would re-run the
-    // whole already-applied merge, derive a zero-effect delta, and
-    // silently drop this batch's real change events. Retry the rename
-    // alone; if it still fails, surface the distinct non-retryable
-    // error so the caller knows the table committed but the feed
-    // batch did not publish.
-    feedBatch.foreach(n =>
-      publishFeed(fs, staging, dir, n, newVersion, schemaJson,
-        m.tp.map(_._1)))
-    // retention: a non-retaining merge keeps only the new version —
-    // older manifests go, and the sweep reclaims every directory they
-    // alone referenced (the touched buckets' pre-images). Hygiene
-    // only: the merge is COMMITTED, a failure here must not convert
-    // it into a spurious retry
-    prof("merge.cleanup+vacuum") {
-      TxLog.hygiene {
-        txn.cleanup()
-        if (!retainHistory) TxLog.vacuum(spark, dir, newVersion)
-      }
+    // recomputes against the winner's snapshot). The feed batch
+    // publishes only once the table state it describes is committed
+    // (see scaladoc for the residual window). A publish failure must
+    // NOT re-enter the OCC loop: the version just moved — by our own
+    // commit — so a generic retry would re-run the whole
+    // already-applied merge, derive a zero-effect delta, and silently
+    // drop this batch's real change events. Retry the rename alone; if
+    // it still fails, surface the distinct non-retryable error so the
+    // caller knows the table committed but the feed batch did not
+    // publish. Retention: a non-retaining merge keeps only the new
+    // version — older manifests go, and the sweep reclaims every
+    // directory they alone referenced (the touched buckets'
+    // pre-images).
+    prof("merge.commit") {
+      txn.commit(newBuckets, props, vacuum = !retainHistory,
+        publish = feedBatch.foreach(n => publishFeed(fs, staging, dir, n,
+          newVersion, schemaJson, m.tp.map(_._1))))
     }
 
     MergeStats(touched, emptied, rows, feedRows)
@@ -3694,16 +3604,11 @@ object Compaction {
     }
 
     // THE delta write — the only data-sized cost of the merge
-    val (dStage, dParts) = withTp(
+    val staged = txn.stage(
       changes.select(col("bucket") +: dataCols.map(col): _*)
-        .withColumn("_seq", lit(txn.newVersion)),
-      m.tp)
-    dStage
-      .repartition(col("bucket"))
-      .sortWithinPartitions(stagedSort(dParts, m.keys, m.clusterBy): _*)
-      .write.partitionBy(dParts: _*).mode("overwrite")
-      .parquet(s"${txn.staging}/data")
-    val staged = txn.stagedBucketIds()
+        .withColumn("_seq", lit(txn.newVersion))
+        .repartition(col("bucket")),
+      m.keys, m.clusterBy, m.tp)
     val newStats = stagedStats(spark, txn.staging, staged, m.versionCol)
     val deltaRows = newStats.values.map(_.rows).sum
 
@@ -3739,20 +3644,12 @@ object Compaction {
     // base stats carry for every bucket (the base is untouched); delta
     // props carry only for buckets this merge did NOT stage — a staged
     // bucket's delta props are fully replaced by deltaProps, so a
-    // dropped dmaxv (uncombinable stat) cannot leave a stale one behind
-    val stagedSet = staged.toSet
-    val carried = m.snap.props.filter { case (k, _) =>
-      // vminl./vmaxl. ride along (r15): the base's leaf-version maps
-      // stay true for the base files a MoR merge never touches —
-      // dropping them here made ONE merge-on-read commit disarm leaf
-      // pruning table-wide (leaf consumers already skip dirty buckets)
-      Seq("rows.", "minv.", "maxv.", "vminl.", "vmaxl.",
-          "lvdeg.", "lcdeg.",
-          "cmin.", "cmax.", "cndv.", "cnul.")
-        .exists(k.startsWith) ||
-        Seq("delta.", "drows.", "dmaxv.").exists(p =>
-          k.startsWith(p) && !statBucket(k, p).exists(stagedSet.contains))
-    }
+    // dropped dmaxv (uncombinable stat) cannot leave a stale one behind.
+    // vminl./vmaxl. ride along (r15): the base's leaf-version maps stay
+    // true for the base files a MoR merge never touches — dropping them
+    // here made ONE merge-on-read commit disarm leaf pruning table-wide
+    // (leaf consumers already skip dirty buckets)
+    val carried = carriedStats(m.snap.props, staged.toSet, DeltaPrefixes)
     val props = coreProps(m.keys, m.versionCol, m.deleteCol, m.nBuckets,
       schemaJson, m.clusterBy) ++ evolutionProps(m.snap) ++
       carried ++ deltaProps ++
@@ -3760,14 +3657,9 @@ object Compaction {
       ("op" -> "merge-mor")
 
     // the base bucket map is UNCHANGED — that is the whole point
-    txn.installAndCommit(m.buckets, props)
-    feedBatch.foreach(n =>
-      publishFeed(fs, txn.staging, dir, n, txn.newVersion, schemaJson,
-        m.tp.map(_._1)))
-    TxLog.hygiene {
-      txn.cleanup()
-      if (!retainHistory) TxLog.vacuum(spark, dir, txn.newVersion)
-    }
+    txn.commit(m.buckets, props, vacuum = !retainHistory,
+      publish = feedBatch.foreach(n => publishFeed(fs, txn.staging, dir,
+        n, txn.newVersion, schemaJson, m.tp.map(_._1))))
     MergeStats(touched, Nil, deltaRows, feedRows)
   }
 
@@ -3821,19 +3713,12 @@ object Compaction {
       val txn = new TableTxn(spark, dir, m.snap.version)
       // bucketed fold: the fold window itself establishes the bucket
       // distribution the staged write needs — no second exchange (r16)
-      val (cStage, cParts) = withTp(
-        foldBuckets(spark, dir, m, dirty, bucketed = true), m.tp)
-      cStage
-        .sortWithinPartitions(stagedSort(cParts, m.keys, m.clusterBy): _*)
-        .write.partitionBy(cParts: _*).mode("overwrite")
-        .parquet(s"${txn.staging}/data")
-      val staged = txn.stagedBucketIds()
+      val staged = txn.stage(
+        foldBuckets(spark, dir, m, dirty, bucketed = true),
+        m.keys, m.clusterBy, m.tp)
       // base stats carry for untouched buckets; delta props carry for
       // dirty-but-below-threshold buckets (their chains stay live)
-      val carried = m.snap.props.filter { case (k, _) =>
-        StatPrefixes.exists(p =>
-          k.startsWith(p) && !statBucket(k, p).exists(dirty.contains))
-      }
+      val carried = carriedStats(m.snap.props, dirty)
       val props = coreProps(m.keys, m.versionCol, m.deleteCol, m.nBuckets,
         m.schema.json, m.clusterBy) ++ evolutionProps(m.snap) ++
         carried ++
@@ -3841,13 +3726,9 @@ object Compaction {
           m.clusterBy, ndvPOf(m.snap))) ++
         m.snap.prop("next_feed_batch").map("next_feed_batch" -> _) +
         ("op" -> "compact")
-      txn.installAndCommit(
+      txn.commit(
         (m.buckets -- dirty) ++ staged.map(b => b -> txn.bucketRel(b)).toMap,
-        props)
-      TxLog.hygiene {
-        txn.cleanup()
-        if (!retainHistory) TxLog.vacuum(spark, dir, txn.newVersion)
-      }
+        props, vacuum = !retainHistory)
     }
   }
 
@@ -3955,8 +3836,7 @@ object Compaction {
         rowProps(fresh) ++
         ndvP.map(v => Map("ndv_p" -> v.toString)).getOrElse(Map.empty) +
         ("op" -> "restat")
-      txn.installAndCommit(m.buckets, props)
-      TxLog.hygiene(txn.cleanup())
+      txn.commit(m.buckets, props)
       stale.size
     }
   }

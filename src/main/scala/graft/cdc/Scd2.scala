@@ -1,6 +1,5 @@
 package graft.cdc
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -107,30 +106,23 @@ object Scd2 {
     Bucketing.encodeKeys(keys)
     keys.foreach(k => require(df.columns.contains(k),
       s"key column '$k' missing from the changelog schema"))
-    val fs = TxLog.fs(spark, dir)
-    Seq("manifest", "data", ".staging", "meta")
-      .foreach(sub => fs.delete(new Path(s"$dir/$sub"), true))
-    TxLog.invalidate(dir)
-    val txn = new TableTxn(spark, dir, baseVersion = -1L)
+    val txn = TableTxn.create(spark, dir)
     // one exchange end to end (r16): distribute by bucket up front;
     // the dedup + lead window then group by (bucket, key, ...) with
     // no shuffle of their own, and the staged write rides the same
     // distribution (previously: dedup exchange + window exchange +
     // repartition(bucket) = three full-history shuffles)
-    window(df.withColumn("bucket", bucketOf(keys.map(col), nBuckets))
-        .repartition(col("bucket")),
-      keys, versionCol, deleteCol, byBucket = true)
-      .sortWithinPartitions(col("bucket") +: keys.map(col): _*)
-      .write.partitionBy("bucket").mode("overwrite")
-      .parquet(s"${txn.staging}/data")
-    val staged = txn.stagedBucketIds()
-    txn.installAndCommit(
+    val staged = txn.stage(
+      window(df.withColumn("bucket", bucketOf(keys.map(col), nBuckets))
+          .repartition(col("bucket")),
+        keys, versionCol, deleteCol, byBucket = true),
+      keys)
+    txn.commit(
       staged.map(b => b -> txn.bucketRel(b)).toMap,
       coreProps(keys, versionCol, deleteCol, nBuckets,
         window(df.limit(0), keys, versionCol, deleteCol).schema.json) ++
         Compaction.rowProps(Compaction.stagedStats(
           spark, txn.staging, staged, versionCol)))
-    txn.cleanup()
   }
 
   private def coreProps(keys: Seq[String], versionCol: String,
@@ -363,24 +355,19 @@ object Scd2 {
       if (m.nBuckets == newNBuckets) return
       TxLog.sweep(spark, dir)
       val txn = new TableTxn(spark, dir, m.snap.version)
-      storedData(spark, dir, m).drop("bucket")
-        .withColumn("bucket", bucketOf(m.keyCols, newNBuckets))
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("bucket") +: m.keyCols: _*)
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(s"${txn.staging}/data")
-      val staged = txn.stagedBucketIds()
-      txn.installAndCommit(
+      val staged = txn.stage(
+        storedData(spark, dir, m).drop("bucket")
+          .withColumn("bucket", bucketOf(m.keyCols, newNBuckets))
+          .repartition(col("bucket")),
+        m.keys)
+      txn.commit(
         staged.map(b => b -> txn.bucketRel(b)).toMap,
         coreProps(m.keys, m.versionCol, m.deleteCol, newNBuckets,
           m.schema.json) ++ floorProp(m.snap) ++
           Compaction.fenceProps(m.snap) ++
           Compaction.rowProps(Compaction.stagedStats(
-            spark, txn.staging, staged, m.versionCol)))
-      TxLog.hygiene {
-        txn.cleanup()
-        if (!retainHistory) TxLog.vacuum(spark, dir, txn.newVersion)
-      }
+            spark, txn.staging, staged, m.versionCol)),
+        vacuum = !retainHistory)
     }
   }
 
@@ -527,20 +514,11 @@ object Scd2 {
     // pre-image directories stay live (and readable by this very plan)
     // until a LATER merge's sweep reclaims them — the read-while-
     // rewriting hazard the old in-place dynamic overwrite had is gone
-    out
-      .sortWithinPartitions(col("bucket") +: m.keyCols: _*)
-      .write.partitionBy("bucket").mode("overwrite")
-      .parquet(s"${txn.staging}/data")
-    val staged = txn.stagedBucketIds()
+    val staged = txn.stage(out, keys)
     val newBuckets = (m.buckets -- touched) ++
       staged.map(b => b -> txn.bucketRel(b))
     // widen the manifest schema when the batch introduced columns
-    // (fields forced nullable: pre-evolution files genuinely lack them)
-    val outData = out.drop("bucket").schema
-    val schemaJson = if (outData.fieldNames.toSeq != m.schema.fieldNames.toSeq)
-      org.apache.spark.sql.types.StructType(
-        outData.fields.map(_.copy(nullable = true))).json
-    else m.schema.json
+    val schemaJson = Compaction.widenedSchemaJson(out, m.schema)
     // per-bucket stats (rows + valid_from zone maps, the same footer
     // pass Compaction uses): untouched buckets carry theirs forward so
     // countRows stays exact and history watermark SQL prunes
@@ -548,12 +526,7 @@ object Scd2 {
     // merge folds a touched bucket's deltas into its new base (via
     // prunedHistory -> liveView), so the commit drops them and the
     // sweep reclaims the directories
-    val carried = m.snap.props.collect {
-      case (k, v) if Seq("rows.", "minv.", "maxv.",
-          "delta.", "drows.", "dmaxv.").exists(p =>
-          k.startsWith(p) && !touched.contains(k.drop(p.length).toInt))
-        => k -> v
-    }
+    val carried = Compaction.carriedStats(m.snap.props, touched.toSet)
     val newStats = Compaction.stagedStats(
       spark, txn.staging, staged, versionCol)
     // MergeStats.rows = the staged slice counted from its own footers
@@ -561,11 +534,11 @@ object Scd2 {
     // pruned re-read resolved the manifest and schema a second time
     // for the same number
     val rows = newStats.values.map(_.rows).sum
-    txn.installAndCommit(newBuckets,
+    txn.commit(newBuckets,
       coreProps(keys, versionCol, deleteCol, nBuckets, schemaJson) ++
         floorProp(m.snap) ++ Compaction.fenceProps(m.snap) ++
-        carried ++ Compaction.rowProps(newStats))
-    TxLog.hygiene { txn.cleanup(); TxLog.vacuum(spark, dir, txn.newVersion) }
+        carried ++ Compaction.rowProps(newStats),
+      vacuum = true)
     MergeStats(touched, rows)
   }
 
@@ -598,13 +571,11 @@ object Scd2 {
       }
     }
     val dataCols = changes.columns.filterNot(_ == "bucket").toSeq
-    changes.select(col("bucket") +: dataCols.map(col): _*)
-      .withColumn("_seq", lit(txn.newVersion))
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("bucket") +: m.keyCols: _*)
-      .write.partitionBy("bucket").mode("overwrite")
-      .parquet(s"${txn.staging}/data")
-    val staged = txn.stagedBucketIds()
+    val staged = txn.stage(
+      changes.select(col("bucket") +: dataCols.map(col): _*)
+        .withColumn("_seq", lit(txn.newVersion))
+        .repartition(col("bucket")),
+      m.keys)
     val newStats = Compaction.stagedStats(
       spark, txn.staging, staged, m.versionCol)
     val deltaRows = newStats.values.map(_.rows).sum
@@ -637,18 +608,14 @@ object Scd2 {
         s"drows.$b" -> rows.toString) ++
         mx.map(v => s"dmaxv.$b" -> v)
     }.toMap
-    val stagedSet = staged.toSet
-    val carried = m.snap.props.filter { case (k, _) =>
-      Seq("rows.", "minv.", "maxv.").exists(k.startsWith) ||
-        Seq("delta.", "drows.", "dmaxv.").exists(p =>
-          k.startsWith(p) && !stagedSet.contains(k.drop(p.length).toInt))
-    }
+    val carried = Compaction.carriedStats(m.snap.props, staged.toSet,
+      Compaction.DeltaPrefixes)
     // the base bucket map is UNCHANGED — that is the whole point
-    txn.installAndCommit(m.buckets,
+    txn.commit(m.buckets,
       coreProps(m.keys, m.versionCol, m.deleteCol, m.nBuckets,
         schemaJson) ++ floorProp(m.snap) ++
-        Compaction.fenceProps(m.snap) ++ carried ++ deltaProps)
-    TxLog.hygiene { txn.cleanup(); TxLog.vacuum(spark, dir, txn.newVersion) }
+        Compaction.fenceProps(m.snap) ++ carried ++ deltaProps,
+      vacuum = true)
     MergeStats(touched, deltaRows)
   }
 
@@ -715,38 +682,26 @@ object Scd2 {
       if (affected.isEmpty) {
         // nothing to drop — still commit the floor so asOf below it
         // refuses from now on
-        txn.installAndCommit(m.buckets,
+        txn.commit(m.buckets,
           m.snap.props -- Seq("txn_id", "base_txn") +
             ("expired_before" -> floorStr))
-        TxLog.hygiene(txn.cleanup())
         return 0L
       }
       val folded = liveView(spark, dir, m, affected)
       val before = folded.count()
-      folded.filter(!doomed)
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("bucket") +: m.keyCols: _*)
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(s"${txn.staging}/data")
       // an entirely-expired bucket stages nothing and leaves the map
-      val staged = txn.stagedBucketIds()
-      val carried = m.snap.props.filter { case (k, _) =>
-        Seq("rows.", "minv.", "maxv.", "delta.", "drows.", "dmaxv.")
-          .exists(p =>
-            k.startsWith(p) && !affected.contains(k.drop(p.length).toInt))
-      }
+      val staged = txn.stage(
+        folded.filter(!doomed).repartition(col("bucket")), m.keys)
+      val carried = Compaction.carriedStats(m.snap.props, affected)
       val newStats = Compaction.stagedStats(
         spark, txn.staging, staged, m.versionCol)
-      txn.installAndCommit(
+      txn.commit(
         (m.buckets -- affected) ++ staged.map(b => b -> txn.bucketRel(b)),
         coreProps(m.keys, m.versionCol, m.deleteCol, m.nBuckets,
           m.schema.json) ++ Compaction.fenceProps(m.snap) ++
           carried ++ Compaction.rowProps(newStats) +
-          ("expired_before" -> floorStr))
-      TxLog.hygiene {
-        txn.cleanup()
-        if (!retainHistory) TxLog.vacuum(spark, dir, txn.newVersion)
-      }
+          ("expired_before" -> floorStr),
+        vacuum = !retainHistory)
       before - newStats.values.map(_.rows).sum
     }
 
@@ -778,27 +733,17 @@ object Scd2 {
       val txn = new TableTxn(spark, dir, m.snap.version)
       // bucketed fold: the fold itself establishes the bucket
       // distribution the staged write needs — no second exchange (r16)
-      foldBuckets(spark, dir, m, dirty, bucketed = true)
-        .sortWithinPartitions(col("bucket") +: m.keyCols: _*)
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(s"${txn.staging}/data")
-      val staged = txn.stagedBucketIds()
-      val carried = m.snap.props.filter { case (k, _) =>
-        Seq("rows.", "minv.", "maxv.", "delta.", "drows.", "dmaxv.")
-          .exists(p =>
-            k.startsWith(p) && !dirty.contains(k.drop(p.length).toInt))
-      }
-      txn.installAndCommit(
+      val staged = txn.stage(
+        foldBuckets(spark, dir, m, dirty, bucketed = true), m.keys)
+      txn.commit(
         (m.buckets -- dirty) ++ staged.map(b => b -> txn.bucketRel(b)).toMap,
         coreProps(m.keys, m.versionCol, m.deleteCol, m.nBuckets,
           m.schema.json) ++ floorProp(m.snap) ++
-          Compaction.fenceProps(m.snap) ++ carried ++
+          Compaction.fenceProps(m.snap) ++
+          Compaction.carriedStats(m.snap.props, dirty) ++
           Compaction.rowProps(Compaction.stagedStats(
-            spark, txn.staging, staged, m.versionCol)))
-      TxLog.hygiene {
-        txn.cleanup()
-        if (!retainHistory) TxLog.vacuum(spark, dir, txn.newVersion)
-      }
+            spark, txn.staging, staged, m.versionCol)),
+        vacuum = !retainHistory)
     }
   }
 

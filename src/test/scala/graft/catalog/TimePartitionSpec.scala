@@ -146,19 +146,46 @@ class TimePartitionSpec extends SparkSpec {
   }
 
   test("a NULL partition-source value fails the write loudly") {
+    def causes(t: Throwable): Seq[String] =
+      if (t == null) Nil else t.getMessage +: causes(t.getCause)
+    // a failed staged write reclaims its own staging dir at once
+    // instead of leaving it for the orphan-grace sweep
+    def assertNoStaging(dir: String): Unit = {
+      val left = Option(new java.io.File(dir).list()).toSeq.flatten
+        .filter(_.startsWith(".staging"))
+      assert(left.isEmpty, s"failed write left ${left.mkString(", ")}")
+    }
+    val nullTs = null.asInstanceOf[java.sql.Timestamp]
     val dir = tmpDir("tpart-null")
     val e = intercept[Exception] {
       Compaction.init(
-        Seq((1L, "a", null.asInstanceOf[java.sql.Timestamp], 0L, false))
+        Seq((1L, "a", nullTs, 0L, false))
           .toDF("id", "payload", "ts", "version", "deleted"),
         dir, Seq("id"), "version", "deleted", nBuckets = 2,
         clusterBy = Nil, feed = false,
         timePartition = Some("days" -> "ts"))
     }
-    def causes(t: Throwable): Seq[String] =
-      if (t == null) Nil else t.getMessage +: causes(t.getCause)
     assert(causes(e).exists(m => m != null && m.contains("must not be null")),
       causes(e).mkString(" | "))
+    assertNoStaging(dir)
+
+    // the same refusal on a merge into a live table, which keeps its
+    // committed state
+    val live = tmpDir("tpart-null-merge")
+    Compaction.init(seed(4), live, Seq("id"), "version", "deleted",
+      nBuckets = 2, clusterBy = Nil, feed = false,
+      timePartition = Some("days" -> "ts"))
+    val v0 = Compaction.version(spark, live)
+    val em = intercept[Exception] {
+      Compaction.merge(spark, live,
+        Seq((2L, "b", nullTs, 1L, false))
+          .toDF("id", "payload", "ts", "version", "deleted"))
+    }
+    assert(causes(em).exists(m => m != null && m.contains("must not be null")),
+      causes(em).mkString(" | "))
+    assertNoStaging(live)
+    assert(Compaction.version(spark, live) == v0)
+    assert(Compaction.countRows(spark, live) == 4L)
   }
 
   test("years transform and the RETIRE PARTITIONS SQL verb") {

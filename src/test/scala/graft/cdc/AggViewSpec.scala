@@ -88,9 +88,8 @@ class AggViewSpec extends SparkSpec {
     // strip the format marker — the state a pre-r12 build committed
     val s = TxLog.latest(spark, dir).get
     val txn = new TableTxn(spark, dir, s.version)
-    txn.installAndCommit(s.buckets,
+    txn.commit(s.buckets,
       s.props -- Seq("agg_format", "txn_id", "base_txn"))
-    txn.cleanup()
     TxLog.invalidate(dir)
     val e = intercept[IllegalStateException] {
       AggView.read(spark, dir)

@@ -2,8 +2,6 @@ package graft.cdc
 
 import java.sql.Timestamp
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.SparkSpec
 
 /** Job-count guard for the export shell: every export is ONE Spark
@@ -18,30 +16,6 @@ class CdcJobCountSpec extends SparkSpec {
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
   private val MaxJobsPerExport = 3
-
-  /** Run `body` and count the Spark jobs it starts, by a job tag unique
-    * to this call so that jobs from other threads are not counted.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val tag = "cdc-jobcount-" + java.util.UUID.randomUUID()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit =
-        if (Option(s.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-            .exists(_.split(",").contains(tag))) jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.addJobTag(tag)
-    try {
-      val out = body
-      Thread.sleep(500) // listener events are async; let the bus drain
-      (out, jobs.get())
-    } finally {
-      sc.removeJobTag(tag)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def outEntries(dir: String): Seq[String] =
     Option(new java.io.File(dir).list()).toSeq.flatten

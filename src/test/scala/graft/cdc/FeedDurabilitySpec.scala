@@ -38,7 +38,7 @@ class FeedDurabilitySpec extends SparkSpec {
 
   /** Simulate the crash window: un-publish the LATEST feed batch back
     * into the staging dir of the txn that committed it (the state a
-    * kill between installAndCommit and publishFeed leaves behind —
+    * kill between the manifest commit and publishFeed leaves behind —
     * the intent marker travelled with the publish, so the rename-back
     * restores the exact staged layout). Returns the batch id.
     */

@@ -97,8 +97,10 @@ class TxLogFenceSpec extends SparkSpec {
     val old = System.currentTimeMillis() - 48L * 3600L * 1000L
     fs.setTimes(new Path(s"${txn.staging}/data"), old, -1)
 
-    val staged = txn.stagedBucketIds()
-    val snap = txn.installAndCommit(
+    val staged = fs.listStatus(new Path(s"${txn.staging}/data")).toSeq
+      .map(_.getPath.getName).filter(_.startsWith("bucket="))
+      .map(_.drop(7).toInt)
+    val snap = txn.commit(
       newBuckets = m.buckets ++ staged.map(b => b -> txn.bucketRel(b)).toMap,
       props = m.props.filterNot(_._1.startsWith("bucket.")))
     // a sweep right in the post-install window must NOT reclaim the
@@ -110,7 +112,6 @@ class TxLogFenceSpec extends SparkSpec {
         s"sweep reclaimed a live just-installed bucket $b")
     }
     assert(snap.version == m.version + 1)
-    txn.cleanup()
   }
 
   test("PostCommitPublishFailure escapes withOcc without a retry") {
