@@ -113,7 +113,8 @@ object AggView {
     txn.commit(
       staged.map(b => b -> txn.bucketRel(b)).toMap,
       coreProps(keys, valueCol, nBuckets, batchId,
-        state.drop("bucket").schema.json, minMax))
+        state.drop("bucket").schema.json, minMax),
+      op = "init")
   }
 
   private def snap(spark: SparkSession, dir: String): TxLog.Snapshot = {
@@ -252,7 +253,7 @@ object AggView {
       val (keys, valueCol) = (keysOf(s), s.props("value_col"))
       if (s.props("n_buckets").toInt == newNBuckets) return
       TxLog.sweep(spark, dir)
-      val txn = new TableTxn(spark, dir, s.version)
+      val txn = new TableTxn(spark, dir, s)
       val staged = txn.stage(
         storedData(spark, dir, s)
           .withColumn("bucket", bucketOf(keys.map(col), newNBuckets))
@@ -262,8 +263,8 @@ object AggView {
         staged.map(b => b -> txn.bucketRel(b)).toMap,
         coreProps(keys, valueCol, newNBuckets,
           s.props("last_batch_id").toLong, s.props("schema_json"),
-          hasMinMax(s)) ++ Compaction.fenceProps(s),
-        vacuum = !retainHistory)
+          hasMinMax(s)),
+        op = "rebucket", vacuum = !retainHistory)
     }
   }
 
@@ -324,9 +325,8 @@ object AggView {
       val reason = s"feed batch $batchId carries non-insert " +
         "(retraction) events; append-only min/max partials cannot " +
         "absorb a retraction"
-      try TxLog.commit(spark, dir, s.version + 1L,
-        s.props -- Seq("txn_id", "base_txn") +
-          ("invalid" -> reason) + ("op" -> "invalidate"))
+      try new TableTxn(spark, dir, s).commit(s.buckets,
+        TableTxn.tableProps(s) + ("invalid" -> reason), op = "invalidate")
       catch { case _: TxLog.CommitConflict => () } // racer advanced us
       throw new IllegalStateException(
         s"aggview at $dir invalidated: $reason — DROP and re-CREATE " +
@@ -387,7 +387,7 @@ object AggView {
       val (keys, valueCol, nBuckets) =
         (keysOf(s), s.props("value_col"), s.props("n_buckets").toInt)
       TxLog.sweep(spark, dir)
-      val txn = new TableTxn(spark, dir, s.version)
+      val txn = new TableTxn(spark, dir, s)
       val rels = dirty.toSeq.flatMap(b => s.buckets.get(b)) ++
         dirty.toSeq.flatMap(b => s.deltas.getOrElse(b, Nil))
       val staged = txn.stage(
@@ -400,9 +400,8 @@ object AggView {
         (s.buckets -- dirty) ++ staged.map(b => b -> txn.bucketRel(b)).toMap,
         coreProps(keys, valueCol, nBuckets,
           s.props("last_batch_id").toLong, s.props("schema_json"),
-          hasMinMax(s)) ++ Compaction.fenceProps(s) ++
-          carriedChains(s, dirty),
-        vacuum = !retainHistory)
+          hasMinMax(s)) ++ carriedChains(s, dirty),
+        op = "compact", vacuum = !retainHistory)
     }
   }
 
@@ -471,7 +470,7 @@ object AggView {
       return MergeStats(applied = false, Nil)
     val (keys, valueCol, nBuckets) =
       (keysOf(s), s.props("value_col"), s.props("n_buckets").toInt)
-    val txn = new TableTxn(spark, dir, s.version)
+    val txn = new TableTxn(spark, dir, s)
     var newBuckets = s.buckets
     val touchedSet = touched.toSet
     var extraProps: Map[String, String] = carriedChains(s,
@@ -522,8 +521,9 @@ object AggView {
     // commits a manifest: the fence must advance exactly-once too)
     txn.commit(newBuckets,
       coreProps(keys, valueCol, nBuckets, batchId,
-        s.props("schema_json"), hasMinMax(s)) ++
-        Compaction.fenceProps(s) ++ extraProps,
+        s.props("schema_json"), hasMinMax(s)) ++ extraProps,
+      op = if (canRetract) "applyFeed"
+        else if (mergeOnRead) "merge-mor" else "merge",
       vacuum = true)
     MergeStats(applied = true, touched)
   }

@@ -489,22 +489,10 @@ object Compaction {
       feed: Boolean, timePartition: Option[(String, String)],
       ndvP: Option[Int]): Unit = {
     val spark = df.sparkSession
-    require(nBuckets > 0, "nBuckets must be positive")
-    ndvP.foreach(v => require(v >= 4 && v <= 12,
-      s"ndv_p must be in [4, 12], got $v"))
-    requireNoReserved(df.columns.toSeq, "table schema")
-    Bucketing.encodeKeys(keys)
-    keys.foreach(k => require(df.columns.contains(k),
-      s"key column '$k' missing from the snapshot schema"))
-    timePartition.foreach { case (u, c) =>
-      tpValueOf(u, new java.sql.Timestamp(0L)) // validates the unit
-      require(df.columns.exists(_.equalsIgnoreCase(c)),
-        s"time-partition column '$c' missing from the snapshot schema")
-    }
-    require(clusterBy.size <= 2,
-      "clusterBy supports one (sort) or two (Z-order) columns")
-    clusterBy.foreach(c => require(df.columns.contains(c),
-      s"cluster column '$c' missing from the snapshot schema"))
+    // validate BEFORE the create wipes the old table: a snapshot that
+    // cannot become this table must leave the existing one intact
+    validateCreate(df.schema, keys, versionCol, deleteCol, nBuckets,
+      clusterBy, timePartition, ndvP)
     val txn = TableTxn.create(spark, dir)
     val staged = txn.stage(
       df.filter(!isDeleted(deleteCol))
@@ -517,15 +505,11 @@ object Compaction {
       keys, clusterBy, timePartition)
     txn.commit(
       newBuckets = staged.map(b => b -> txn.bucketRel(b)).toMap,
-      props = coreProps(keys, versionCol, deleteCol, nBuckets,
-        df.schema.json, clusterBy) ++
-        (if (feed) Map("feed" -> "true") else Map.empty) ++
-        timePartition.map { case (u, c) =>
-          Map("tp_unit" -> u, "tp_col" -> c) }.getOrElse(Map.empty) ++
-        ndvP.map(v => Map("ndv_p" -> v.toString)).getOrElse(Map.empty) ++
+      props = createProps(keys, versionCol, deleteCol, nBuckets,
+        df.schema.json, clusterBy, feed, timePartition, ndvP) ++
         rowProps(stagedStats(spark, txn.staging, staged, versionCol,
-          clusterBy, ndvP.getOrElse(HllP))) +
-        ("op" -> "init"))
+          clusterBy, ndvP.getOrElse(HllP))),
+      op = "init")
   }
 
   /** Create an EMPTY maintained table: commit a v0 manifest carrying
@@ -542,32 +526,54 @@ object Compaction {
       feed: Boolean = false,
       timePartition: Option[(String, String)] = None,
       ndvP: Option[Int] = None): Unit = {
+    validateCreate(schema, keys, versionCol, deleteCol, nBuckets,
+      clusterBy, timePartition, ndvP)
+    TableTxn.create(spark, dir).commit(newBuckets = Map.empty,
+      props = createProps(keys, versionCol, deleteCol, nBuckets,
+        schema.json, clusterBy, feed, timePartition, ndvP),
+      op = "create")
+  }
+
+  /** The table parameters a create ([[init]], [[initEmpty]]) accepts:
+    * every named column (keys, version, tombstone, cluster,
+    * time-partition source) exists in `schema`, no column is reserved,
+    * and the bucket count, sketch precision, clustering arity and
+    * time-partition unit are valid.
+    */
+  private def validateCreate(schema: org.apache.spark.sql.types.StructType,
+      keys: Seq[String], versionCol: String, deleteCol: String,
+      nBuckets: Int, clusterBy: Seq[String],
+      timePartition: Option[(String, String)], ndvP: Option[Int]): Unit = {
+    val cols = schema.fieldNames.toSeq
     require(nBuckets > 0, "nBuckets must be positive")
     ndvP.foreach(v => require(v >= 4 && v <= 12,
       s"ndv_p must be in [4, 12], got $v"))
-    requireNoReserved(schema.fieldNames.toSeq, "table schema")
-    timePartition.foreach { case (u, c) =>
-      tpValueOf(u, new java.sql.Timestamp(0L)) // validates the unit
-      require(schema.fieldNames.exists(_.equalsIgnoreCase(c)),
-        s"time-partition column '$c' missing from the table schema")
-    }
+    requireNoReserved(cols, "table schema")
     Bucketing.encodeKeys(keys)
     (keys :+ versionCol :+ deleteCol).foreach(c =>
-      require(schema.fieldNames.contains(c),
-        s"column '$c' missing from the table schema"))
+      require(cols.contains(c), s"column '$c' missing from the table schema"))
+    timePartition.foreach { case (u, c) =>
+      tpValueOf(u, new java.sql.Timestamp(0L)) // validates the unit
+      require(cols.exists(_.equalsIgnoreCase(c)),
+        s"time-partition column '$c' missing from the table schema")
+    }
     require(clusterBy.size <= 2,
       "clusterBy supports one (sort) or two (Z-order) columns")
-    clusterBy.foreach(c => require(schema.fieldNames.contains(c),
+    clusterBy.foreach(c => require(cols.contains(c),
       s"cluster column '$c' missing from the table schema"))
-    TableTxn.create(spark, dir).commit(newBuckets = Map.empty,
-      props = coreProps(keys, versionCol, deleteCol, nBuckets,
-        schema.json, clusterBy) ++
-        (if (feed) Map("feed" -> "true") else Map.empty) ++
-        timePartition.map { case (u, c) =>
-          Map("tp_unit" -> u, "tp_col" -> c) }.getOrElse(Map.empty) ++
-        ndvP.map(v => Map("ndv_p" -> v.toString)).getOrElse(Map.empty) +
-        ("op" -> "create"))
   }
+
+  /** The version-0 table props of a create. */
+  private def createProps(keys: Seq[String], versionCol: String,
+      deleteCol: String, nBuckets: Int, schemaJson: String,
+      clusterBy: Seq[String], feed: Boolean,
+      timePartition: Option[(String, String)],
+      ndvP: Option[Int]): Map[String, String] =
+    coreProps(keys, versionCol, deleteCol, nBuckets, schemaJson, clusterBy) ++
+      (if (feed) Map("feed" -> "true") else Map.empty) ++
+      timePartition.map { case (u, c) =>
+        Map("tp_unit" -> u, "tp_col" -> c) }.getOrElse(Map.empty) ++
+      ndvP.map(v => Map("ndv_p" -> v.toString)).getOrElse(Map.empty)
 
   /** Per-bucket stats of the staged generation — row count and the
     * version column's max (the ZONE MAP incremental scans prune on) —
@@ -1083,6 +1089,27 @@ object Compaction {
       StatPrefixes.exists(p => k.startsWith(p) &&
         !(restated.contains(p) && statBucket(k, p).exists(replaced)))
     }
+
+  /** The delta-chain props of a merge-on-read append: each `staged`
+    * bucket appends its staged dir (`rel`) to its `delta.<b>` chain,
+    * adds its footer row count to `drows.<b>`, and folds its max version
+    * into the `dmaxv.<b>` zone map by [[typedMax]] under the version
+    * type `vType` (an uncombinable pair drops the stat — the bucket is
+    * then conservatively read).
+    */
+  private[cdc] def deltaAppendProps(snap: TxLog.Snapshot, staged: Seq[Int],
+      stats: Map[Int, BucketStats], rel: Int => String,
+      vType: org.apache.spark.sql.types.DataType): Map[String, String] =
+    staged.flatMap { b =>
+      val st = stats(b)
+      val mx = (snap.prop(s"dmaxv.$b"), Option(st.maxVersion)) match {
+        case (Some(old), Some(nw)) => typedMax(old, nw, vType)
+        case (old, nw) => nw.orElse(old)
+      }
+      Seq(s"delta.$b" -> (snap.deltas.getOrElse(b, Nil) :+ rel(b)).mkString(","),
+        s"drows.$b" -> (snap.counter(s"drows.$b") + st.rows).toString) ++
+        mx.map(v => s"dmaxv.$b" -> v)
+    }.toMap
 
   /** The manifest schema after a rewrite that stored `out`: widened
     * when the write introduced columns (fields forced nullable —
@@ -1664,13 +1691,12 @@ object Compaction {
       _ < cut)
       .zip(bucketSeq)
       .flatMap { case ((_, ds), (b, _)) => ds.map(b -> _.getPath) }
+    val txn = new TableTxn(spark, dir, m.snap)
     if (doomed.isEmpty) {
       // still record the floor: the caller's retention promise holds
       // even when nothing is present below it yet
-      TxLog.commit(spark, dir, m.snap.version + 1,
-        m.snap.props -- Seq("txn_id", "base_txn", "feed_batch",
-          "feed_txn") + ("tp_min" -> cut.toString) +
-          ("op" -> "retire-partitions"))
+      txn.commit(m.buckets, TableTxn.tableProps(m.snap) +
+        ("tp_min" -> cut.toString), op = "retire-partitions")
       return 0
     }
     // retired row counts per bucket, from the doomed files' footers
@@ -1693,7 +1719,7 @@ object Compaction {
       }.sum).toMap
     }
     val touched = doomed.map(_._1).toSet
-    val props = m.snap.props
+    val props = TableTxn.tableProps(m.snap)
       .map {
         case (k, v) if k.startsWith("rows.") &&
             touched.contains(k.drop(5).toInt) =>
@@ -1706,10 +1732,9 @@ object Compaction {
             "cmin.", "cmax.", "cndv.", "cnul.")
           .exists(p =>
           k.startsWith(p) &&
-            statBucket(k, p).exists(touched.contains)) ||
-          Seq("txn_id", "base_txn", "feed_batch", "feed_txn").contains(k)
-      } + ("tp_min" -> cut.toString) + ("op" -> "retire-partitions")
-    TxLog.commit(spark, dir, m.snap.version + 1, props)
+            statBucket(k, p).exists(touched.contains))
+      } + ("tp_min" -> cut.toString)
+    txn.commit(m.buckets, props, op = "retire-partitions")
     // physical deletion AFTER the fence committed
     TxLog.hygiene(doomed.foreach { case (_, p) => fs.delete(p, true) })
     doomed.size
@@ -1750,7 +1775,7 @@ object Compaction {
           s"row-level operation planned at v$expectedBase but table " +
             s"is at v${m.snap.version}; re-run against the new snapshot")
       TxLog.sweep(spark, dir)
-      val txn = new TableTxn(spark, dir, m.snap.version)
+      val txn = new TableTxn(spark, dir, m.snap)
       val vType = m.schema(m.versionCol).dataType
       // ONE staged write serves both roles: rows hashing INTO the read
       // groups rewrite those buckets' bases; rows hashing OUTSIDE (a
@@ -1786,21 +1811,8 @@ object Compaction {
       // escapee buckets keep base + prior deltas and APPEND one delta
       // dir each, folding its footer stats into the delta zone map —
       // the same bookkeeping a merge-on-read merge commits
-      val escapeProps = escaped.toSeq.flatMap { b =>
-        val rels = m.deltas.getOrElse(b, Nil) :+ txn.bucketRel(b)
-        val st = newStats(b)
-        val rows = m.snap.counter(s"drows.$b") + st.rows
-        val mx = m.snap.prop(s"dmaxv.$b") match {
-          case None => Option(st.maxVersion)
-          case Some(old) => Option(st.maxVersion) match {
-            case None => Some(old)
-            case Some(nw) => typedMax(old, nw, vType)
-          }
-        }
-        Seq(s"delta.$b" -> rels.mkString(","),
-          s"drows.$b" -> rows.toString) ++
-          mx.map(v => s"dmaxv.$b" -> v)
-      }.toMap
+      val escapeProps = deltaAppendProps(m.snap, escaped.toSeq, newStats,
+        txn.bucketRel, vType)
       // change-feed from the v2 row-level path: Spark hands over
       // post-images only, so per-row effect classification diffs the
       // replaced buckets' committed pre-state against the STAGED
@@ -1810,34 +1822,26 @@ object Compaction {
       // rename protocol a merge's feed batch uses — a third-party
       // engine planning DML through the standard connector now feeds
       // the stream exactly like the GraftDml route.
-      val feedBatch: Option[Long] =
-        if (!feedEnabled(m.snap)) None
-        else {
-          val pre = liveView(spark, dir, m, bucketIds).drop("bucket")
-          val post =
-            if (staged.isEmpty)
-              spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                m.schema)
-            else spark.read.schema(m.schema).parquet(
-              staged.map(b => s"${txn.staging}/data/bucket=$b"): _*)
-          stageReplaceFeed(spark, txn.staging, pre, post, m)
-          Some(nextBatch(spark, dir, m))
-        }
-      feedBatch.foreach(n =>
-        stampFeedIntent(TxLog.fs(spark, dir), txn.staging, n))
+      val emitFeed = feedEnabled(m.snap)
+      if (emitFeed) {
+        val pre = liveView(spark, dir, m, bucketIds).drop("bucket")
+        val post =
+          if (staged.isEmpty)
+            spark.createDataFrame(
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+              m.schema)
+          else spark.read.schema(m.schema).parquet(
+            staged.map(b => s"${txn.staging}/data/bucket=$b"): _*)
+        stageReplaceFeed(spark, txn.staging, pre, post, m)
+      }
       val props = coreProps(m.keys, m.versionCol, m.deleteCol,
         m.nBuckets, m.schema.json, m.clusterBy) ++
         evolutionProps(m.snap) ++ carried ++
         rowProps(newStats.view.filterKeys(stagedIn.contains).toMap) ++
-        escapeProps ++
-        feedCommitProps(feedBatch, txn, m.snap) +
-        ("op" -> "replace")
+        escapeProps
       // catalog tables keep history: VERSION AS OF serves every commit
       // until an explicit vacuum, exactly like the DML lowering
-      txn.commit(newBuckets, props, publish = feedBatch.foreach(n =>
-        publishFeed(TxLog.fs(spark, dir), txn.staging, dir, n,
-          txn.newVersion, m.schema.json, m.tp.map(_._1))))
+      txn.commit(newBuckets, props, op = "replace", feed = emitFeed)
     }
   }
 
@@ -1929,37 +1933,20 @@ object Compaction {
     }
   }
 
-  /** Durable table flags every commit carries forward: the versioned
+  /** Durable table flags every rewrite carries forward: the versioned
     * rename events (retained old generation directories still resolve
     * their physical column names through them), the dropped-name
-    * fence, and the change-feed opt-in.
+    * fence, the change-feed opt-in and the time-partition spec. (The
+    * feed counter, epoch and lineage floor ride [[TableTxn.commit]].)
     */
   private def evolutionProps(snap: TxLog.Snapshot): Map[String, String] =
     snap.props.filter { case (k, _) =>
       k.startsWith("rename.") || k == "dead_cols" || k == "feed" ||
         k == "schema_altered" || k == "tp_unit" || k == "tp_col" ||
         k == "tp_min" || k == "tp_evolved" ||
-        // the restore-bumped feed epoch survives every later rewrite:
-        // dropping it would silently re-arm epoch-fenced consumers
-        k == "feed_epoch" ||
-        // the replace-lineage floor is a durable restore fence
-        k == "lineage_floor" ||
         // the declared sketch precision is a durable table parameter
         k == "ndv_p"
     }
-
-  /** Durable fence props EVERY family's commit funnel must carry
-    * forward (r14): the restore-bumped feed epoch and the
-    * replace-lineage floor. Compaction merges carry them through
-    * [[evolutionProps]]; the Scd2/AggView funnels — which rebuild
-    * their props from their own coreProps each commit — call this
-    * directly, so a post-RESTORE epoch on a history or dashboard
-    * table survives every later merge/compact/expire and a
-    * version-ordered consumer's fence check has something to read.
-    */
-  private[cdc] def fenceProps(snap: TxLog.Snapshot): Map[String, String] =
-    snap.prop("feed_epoch").map("feed_epoch" -> _).toMap ++
-      snap.prop("lineage_floor").map("lineage_floor" -> _).toMap
 
   /** Whether the table opted into the change data feed
     * (`TBLPROPERTIES ('feed'='true')` / `init(..., feed = true)`).
@@ -1984,12 +1971,9 @@ object Compaction {
     TxLog.withOcc(spark, dir) {
       val m = loadMeta(spark, dir)
       if (feedEnabled(m.snap) == enabled) return
-      val props = m.snap.props -- Seq("txn_id", "base_txn") ++
-        (if (enabled) Map("feed" -> "true") else Map.empty) +
-        ("op" -> "alter")
-      TxLog.commit(spark, dir,
-        m.snap.version + 1,
-        if (enabled) props else props - "feed")
+      val props = TableTxn.tableProps(m.snap) - "feed" ++
+        (if (enabled) Map("feed" -> "true") else Map.empty)
+      new TableTxn(spark, dir, m.snap).commit(m.buckets, props, op = "alter")
       ()
     }
 
@@ -2123,16 +2107,14 @@ object Compaction {
       val deadProp =
         if (dead.isEmpty) Map.empty[String, String]
         else Map("dead_cols" -> dead.toSeq.sorted.mkString(","))
-      val props = m.snap.props --
-        Seq("txn_id", "base_txn", "feed_batch", "feed_txn") ++
+      val props = TableTxn.tableProps(m.snap) ++
         renameProp ++ deadProp +
         ("schema_json" -> org.apache.spark.sql.types
           .StructType(fields).json) +
         // durable marker: feed readers take the per-batch
         // schema-resolution path only once an ALTER ever happened
-        ("schema_altered" -> "true") +
-        ("op" -> "alter")
-      TxLog.commit(spark, dir, m.snap.version + 1, props)
+        ("schema_altered" -> "true")
+      new TableTxn(spark, dir, m.snap).commit(m.buckets, props, op = "alter")
       ()
     }
   }
@@ -2161,7 +2143,7 @@ object Compaction {
       val m = loadMeta(spark, dir)
       if (m.nBuckets == newNBuckets) return
       TxLog.sweep(spark, dir)
-      val txn = new TableTxn(spark, dir, m.snap.version)
+      val txn = new TableTxn(spark, dir, m.snap)
       val staged = txn.stage(
         storedData(spark, dir, m).drop("bucket")
           .withColumn("bucket", bucketOf(m.keyCols, newNBuckets))
@@ -2171,11 +2153,9 @@ object Compaction {
         newNBuckets, m.schema.json, m.clusterBy) ++
         evolutionProps(m.snap) ++
         rowProps(stagedStats(spark, txn.staging, staged, m.versionCol,
-          m.clusterBy, ndvPOf(m.snap))) ++
-        m.snap.prop("next_feed_batch").map("next_feed_batch" -> _) +
-        ("op" -> "rebucket")
+          m.clusterBy, ndvPOf(m.snap)))
       txn.commit(staged.map(b => b -> txn.bucketRel(b)).toMap, props,
-        vacuum = !retainHistory)
+        op = "rebucket", vacuum = !retainHistory)
     }
   }
 
@@ -2212,7 +2192,7 @@ object Compaction {
       }
       if (m.tp == timePartition) return
       TxLog.sweep(spark, dir)
-      val txn = new TableTxn(spark, dir, m.snap.version)
+      val txn = new TableTxn(spark, dir, m.snap)
       // the fold inside storedData reconciles merge-on-read chains, so
       // the rewrite doubles as a full compaction (dirty buckets clean)
       val staged = txn.stage(
@@ -2226,34 +2206,14 @@ object Compaction {
         timePartition.map { case (u, c) =>
           Map("tp_unit" -> u, "tp_col" -> c) }.getOrElse(Map.empty) ++
         rowProps(stagedStats(spark, txn.staging, staged, m.versionCol,
-          m.clusterBy, ndvPOf(m.snap))) ++
-        m.snap.prop("next_feed_batch").map("next_feed_batch" -> _) +
+          m.clusterBy, ndvPOf(m.snap))) +
         // durable marker: the feed may now hold batches of BOTH
         // layouts (flat and `_tp=`-nested) — readFeed must take the
         // layout-aware listing route forever after
-        ("tp_evolved" -> "true") +
-        ("op" -> "repartition")
+        ("tp_evolved" -> "true")
       txn.commit(staged.map(b => b -> txn.bucketRel(b)).toMap, props,
-        vacuum = !retainHistory)
+        op = "repartition", vacuum = !retainHistory)
     }
-  }
-
-  /** Next change-feed batch id: one past the highest committed batch.
-    * A driver-side listing of ≤ |merges| directory names — metadata,
-    * never data.
-    */
-  private def nextBatch(spark: SparkSession, dir: String, m: Meta): Long = {
-    val p = new Path(s"$dir/feed")
-    val fs = TxLog.fs(spark, dir)
-    val fromDirs = if (!fs.exists(p)) 0L
-    else fs.listStatus(p).toSeq
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("batch=") => s.drop(6).toLong }
-      .foldLeft(-1L)(math.max) + 1L
-    // max with the manifest counter: a vacuum that deleted EVERY feed
-    // dir must not restart numbering at 0 — a consumer resuming from
-    // "batch >= K" would silently skip all post-vacuum batches
-    math.max(fromDirs, m.snap.counter("next_feed_batch"))
   }
 
   /** Versions time travel can reconstruct (ascending): every committed
@@ -2438,24 +2398,11 @@ object Compaction {
                 "resurrect data the floor promised was gone")
       }
       TxLog.sweep(spark, dir)
-      val fs = TxLog.fs(spark, dir)
-      val txn = new TableTxn(spark, dir, cur.version)
-      // a table that ever emitted (or currently opts into) the feed
-      // reserves one empty batch — see the scaladoc's feed semantics
-      val emitsFeed = feedEnabled(cur) ||
-        cur.counter("next_feed_batch") > 0L
-      val feedBatch =
-        if (emitsFeed) Some(nextBatch(spark, dir, metaOf(cur)))
-        else None
-      feedBatch.foreach(n => stampFeedIntent(fs, txn.staging, n))
-      val props = (target.props -- Seq("txn_id", "base_txn", "op",
-          "feed_batch", "feed_txn", "feed", "feed_epoch",
-          "restored_from", "next_feed_batch", "lineage_floor",
-          "replaced_from") --
-          target.buckets.keys.map(b => s"bucket.$b")) ++
-        // the replace-lineage floor only ever advances: keep the
-        // CURRENT one (the target's, when set, is older or equal)
-        cur.prop("lineage_floor").map("lineage_floor" -> _).toMap ++
+      val txn = new TableTxn(spark, dir, cur)
+      // the target's state, under the CURRENT feed counter and
+      // replace-lineage floor (both only ever advance; the commit
+      // carries them from its base)
+      val props = (TableTxn.tableProps(target) - "feed") ++
         // the feed OPT-IN is operational config, not state: keep the
         // current setting rather than silently re-toggling it to what
         // it was at version n
@@ -2469,23 +2416,20 @@ object Compaction {
           Map("tp_evolved" -> "true") else Map.empty) ++
         (if (cur.prop("schema_altered").isDefined)
           Map("schema_altered" ->
-            cur.props("schema_altered")) else Map.empty) ++
-        feedCommitProps(feedBatch, txn, cur) +
+            cur.props("schema_altered")) else Map.empty) +
         // EVERY restore bumps the epoch (r14): a restore is a backward
         // state move whatever the table family — Scd2 histories and
         // AggView dashboards have no feed batches, but a replica chain
         // built on them needs the same "the lineage you initialized
         // under ended" fence a merge-table consumer reads. The empty
-        // reserved batch above stays feed-table-only.
+        // reserved batch stays feed-table-only.
         ("feed_epoch" -> (cur.counter("feed_epoch") + 1L).toString) +
-        ("op" -> "restore") + ("restored_from" -> version.toString)
-      // the empty batch publishes only after the state it fences is
-      // committed; a failure there surfaces as the non-retryable
-      // PostCommitPublishFailure, exactly like a merge's
-      txn.commit(target.buckets, props, publish = feedBatch.foreach(n =>
-        publishFeed(fs, txn.staging, dir, n, txn.newVersion,
-          target.props.getOrElse("schema_json", "{}"),
-          target.prop("tp_unit"))))
+        ("restored_from" -> version.toString)
+      // a table that ever emitted (or currently opts into) the feed
+      // reserves one empty batch — see the scaladoc's feed semantics;
+      // it publishes only after the state it fences is committed
+      txn.commit(target.buckets, props, op = "restore",
+        feed = txn.feedStarted)
       txn.newVersion
     }
   }
@@ -2558,13 +2502,11 @@ object Compaction {
           s"no staged manifest under $stageDir"))
       TxLog.sweep(spark, dir)
       val fs = TxLog.fs(spark, dir)
-      val txn = new TableTxn(spark, dir, cur.version)
-      val emitsFeed = feedEnabled(cur) ||
-        cur.counter("next_feed_batch") > 0L
-      val feedBatch =
-        if (emitsFeed) Some(nextBatch(spark, dir, metaOf(cur)))
-        else None
-      feedBatch.foreach(n => stampFeedIntent(fs, txn.staging, n))
+      val txn = new TableTxn(spark, dir, cur)
+      // reserve the batch BEFORE the adoption below: from there on only
+      // a lost CAS is undone, so nothing that can fail may sit between
+      // the moves and the commit
+      if (txn.feedStarted) txn.reserveFeed()
       // adopt the staged generations under this table's data root:
       // manifest bucket/delta paths are data-relative, so the staged
       // bucket map resolves unchanged once the dirs move. Generation
@@ -2592,11 +2534,7 @@ object Compaction {
         val now = System.currentTimeMillis()
         adopted.foreach { case (_, dst) => fs.setTimes(dst, now, -1) }
       }
-      val props = (staged.props -- Seq("txn_id", "base_txn", "op",
-          "feed_batch", "feed_txn", "feed", "feed_epoch",
-          "next_feed_batch", "restored_from", "lineage_floor",
-          "replaced_from") --
-          staged.buckets.keys.map(b => s"bucket.$b")) ++
+      val props = (TableTxn.tableProps(staged) - "feed") ++
         (if (feed) Map("feed" -> "true") else Map.empty) ++
         // feed batches already on disk carry the OLD schema (and
         // possibly an old tp layout): keep the per-batch-schema feed
@@ -2605,20 +2543,16 @@ object Compaction {
             cur.prop("schema_altered").isDefined)
           Map("schema_altered" -> "true") else Map.empty) ++
         (if (cur.prop("tp_evolved").contains("true"))
-          Map("tp_evolved" -> "true") else Map.empty) ++
-        feedCommitProps(feedBatch, txn, cur) +
+          Map("tp_evolved" -> "true") else Map.empty) +
         // like restore (r14): EVERY replace bumps the epoch — the
         // universal "your lineage ended" fence — whether or not the
         // table ever emitted feed batches (the reserved empty batch
-        // above stays feed-table-only)
+        // stays feed-table-only)
         ("feed_epoch" -> (cur.counter("feed_epoch") + 1L).toString) +
-        ("op" -> "replace") +
         ("replaced_from" -> cur.version.toString) +
         ("lineage_floor" -> txn.newVersion.toString)
-      try txn.commit(staged.buckets, props, publish = feedBatch.foreach(n =>
-        publishFeed(fs, txn.staging, dir, n, txn.newVersion,
-          staged.props.getOrElse("schema_json", "{}"),
-          staged.prop("tp_unit"))))
+      try txn.commit(staged.buckets, props, op = "replace",
+        feed = txn.feedStarted)
       catch {
         case e: TxLog.CommitConflict =>
           // un-adopt so the OCC retry re-adopts against the new head
@@ -2771,7 +2705,7 @@ object Compaction {
         !st.getPath.getName.startsWith(".") &&
         !st.getPath.getName.startsWith("_")
     // a zero-effect merge publishes an empty batch dir: no data files,
-    // no rows — skip (its id stays visible via nextBatch's counter)
+    // no rows — skip (its id stays visible via the committed counter)
     val withData = listed.flatMap { case (p, sts) =>
       val nested = sts.exists(st => st.isDirectory &&
         st.getPath.getName.startsWith("_tp="))
@@ -2784,7 +2718,7 @@ object Compaction {
     val epochs = withData.groupBy { case (p, sts, nested) =>
       // a pre-marker (legacy) batch keeps its own footer pass
       (sts.iterator.map(_.getPath.getName)
-        .collectFirst { case PubMarker(_, h, _) => h }
+        .collectFirst { case TableTxn.PubMarker(_, h, _) => h }
         .getOrElse(s"legacy:$p"), nested)
     }
     val bySig = epochs.toSeq.map { case ((_, nested), group) =>
@@ -2998,7 +2932,7 @@ object Compaction {
     // clear crashed writers' leftovers (grace-aware: a LIVE concurrent
     // writer's staging and in-flight generation survive the sweep)
     prof("merge.sweep") { TxLog.sweep(spark, dir) }
-    val txn = new TableTxn(spark, dir, m.snap.version)
+    val txn = new TableTxn(spark, dir, m.snap)
     // a table that opted into the change feed emits on EVERY merge —
     // the caller flag remains for per-call opt-in on plain tables
     val emitFeedEff = emitFeed || feedEnabled(m.snap)
@@ -3188,67 +3122,15 @@ object Compaction {
     }
   }
 
-  /** Zero-byte publish marker inside every published batch dir,
-    * filename-encoded so no reader ever opens it:
-    * `_pub-<millis>-<schemaFingerprint>[-tp<unit>]`. The millis are the
-    * durable retention clock ([[maintain]]'s `maxFeedAge` — object-store
-    * directory mtimes are synthetic and clock-skewed); the fingerprint
-    * identifies the table-schema EPOCH the batch was written under, so
-    * the evolution-aware [[readFeed]] does one footer inference per
-    * epoch instead of one per batch. The optional `-tp<unit>` suffix
-    * records the TIME-PARTITION transform the batch's `_tp=` dirs were
-    * written under: a time-bounded stream consumer prunes a batch's
-    * partition dirs only when the recorded unit matches the unit its
-    * bounds were computed in (a partition-spec evolution between the
-    * two would silently change the dirs' meaning).
-    */
-  private[cdc] val PubMarker =
-    "^_pub-([0-9]+)-([0-9a-f]+)(-tp[a-z]+)?$".r
-
   /** The `-tp<unit>` suffix of a batch dir's publish marker, if any —
     * one name scan, no file opens.
     */
   private[graft] def batchTpUnit(
       names: Iterable[String]): Option[String] =
     names.collectFirst {
-      case PubMarker(_, _, sfx) if sfx != null => sfx.stripPrefix("-tp")
+      case TableTxn.PubMarker(_, _, sfx) if sfx != null =>
+        sfx.stripPrefix("-tp")
     }
-
-  /** Staged-intent marker `_batch-<n>`, written into `<staging>/feed`
-    * BEFORE the commit that reserves batch `n`: a writer that dies
-    * between its commit and [[publishFeed]] leaves the only copy of the
-    * batch's change events in its staging dir, and this marker is how
-    * [[republishStagedFeed]] maps that staging back to its batch id.
-    */
-  private[cdc] val IntentMarker = "^_batch-([0-9]+)$".r
-
-  private[cdc] def schemaFingerprint(schemaJson: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(schemaJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(8).map(b => f"$b%02x").mkString
-
-  private def stampFeedIntent(fs: org.apache.hadoop.fs.FileSystem,
-      staging: String, n: Long): Unit = TxLog.hygiene {
-    // best-effort: without it the crash-recovery republish degrades to
-    // "gap detected loudly", never to silence
-    val d = new Path(s"$staging/feed")
-    fs.mkdirs(d)
-    fs.create(new Path(d, s"_batch-$n"), true).close()
-  }
-
-  /** The feed bookkeeping a committing write records: the advanced
-    * batch counter, plus — when this commit emits a batch — the
-    * (feed_txn, feed_batch) pair [[republishStagedFeed]] matches a
-    * crashed writer's staging against to finish its publish (the
-    * commit-then-publish window, r9 advice).
-    */
-  private def feedCommitProps(feedBatch: Option[Long], txn: TableTxn,
-      snap: TxLog.Snapshot): Map[String, String] = feedBatch match {
-    case Some(n) => Map("next_feed_batch" -> (n + 1L).toString,
-      "feed_batch" -> n.toString, "feed_txn" -> txn.id)
-    case None =>
-      snap.prop("next_feed_batch").map("next_feed_batch" -> _).toMap
-  }
 
   /** Zero-byte retention-horizon marker `feed/_horizon-<n>`: every
     * batch id below `n` was (or was about to be) released by
@@ -3306,7 +3188,7 @@ object Compaction {
       .flatMap { st =>
         val feed = new Path(st.getPath, "feed")
         try fs.listStatus(feed).iterator.map(_.getPath.getName)
-          .collectFirst { case IntentMarker(b) => b.toLong }
+          .collectFirst { case TableTxn.IntentMarker(b) => b.toLong }
         catch { case _: java.io.FileNotFoundException => None }
       }
       .filterNot(n => fs.exists(new Path(s"$dir/feed/batch=$n")))
@@ -3329,7 +3211,7 @@ object Compaction {
   }
 
   /** Finish a crashed writer's feed publish: a writer that died between
-    * its commit and [[publishFeed]] left the ONLY copy of that batch's
+    * its commit and the feed publish left the ONLY copy of that batch's
     * change events in `.staging-<txn>/feed` — the pre-r10 sweep deleted
     * it, turning the crash into a permanent feed gap. The staging's
     * `_batch-<n>` intent marker must match a committed manifest's
@@ -3344,7 +3226,7 @@ object Compaction {
     val feedDir = new Path(s"$dir/.staging-$txnId/feed")
     if (!fs.exists(feedDir)) return false
     val n = fs.listStatus(feedDir).iterator.map(_.getPath.getName)
-      .collectFirst { case IntentMarker(b) => b.toLong }
+      .collectFirst { case TableTxn.IntentMarker(b) => b.toLong }
       .getOrElse(return false)
     if (fs.exists(new Path(s"$dir/feed/batch=$n")))
       return false // published — by our earlier attempt or the CAS winner
@@ -3354,9 +3236,8 @@ object Compaction {
         s.prop("feed_batch").contains(n.toString)) match {
       case None => false // commit never landed (or manifest vacuumed)
       case Some(snap) =>
-        publishFeed(fs, s"$dir/.staging-$txnId", dir, n, snap.version,
-          snap.props.getOrElse("schema_json", "{}"),
-          snap.prop("tp_unit"))
+        TableTxn.publishFeed(fs, s"$dir/.staging-$txnId", dir, n,
+          snap.version, snap.props)
         true
     }
   }
@@ -3375,47 +3256,6 @@ object Compaction {
       .collect { case n if n.startsWith(".staging-") =>
         n.stripPrefix(".staging-") }
       .count(republishStagedFeed(spark, dir, _))
-  }
-
-  /** The post-commit feed-batch publish with its bounded local retry;
-    * see the call sites for why a persistent failure surfaces as the
-    * non-retryable [[TxLog.PostCommitPublishFailure]].
-    */
-  private def publishFeed(fs: org.apache.hadoop.fs.FileSystem,
-      staging: String, dir: String, n: Long, newVersion: Long,
-      schemaJson: String, tpUnit: Option[String] = None): Unit = {
-    val src = new Path(s"$staging/feed")
-    val dst = new Path(s"$dir/feed/batch=$n")
-    // durable publish metadata rides the rename (see [[PubMarker]]);
-    // best-effort — a marker-less batch falls back to dir mtime
-    // (retention) and its own footer pass (evolution read). A
-    // REpublish ([[republishStagedFeed]]) drops the crashed attempt's
-    // marker first so exactly one survives.
-    TxLog.hygiene {
-      fs.listStatus(src).foreach { st =>
-        if (PubMarker.matches(st.getPath.getName))
-          fs.delete(st.getPath, false)
-      }
-      fs.create(new Path(src, s"_pub-${System.currentTimeMillis()}-" +
-        schemaFingerprint(schemaJson) +
-        tpUnit.map(u => s"-tp$u").getOrElse("")), true).close()
-    }
-    var lastErr: Throwable = null
-    val published = (1 to 3).exists { _ =>
-      try {
-        fs.mkdirs(new Path(s"$dir/feed"))
-        // batch ids are writer-unique post-commit (the committed
-        // counter reserved n), so dst existing means OUR earlier
-        // attempt succeeded but reported failure
-        fs.rename(src, dst) || fs.exists(dst)
-      } catch {
-        case scala.util.control.NonFatal(e) => lastErr = e; false
-      }
-    }
-    if (!published)
-      throw new TxLog.PostCommitPublishFailure(
-        s"table committed at v$newVersion but feed batch $n failed to publish",
-        lastErr)
   }
 
   /** Everything from winner selection to commit — split out so the
@@ -3457,7 +3297,6 @@ object Compaction {
     // swept once unreferenced
     val emptied = touched.filterNot(staged.toSet)
 
-    val newVersion = txn.newVersion
     val newBuckets = (m.buckets -- touched) ++
       staged.map(b => b -> txn.bucketRel(b))
 
@@ -3465,8 +3304,6 @@ object Compaction {
     // so future reads project them
     val schemaJson = widenedSchemaJson(winners, m.schema)
 
-    val feedBatch = if (emitFeed) Some(nextBatch(spark, dir, m)) else None
-    feedBatch.foreach(n => stampFeedIntent(fs, staging, n))
     // stats ride the commit: untouched buckets carry their recorded
     // counts AND max-version zone maps forward, touched buckets take
     // the staged generation's footer stats, emptied buckets drop —
@@ -3497,29 +3334,18 @@ object Compaction {
     val rows = newStats.values.map(_.rows).sum
     val props = coreProps(keys, versionCol, deleteCol, nBuckets, schemaJson,
       m.clusterBy) ++ evolutionProps(m.snap) ++
-      carriedRows ++ rowProps(newStats) ++
-      feedCommitProps(feedBatch, txn, m.snap) +
-      ("op" -> "merge")
+      carriedRows ++ rowProps(newStats)
 
     // THE commit: one manifest rename publishes data + schema + fence
     // (on a lost CAS the txn reclaims its install and the OCC loop
-    // recomputes against the winner's snapshot). The feed batch
-    // publishes only once the table state it describes is committed
-    // (see scaladoc for the residual window). A publish failure must
-    // NOT re-enter the OCC loop: the version just moved — by our own
-    // commit — so a generic retry would re-run the whole
-    // already-applied merge, derive a zero-effect delta, and silently
-    // drop this batch's real change events. Retry the rename alone; if
-    // it still fails, surface the distinct non-retryable error so the
-    // caller knows the table committed but the feed batch did not
-    // publish. Retention: a non-retaining merge keeps only the new
-    // version — older manifests go, and the sweep reclaims every
-    // directory they alone referenced (the touched buckets'
-    // pre-images).
+    // recomputes against the winner's snapshot), then the feed batch
+    // (see TableTxn.commit for the publish-failure contract).
+    // Retention: a non-retaining merge keeps only the new version —
+    // older manifests go, and the sweep reclaims every directory they
+    // alone referenced (the touched buckets' pre-images).
     prof("merge.commit") {
-      txn.commit(newBuckets, props, vacuum = !retainHistory,
-        publish = feedBatch.foreach(n => publishFeed(fs, staging, dir, n,
-          newVersion, schemaJson, m.tp.map(_._1))))
+      txn.commit(newBuckets, props, op = "merge", vacuum = !retainHistory,
+        feed = emitFeed)
     }
 
     MergeStats(touched, emptied, rows, feedRows)
@@ -3621,26 +3447,11 @@ object Compaction {
       else org.apache.spark.sql.types.StructType(
         (m.schema.fields ++ newCols).map(_.copy(nullable = true))).json
 
-    val feedBatch = if (emitFeed) Some(nextBatch(spark, dir, m)) else None
-    feedBatch.foreach(n => stampFeedIntent(fs, txn.staging, n))
     // base entries, base stats and prior deltas all carry verbatim;
     // each staged bucket APPENDS one delta dir and folds its footer
     // stats into the delta-side zone map
-    val deltaProps = staged.flatMap { b =>
-      val rels = m.deltas.getOrElse(b, Nil) :+ txn.bucketRel(b)
-      val st = newStats(b)
-      val rows = m.snap.counter(s"drows.$b") + st.rows
-      val mx = m.snap.prop(s"dmaxv.$b") match {
-        case None => Option(st.maxVersion)
-        case Some(old) => Option(st.maxVersion) match {
-          case None => Some(old)
-          case Some(nw) => typedMax(old, nw, vType)
-        }
-      }
-      Seq(s"delta.$b" -> rels.mkString(","),
-        s"drows.$b" -> rows.toString) ++
-        mx.map(v => s"dmaxv.$b" -> v)
-    }.toMap
+    val deltaProps = deltaAppendProps(m.snap, staged, newStats,
+      txn.bucketRel, vType)
     // base stats carry for every bucket (the base is untouched); delta
     // props carry only for buckets this merge did NOT stage — a staged
     // bucket's delta props are fully replaced by deltaProps, so a
@@ -3652,14 +3463,11 @@ object Compaction {
     val carried = carriedStats(m.snap.props, staged.toSet, DeltaPrefixes)
     val props = coreProps(m.keys, m.versionCol, m.deleteCol, m.nBuckets,
       schemaJson, m.clusterBy) ++ evolutionProps(m.snap) ++
-      carried ++ deltaProps ++
-      feedCommitProps(feedBatch, txn, m.snap) +
-      ("op" -> "merge-mor")
+      carried ++ deltaProps
 
     // the base bucket map is UNCHANGED — that is the whole point
-    txn.commit(m.buckets, props, vacuum = !retainHistory,
-      publish = feedBatch.foreach(n => publishFeed(fs, txn.staging, dir,
-        n, txn.newVersion, schemaJson, m.tp.map(_._1))))
+    txn.commit(m.buckets, props, op = "merge-mor", vacuum = !retainHistory,
+      feed = emitFeed)
     MergeStats(touched, Nil, deltaRows, feedRows)
   }
 
@@ -3710,7 +3518,7 @@ object Compaction {
       val dirty = select(m.deltas)
       if (dirty.isEmpty) return
       TxLog.sweep(spark, dir)
-      val txn = new TableTxn(spark, dir, m.snap.version)
+      val txn = new TableTxn(spark, dir, m.snap)
       // bucketed fold: the fold window itself establishes the bucket
       // distribution the staged write needs — no second exchange (r16)
       val staged = txn.stage(
@@ -3723,12 +3531,10 @@ object Compaction {
         m.schema.json, m.clusterBy) ++ evolutionProps(m.snap) ++
         carried ++
         rowProps(stagedStats(spark, txn.staging, staged, m.versionCol,
-          m.clusterBy, ndvPOf(m.snap))) ++
-        m.snap.prop("next_feed_batch").map("next_feed_batch" -> _) +
-        ("op" -> "compact")
+          m.clusterBy, ndvPOf(m.snap)))
       txn.commit(
         (m.buckets -- dirty) ++ staged.map(b => b -> txn.bucketRel(b)).toMap,
-        props, vacuum = !retainHistory)
+        props, op = "compact", vacuum = !retainHistory)
     }
   }
 
@@ -3827,16 +3633,12 @@ object Compaction {
       val p = ndvP.getOrElse(ndvPOf(m.snap))
       val fresh = committedBucketStats(spark, dir, m, stale, p)
       val staleSet = stale.toSet
-      val txn = new TableTxn(spark, dir, m.snap.version)
-      val props = (m.snap.props -- Seq("txn_id", "base_txn", "op",
-          "feed_batch", "feed_txn") --
-          m.buckets.keys.map(b => s"bucket.$b"))
+      val props = TableTxn.tableProps(m.snap)
         .filterNot { case (k, _) => StatPrefixes.exists(p0 =>
           k.startsWith(p0) && statBucket(k, p0).exists(staleSet.contains)) } ++
         rowProps(fresh) ++
-        ndvP.map(v => Map("ndv_p" -> v.toString)).getOrElse(Map.empty) +
-        ("op" -> "restat")
-      txn.commit(m.buckets, props)
+        ndvP.map(v => Map("ndv_p" -> v.toString)).getOrElse(Map.empty)
+      new TableTxn(spark, dir, m.snap).commit(m.buckets, props, op = "restat")
       stale.size
     }
   }
@@ -3905,7 +3707,7 @@ object Compaction {
     // history, and a mid-stream gap would read as silent data loss to
     // a resuming consumer; a consumer below the retention horizon is
     // out of contract either way, and the numbering never restarts —
-    // nextBatch maxes with the committed counter).
+    // the batch reservation maxes with the committed counter).
     Option(maxFeedAge).foreach { age =>
       val cutoff = System.currentTimeMillis() - age.toMillis
       val fs = TxLog.fs(spark, dir)
@@ -3925,7 +3727,7 @@ object Compaction {
         // the expired prefix (+1 terminator) is ever listed.
         def publishedAt(st: org.apache.hadoop.fs.FileStatus): Long =
           fs.listStatus(st.getPath).iterator.map(_.getPath.getName)
-            .collectFirst { case PubMarker(ms, _, _) => ms.toLong }
+            .collectFirst { case TableTxn.PubMarker(ms, _, _) => ms.toLong }
             .getOrElse(st.getModificationTime)
         // never expire past a committed-but-unpublished batch (its only
         // copy sits in a crashed writer's staging, recoverable via

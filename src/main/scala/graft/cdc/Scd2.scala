@@ -122,7 +122,8 @@ object Scd2 {
       coreProps(keys, versionCol, deleteCol, nBuckets,
         window(df.limit(0), keys, versionCol, deleteCol).schema.json) ++
         Compaction.rowProps(Compaction.stagedStats(
-          spark, txn.staging, staged, versionCol)))
+          spark, txn.staging, staged, versionCol)),
+      op = "init")
   }
 
   private def coreProps(keys: Seq[String], versionCol: String,
@@ -354,7 +355,7 @@ object Scd2 {
       val m = loadMeta(spark, dir)
       if (m.nBuckets == newNBuckets) return
       TxLog.sweep(spark, dir)
-      val txn = new TableTxn(spark, dir, m.snap.version)
+      val txn = new TableTxn(spark, dir, m.snap)
       val staged = txn.stage(
         storedData(spark, dir, m).drop("bucket")
           .withColumn("bucket", bucketOf(m.keyCols, newNBuckets))
@@ -364,10 +365,9 @@ object Scd2 {
         staged.map(b => b -> txn.bucketRel(b)).toMap,
         coreProps(m.keys, m.versionCol, m.deleteCol, newNBuckets,
           m.schema.json) ++ floorProp(m.snap) ++
-          Compaction.fenceProps(m.snap) ++
           Compaction.rowProps(Compaction.stagedStats(
             spark, txn.staging, staged, m.versionCol)),
-        vacuum = !retainHistory)
+        op = "rebucket", vacuum = !retainHistory)
     }
   }
 
@@ -474,7 +474,7 @@ object Scd2 {
     val (keys, versionCol, deleteCol, nBuckets) =
       (m.keys, m.versionCol, m.deleteCol, m.nBuckets)
     TxLog.sweep(spark, dir)
-    val txn = new TableTxn(spark, dir, m.snap.version)
+    val txn = new TableTxn(spark, dir, m.snap)
     if (mergeOnRead)
       return morMerge(spark, dir, m, txn, changes, touched)
 
@@ -536,9 +536,8 @@ object Scd2 {
     val rows = newStats.values.map(_.rows).sum
     txn.commit(newBuckets,
       coreProps(keys, versionCol, deleteCol, nBuckets, schemaJson) ++
-        floorProp(m.snap) ++ Compaction.fenceProps(m.snap) ++
-        carried ++ Compaction.rowProps(newStats),
-      vacuum = true)
+        floorProp(m.snap) ++ carried ++ Compaction.rowProps(newStats),
+      op = "merge", vacuum = true)
     MergeStats(touched, rows)
   }
 
@@ -593,29 +592,15 @@ object Scd2 {
             f.name == "valid_to" || f.name == "is_current"))
           .map(_.copy(nullable = true))).json
 
-    val deltaProps = staged.flatMap { b =>
-      val rels = m.deltas.getOrElse(b, Nil) :+ txn.bucketRel(b)
-      val st = newStats(b)
-      val rows = m.snap.counter(s"drows.$b") + st.rows
-      val mx = m.snap.prop(s"dmaxv.$b") match {
-        case None => Option(st.maxVersion)
-        case Some(old) => Option(st.maxVersion) match {
-          case None => Some(old)
-          case Some(nw) => Compaction.typedMax(old, nw, vType)
-        }
-      }
-      Seq(s"delta.$b" -> rels.mkString(","),
-        s"drows.$b" -> rows.toString) ++
-        mx.map(v => s"dmaxv.$b" -> v)
-    }.toMap
+    val deltaProps = Compaction.deltaAppendProps(m.snap, staged, newStats,
+      txn.bucketRel, vType)
     val carried = Compaction.carriedStats(m.snap.props, staged.toSet,
       Compaction.DeltaPrefixes)
     // the base bucket map is UNCHANGED — that is the whole point
     txn.commit(m.buckets,
       coreProps(m.keys, m.versionCol, m.deleteCol, m.nBuckets,
-        schemaJson) ++ floorProp(m.snap) ++
-        Compaction.fenceProps(m.snap) ++ carried ++ deltaProps,
-      vacuum = true)
+        schemaJson) ++ floorProp(m.snap) ++ carried ++ deltaProps,
+      op = "merge-mor", vacuum = true)
     MergeStats(touched, deltaRows)
   }
 
@@ -661,7 +646,7 @@ object Scd2 {
             onFailedCompare = true))
       }
       TxLog.sweep(spark, dir)
-      val txn = new TableTxn(spark, dir, m.snap.version)
+      val txn = new TableTxn(spark, dir, m.snap)
       val cutLit = lit(cut).cast(vType)
       val doomed = (col("valid_to").isNotNull &&
         col("valid_to") <= cutLit) ||
@@ -682,9 +667,8 @@ object Scd2 {
       if (affected.isEmpty) {
         // nothing to drop — still commit the floor so asOf below it
         // refuses from now on
-        txn.commit(m.buckets,
-          m.snap.props -- Seq("txn_id", "base_txn") +
-            ("expired_before" -> floorStr))
+        txn.commit(m.buckets, TableTxn.tableProps(m.snap) +
+          ("expired_before" -> floorStr), op = "expire")
         return 0L
       }
       val folded = liveView(spark, dir, m, affected)
@@ -698,10 +682,9 @@ object Scd2 {
       txn.commit(
         (m.buckets -- affected) ++ staged.map(b => b -> txn.bucketRel(b)),
         coreProps(m.keys, m.versionCol, m.deleteCol, m.nBuckets,
-          m.schema.json) ++ Compaction.fenceProps(m.snap) ++
-          carried ++ Compaction.rowProps(newStats) +
+          m.schema.json) ++ carried ++ Compaction.rowProps(newStats) +
           ("expired_before" -> floorStr),
-        vacuum = !retainHistory)
+        op = "expire", vacuum = !retainHistory)
       before - newStats.values.map(_.rows).sum
     }
 
@@ -730,7 +713,7 @@ object Scd2 {
       }.toSet
       if (dirty.isEmpty) return
       TxLog.sweep(spark, dir)
-      val txn = new TableTxn(spark, dir, m.snap.version)
+      val txn = new TableTxn(spark, dir, m.snap)
       // bucketed fold: the fold itself establishes the bucket
       // distribution the staged write needs — no second exchange (r16)
       val staged = txn.stage(
@@ -739,11 +722,10 @@ object Scd2 {
         (m.buckets -- dirty) ++ staged.map(b => b -> txn.bucketRel(b)).toMap,
         coreProps(m.keys, m.versionCol, m.deleteCol, m.nBuckets,
           m.schema.json) ++ floorProp(m.snap) ++
-          Compaction.fenceProps(m.snap) ++
           Compaction.carriedStats(m.snap.props, dirty) ++
           Compaction.rowProps(Compaction.stagedStats(
             spark, txn.staging, staged, m.versionCol)),
-        vacuum = !retainHistory)
+        op = "compact", vacuum = !retainHistory)
     }
   }
 

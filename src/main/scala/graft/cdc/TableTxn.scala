@@ -6,10 +6,23 @@ import org.apache.spark.sql.functions.col
 
 /** One writer's attempt to advance a maintained table by one version —
   * the ONLY write protocol of [[Compaction]], [[Scd2]] and [[AggView]]:
-  * [[stage]] the new bucket contents, then [[commit]] them (install,
-  * manifest CAS, the caller's feed publish, post-commit hygiene). A
-  * create opens its transaction with [[TableTxn.create]]. The protocol
-  * is safe for CONCURRENT writers:
+  * open it on the base snapshot (a create opens with
+  * [[TableTxn.create]]), [[stage]] the new bucket contents, then
+  * [[commit]] them. The commit is also the one place that records what
+  * every manifest carries besides the caller's table props:
+  *
+  *  - the base's `next_feed_batch` counter, `feed_epoch` consumer
+  *    fence and `lineage_floor` restore fence ([[TableTxn.Carried]];
+  *    caller props override, as RESTORE and REPLACE do);
+  *  - the required `op` the commit audit log (`history`) reports;
+  *  - with `feed = true`, the change-feed batch: the reserved batch id,
+  *    the staged-intent marker crash recovery maps a staging back to
+  *    its batch by, the `next_feed_batch`/`feed_batch`/`feed_txn`
+  *    triple, and the post-CAS publish of `<staging>/feed`.
+  *
+  * A metadata-only commit (no staged data) is the same call with the
+  * base's own bucket map, its props built by [[TableTxn.tableProps]].
+  * The protocol is safe for CONCURRENT writers:
   *
   *  - the staging directory is writer-unique (`.staging-<txn>`), so
   *    two in-flight merges never overwrite each other's staged data
@@ -38,17 +51,28 @@ import org.apache.spark.sql.functions.col
   * disjointness rebasing (an optimization a real cluster deployment
   * could add on top without changing the commit protocol).
   */
-private[cdc] final class TableTxn(spark: SparkSession, dir: String,
-    baseVersion: Long) {
+private[cdc] final class TableTxn private (spark: SparkSession,
+    dir: String, base: Option[TxLog.Snapshot]) {
+
+  def this(spark: SparkSession, dir: String, base: TxLog.Snapshot) =
+    this(spark, dir, Some(base))
 
   val id: String = java.util.UUID.randomUUID().toString.take(8)
-  val newVersion: Long = baseVersion + 1L
+  val newVersion: Long = base.fold(0L)(_.version + 1L)
   val staging: String = s"$dir/.staging-$id"
   private val genName: String = s"g$newVersion-$id"
   private val fs: FileSystem = TxLog.fs(spark, dir)
+  private var reserved: Option[Long] = None
 
   /** Manifest-relative path for a bucket staged by this transaction. */
   def bucketRel(b: Int): String = s"$genName/bucket=$b"
+
+  /** Whether the base table opted into the change feed or ever emitted
+    * a batch — a backward state move (RESTORE, REPLACE) on such a table
+    * reserves one empty batch to keep the numbering monotone.
+    */
+  def feedStarted: Boolean = base.exists(s =>
+    s.prop("feed").contains("true") || s.counter("next_feed_batch") > 0L)
 
   /** Write `rows` (carrying the internal `bucket` column) as this
     * transaction's staged generation under the table layout —
@@ -82,21 +106,72 @@ private[cdc] final class TableTxn(spark: SparkSession, dir: String,
       .collect { case s if s.startsWith("bucket=") => s.drop(7).toInt }
   }
 
-  /** Publish this transaction as the table's next version: install the
-    * staged data (if any) and CAS-commit the manifest, then run the
-    * caller's post-commit `publish` (a feed batch rename), then — as
-    * hygiene that can no longer fail the committed write — drop the
-    * staging and, with `vacuum`, every older manifest.
+  /** Publish this transaction as the table's next version: the base's
+    * carried counters and fences, then `props`, then the feed triple
+    * (with `feed`) and `op` make the manifest; install the staged data
+    * (if any) and CAS-commit it; with `feed`, publish `<staging>/feed`
+    * as the reserved batch under the committed schema and `tp_unit`;
+    * then — as hygiene that can no longer fail the committed write —
+    * drop the staging and, with `vacuum`, every older manifest.
+    *
+    * The batch publishes only once the table state it describes is
+    * committed. A publish failure must NOT re-enter the OCC loop: the
+    * version just moved — by this very commit — so a generic retry
+    * would re-run an already-applied write and drop the batch's
+    * events. [[TableTxn.publishFeed]] retries the rename alone and
+    * surfaces the non-retryable [[TxLog.PostCommitPublishFailure]].
     */
   def commit(newBuckets: Map[Int, String], props: Map[String, String],
-      vacuum: Boolean = false, publish: => Unit = ()): TxLog.Snapshot = {
-    val snap = installAndCommit(newBuckets, props)
-    publish
+      op: String, vacuum: Boolean = false,
+      feed: Boolean = false): TxLog.Snapshot = {
+    val batch = if (feed) Some(reserveFeed()) else None
+    val full = base.fold(Map.empty[String, String])(
+        _.props.filter { case (k, _) => TableTxn.Carried.contains(k) }) ++
+      props ++
+      batch.fold(Map.empty[String, String])(n =>
+        Map("next_feed_batch" -> (n + 1L).toString,
+          "feed_batch" -> n.toString, "feed_txn" -> id)) +
+      ("op" -> op)
+    val snap = installAndCommit(newBuckets, full)
+    batch.foreach(n =>
+      TableTxn.publishFeed(fs, staging, dir, n, newVersion, full))
     TxLog.hygiene {
       cleanup()
       if (vacuum) TxLog.vacuum(spark, dir, newVersion)
     }
     snap
+  }
+
+  /** Reserve this transaction's change-feed batch id (once; a later
+    * call, and `commit(feed = true)`, reuse it) — one past the highest
+    * published batch dir (a driver-side listing of ≤ |merges| names),
+    * never below the base's committed counter: a vacuum that deleted
+    * EVERY feed dir must not restart numbering at 0, or a consumer
+    * resuming from "batch >= K" would skip every later batch — and
+    * stamp the staged-intent marker `_batch-<n>` into `<staging>/feed`
+    * BEFORE the commit, so a writer that dies between its commit and
+    * the publish leaves a staging [[Compaction.republishStagedFeed]]
+    * can map back to its batch. The marker is best-effort: without it
+    * the recovery degrades to "gap detected loudly", never to silence.
+    * `commit` reserves by itself; a writer whose own moves precede the
+    * commit (REPLACE's adoption) reserves first, so a failing listing
+    * leaves nothing to undo.
+    */
+  def reserveFeed(): Long = reserved.getOrElse {
+    val p = new Path(s"$dir/feed")
+    val fromDirs = if (!fs.exists(p)) 0L
+    else fs.listStatus(p).toSeq
+      .map(_.getPath.getName)
+      .collect { case s if s.startsWith("batch=") => s.drop(6).toLong }
+      .foldLeft(-1L)(math.max) + 1L
+    val n = math.max(fromDirs, base.fold(0L)(_.counter("next_feed_batch")))
+    TxLog.hygiene {
+      val d = new Path(s"$staging/feed")
+      fs.mkdirs(d)
+      fs.create(new Path(d, s"_batch-$n"), true).close()
+    }
+    reserved = Some(n)
+    n
   }
 
   /** Move the staged data (if any) under its unique generation name —
@@ -141,6 +216,28 @@ private[cdc] final class TableTxn(spark: SparkSession, dir: String,
 
 private[cdc] object TableTxn {
 
+  /** Props every commit carries from its base unless the caller's own
+    * props restate them: the feed batch counter (numbering never
+    * restarts), the restore/replace-bumped feed epoch (dropping it
+    * would silently re-arm epoch-fenced consumers) and the replace
+    * lineage floor (a durable restore fence).
+    */
+  private val Carried = Set("next_feed_batch", "feed_epoch", "lineage_floor")
+
+  /** Props that describe one commit, never the table. */
+  private val PerCommit = Set("txn_id", "base_txn", "op", "feed_batch",
+    "feed_txn", "restored_from", "replaced_from")
+
+  /** `snap`'s table props for a commit that restates them wholesale (a
+    * metadata-only commit, or RESTORE/REPLACE adopting another
+    * snapshot's state): everything but the per-commit keys, the bucket
+    * map (the commit's `newBuckets` restates it) and the [[Carried]]
+    * keys (the commit takes them from its own base).
+    */
+  def tableProps(snap: TxLog.Snapshot): Map[String, String] =
+    snap.props.filter { case (k, _) => !k.startsWith("bucket.") &&
+      !PerCommit.contains(k) && !Carried.contains(k) }
+
   /** Open the version-0 transaction of a (re)created table. A create
     * is a FULL table replace: prior manifests, data, feed batches,
     * metadata and history go first — and `_mv` too, or a surviving
@@ -152,7 +249,81 @@ private[cdc] object TableTxn {
     Seq("manifest", "data", "feed", ".staging", "meta", "_history", "_mv")
       .foreach(sub => fs.delete(new Path(s"$dir/$sub"), true))
     TxLog.invalidate(dir)
-    new TableTxn(spark, dir, baseVersion = -1L)
+    new TableTxn(spark, dir, None)
+  }
+
+  /** Staged-intent marker `_batch-<n>`, written into `<staging>/feed`
+    * BEFORE the commit that reserves batch `n` ([[TableTxn.reserveFeed]]):
+    * a writer that dies between its commit and the feed publish leaves
+    * the only copy of the batch's change events in its staging dir, and
+    * this marker is how [[Compaction.republishStagedFeed]] maps that
+    * staging back to its batch id.
+    */
+  private[cdc] val IntentMarker = "^_batch-([0-9]+)$".r
+
+  /** Zero-byte publish marker inside every published batch dir,
+    * filename-encoded so no reader ever opens it:
+    * `_pub-<millis>-<schemaFingerprint>[-tp<unit>]`. The millis are the
+    * durable retention clock ([[Compaction.maintain]]'s `maxFeedAge` —
+    * object-store directory mtimes are synthetic and clock-skewed); the
+    * fingerprint identifies the table-schema EPOCH the batch was written
+    * under, so the evolution-aware [[Compaction.readFeed]] does one
+    * footer inference per epoch instead of one per batch. The optional
+    * `-tp<unit>` suffix records the TIME-PARTITION transform the batch's
+    * `_tp=` dirs were written under: a time-bounded stream consumer
+    * prunes a batch's partition dirs only when the recorded unit matches
+    * the unit its bounds were computed in (a partition-spec evolution
+    * between the two would silently change the dirs' meaning).
+    */
+  private[cdc] val PubMarker =
+    "^_pub-([0-9]+)-([0-9a-f]+)(-tp[a-z]+)?$".r
+
+  private def schemaFingerprint(schemaJson: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(schemaJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .take(8).map(b => f"$b%02x").mkString
+
+  /** Publish `<staging>/feed` as `feed/batch=<n>` for the committed
+    * `version` whose manifest `props` name the batch's schema
+    * (`schema_json`) and time-partition unit (`tp_unit`), with a
+    * bounded local retry — the post-commit half of [[TableTxn.commit]]
+    * and of a crashed writer's republish
+    * ([[Compaction.republishStagedFeed]]).
+    */
+  private[cdc] def publishFeed(fs: FileSystem, staging: String, dir: String,
+      n: Long, version: Long, props: Map[String, String]): Unit = {
+    val src = new Path(s"$staging/feed")
+    val dst = new Path(s"$dir/feed/batch=$n")
+    // durable publish metadata rides the rename (see [[PubMarker]]);
+    // best-effort — a marker-less batch
+    // falls back to dir mtime (retention) and its own footer pass
+    // (evolution read). A REpublish drops the crashed attempt's marker
+    // first so exactly one survives.
+    TxLog.hygiene {
+      fs.listStatus(src).foreach { st =>
+        if (PubMarker.matches(st.getPath.getName))
+          fs.delete(st.getPath, false)
+      }
+      fs.create(new Path(src, s"_pub-${System.currentTimeMillis()}-" +
+        schemaFingerprint(props.getOrElse("schema_json", "{}")) +
+        props.get("tp_unit").map(u => s"-tp$u").getOrElse("")), true).close()
+    }
+    var lastErr: Throwable = null
+    val published = (1 to 3).exists { _ =>
+      try {
+        fs.mkdirs(new Path(s"$dir/feed"))
+        // batch ids are writer-unique post-commit (the committed
+        // counter reserved n), so dst existing means OUR earlier
+        // attempt succeeded but reported failure
+        fs.rename(src, dst) || fs.exists(dst)
+      } catch {
+        case scala.util.control.NonFatal(e) => lastErr = e; false
+      }
+    }
+    if (!published)
+      throw new TxLog.PostCommitPublishFailure(
+        s"table committed at v$version but feed batch $n failed to publish",
+        lastErr)
   }
 
   /** The staged-write sort (r16): the write's partition columns first —

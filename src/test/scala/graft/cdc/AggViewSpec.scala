@@ -87,9 +87,9 @@ class AggViewSpec extends SparkSpec {
     AggView.init(mk(Seq((1L, 1.0))), dir, "k", "v", nBuckets = 2)
     // strip the format marker — the state a pre-r12 build committed
     val s = TxLog.latest(spark, dir).get
-    val txn = new TableTxn(spark, dir, s.version)
+    val txn = new TableTxn(spark, dir, s)
     txn.commit(s.buckets,
-      s.props -- Seq("agg_format", "txn_id", "base_txn"))
+      s.props -- Seq("agg_format", "txn_id", "base_txn"), op = "merge")
     TxLog.invalidate(dir)
     val e = intercept[IllegalStateException] {
       AggView.read(spark, dir)

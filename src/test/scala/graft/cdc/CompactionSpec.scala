@@ -360,4 +360,19 @@ class CompactionSpec extends SparkSpec {
     val afterMor = Compaction.readChangedSince(spark, dir, 3L)
     assert(afterMor.filter(col("payload") === "mor").count() == 1L)
   }
+
+  test("re-init with a snapshot missing the delete column fails before " +
+      "touching the existing table") {
+    val dir = freshTable(20)
+    val before = Compaction.read(spark, dir).select("id", "payload")
+      .as[(Long, String)].collect().toSet
+    val e = intercept[IllegalArgumentException] {
+      Compaction.init(snapshot(5).drop("deleted"), dir, key = "id",
+        versionCol = "version", deleteCol = "deleted", nBuckets = N_BUCKETS)
+    }
+    assert(e.getMessage.contains("'deleted'"), e.getMessage)
+    assert(Compaction.read(spark, dir).select("id", "payload")
+      .as[(Long, String)].collect().toSet == before)
+    assert(Compaction.countRows(spark, dir) == 20L)
+  }
 }

@@ -118,7 +118,7 @@ class FeedDurabilitySpec extends SparkSpec {
     // exactly one publish marker survives the republish
     val fs = TxLog.fs(spark, dir)
     val markers = fs.listStatus(new Path(s"$dir/feed/batch=1"))
-      .map(_.getPath.getName).filter(Compaction.PubMarker.matches(_))
+      .map(_.getPath.getName).filter(TableTxn.PubMarker.matches(_))
     assert(markers.length == 1, markers.toSeq)
   }
 
@@ -162,7 +162,7 @@ class FeedDurabilitySpec extends SparkSpec {
     // batch 0: fresh dir mtime, marker backdated 10 days — marker wins
     val b0 = new Path(s"$dir/feed/batch=0")
     val m0 = fs.listStatus(b0).map(_.getPath)
-      .find(p => Compaction.PubMarker.matches(p.getName)).get
+      .find(p => TableTxn.PubMarker.matches(p.getName)).get
     val old = System.currentTimeMillis() - 10L * 24 * 3600 * 1000
     val fp = m0.getName.split("-").last
     assert(fs.rename(m0, new Path(b0, s"_pub-$old-$fp")))
@@ -178,7 +178,7 @@ class FeedDurabilitySpec extends SparkSpec {
     // a second retention pass supersedes the marker, leaving one
     fs.setTimes(b1, old, -1) // mtime alone must still not expire it
     val m1 = fs.listStatus(b1).map(_.getPath)
-      .find(p => Compaction.PubMarker.matches(p.getName)).get
+      .find(p => TableTxn.PubMarker.matches(p.getName)).get
     val fp1 = m1.getName.split("-").last
     assert(fs.rename(m1, new Path(b1, s"_pub-$old-$fp1")))
     Compaction.maintain(spark, dir,
@@ -205,7 +205,7 @@ class FeedDurabilitySpec extends SparkSpec {
     def fpOf(b: Long): String =
       fs.listStatus(new Path(s"$dir/feed/batch=$b"))
         .map(_.getPath.getName)
-        .collectFirst { case Compaction.PubMarker(_, h, _) => h }.get
+        .collectFirst { case TableTxn.PubMarker(_, h, _) => h }.get
     assert(fpOf(0) == fpOf(1), "same schema epoch, different fingerprint")
     assert(fpOf(0) != fpOf(2), "ALTER did not change the epoch")
     // the evolution-aware read still projects every epoch correctly
@@ -213,5 +213,26 @@ class FeedDurabilitySpec extends SparkSpec {
       .filter($"_change_type" === "insert")
       .select($"id", $"payload").as[(Long, String)].collect().toSet
     assert(got == Set((10L, "v1-10"), (11L, "v2-11"), (12L, "v3-12")))
+  }
+
+  test("a metadata-only commit after a feed merge claims no feed batch: " +
+      "setFeedEnabled(false) drops the feed_batch/feed_txn pair") {
+    val dir = tmpDir("fdur-toggle")
+    initTable(dir)
+    Compaction.setFeedEnabled(spark, dir, enabled = true)
+    mergeOne(dir, 10L, 1L) // batch 0
+    val merged = TxLog.latest(spark, dir).get
+    assert(merged.prop("feed_batch").contains("0"))
+    Compaction.setFeedEnabled(spark, dir, enabled = false)
+    val toggled = TxLog.latest(spark, dir).get
+    assert(toggled.version == merged.version + 1L)
+    // the pair republishStagedFeed matches a crashed staging against
+    // belongs to the merge's version alone
+    assert(toggled.prop("feed_batch").isEmpty &&
+      toggled.prop("feed_txn").isEmpty, toggled.props.toString)
+    assert(toggled.counter("next_feed_batch") == 1L)
+    assert(toggled.prop("op").contains("alter"))
+    assert(!Compaction.feedEnabled(spark, dir))
+    assert(Compaction.repairFeed(spark, dir) == 0)
   }
 }

@@ -158,11 +158,17 @@ class RestoreSpec extends SparkSpec {
     Compaction.restore(spark, hist, preCompact)
     assert(Compaction.feedEpoch(spark, hist) == 1L,
       "restore must stamp the epoch on an scd2 history")
+    // every retained commit of either family names its operation
+    def ops(d: String): Map[Long, String] = Compaction.history(spark, d)
+      .select("version", "operation").as[(Long, String)].collect().toMap
+    assert(ops(hist) == Map(1L -> "merge-mor", 2L -> "compact",
+      3L -> "restore"), ops(hist).toString)
     Scd2.merge(spark, hist,
       Seq((2L, "v2-2", 7L, false))
         .toDF("id", "payload", "version", "deleted"))
     assert(Compaction.feedEpoch(spark, hist) == 1L,
       "Scd2.merge must carry the restore epoch forward")
+    assert(ops(hist).values.toSeq == Seq("merge"), ops(hist).toString)
     Scd2.compact(spark, hist)
     assert(Compaction.feedEpoch(spark, hist) == 1L,
       "Scd2.compact must carry the restore epoch forward")
@@ -181,11 +187,14 @@ class RestoreSpec extends SparkSpec {
     Compaction.restore(spark, view, preRebucket)
     assert(Compaction.feedEpoch(spark, view) == 1L,
       "restore must stamp the epoch on an aggview table")
+    assert(ops(view) == Map(1L -> "applyFeed", 2L -> "rebucket",
+      3L -> "restore"), ops(view).toString)
     graft.cdc.AggView.applyFeed(spark, view,
       Seq((2L, 3.0, "insert")).toDF("grp", "amount", "_change_type"),
       batchId = 1L)
     assert(Compaction.feedEpoch(spark, view) == 1L,
       "AggView.applyFeed must carry the restore epoch forward")
+    assert(ops(view).values.toSeq == Seq("applyFeed"), ops(view).toString)
   }
 
   test("restore across a RETIRE PARTITIONS floor is refused") {

@@ -89,7 +89,7 @@ class TxLogFenceSpec extends SparkSpec {
     // simulate a staging write that started hours ago (the install
     // rename preserves this mtime absent the fix)
     val m = TxLog.latest(spark, dir).get
-    val txn = new TableTxn(spark, dir, m.version)
+    val txn = new TableTxn(spark, dir, m)
     Seq((1L, "a9", 9L, false)).toDF("id", "name", "v", "del")
       .withColumn("bucket", Bucketing.bucketOf(org.apache.spark.sql
         .functions.col("id"), 4))
@@ -102,7 +102,7 @@ class TxLogFenceSpec extends SparkSpec {
       .map(_.drop(7).toInt)
     val snap = txn.commit(
       newBuckets = m.buckets ++ staged.map(b => b -> txn.bucketRel(b)).toMap,
-      props = m.props.filterNot(_._1.startsWith("bucket.")))
+      props = m.props.filterNot(_._1.startsWith("bucket.")), op = "merge")
     // a sweep right in the post-install window must NOT reclaim the
     // just-committed generation even though its pre-rename mtime was
     // 48h old (grace default is 12h)
