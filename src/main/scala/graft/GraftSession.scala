@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.io.NioLocalFileSystem
+
 /** Canonical tuned SparkSession for this engine. One place for the
   * settings that matter at scale so every entry point (Verify, Bench,
   * demos, user code) runs the same engine:
@@ -11,7 +13,13 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle partitions sized to the machine (never the 200 default);
   *  - UTC session timezone (oracle parity, TIMESTAMPTZ semantics);
   *  - ns parquet timestamps read as long (see Tables.eventsSince);
-  *  - extensions registered so SQL users get the native functions.
+  *  - extensions registered so SQL users get the native functions;
+  *  - `file:` served by [[graft.io.NioLocalFileSystem]]: with no native
+  *    `libhadoop` on the host, Hadoop's local filesystem starts one
+  *    `chmod` process per file or directory it creates (tables, change
+  *    feed, watermarks, CSV exports); this one sets the same modes in
+  *    process. Hadoop caches the first `file:` FileSystem a JVM creates,
+  *    so it applies only when this session is built before any other.
   */
 object GraftSession {
 
@@ -61,6 +69,7 @@ object GraftSession {
       // that precondition (two live attempts of one task); pin it off
       // explicitly rather than relying on the default.
       .config("spark.speculation", "false")
+      .config(NioLocalFileSystem.ConfKey, NioLocalFileSystem.ClassName)
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
     // deployment/scale overrides without a code edit: every env entry

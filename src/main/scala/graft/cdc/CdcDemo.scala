@@ -4,6 +4,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.SparkSession
 
+import graft.io.NioLocalFileSystem
+
 /** Example CLI driving the CDC engine end-to-end, mirroring the
   * reference's operational flow (`/root/reference/README.md:88-283`):
   * seed users → full export → stage changes → incremental export →
@@ -21,6 +23,7 @@ object CdcDemo {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(NioLocalFileSystem.ConfKey, NioLocalFileSystem.ClassName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

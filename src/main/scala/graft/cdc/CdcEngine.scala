@@ -194,7 +194,9 @@ final class CdcEngine(
   private def mintJobId(): String = java.util.UUID.randomUUID().toString
 
   /** `{type}_{consumer}_{utcstamp}.csv` with spaces sanitized
-    * (`app/main.py:31-34`).
+    * (`app/main.py:31-34`). The name an export publishes under; when an
+    * earlier export holds it, the export publishes `<name>-<n>.csv`
+    * instead and reports that name (see [[Ops.exportOrder]]).
     */
   private[cdc] def mintFilename(exportType: String, consumerId: String): String =
     s"${exportType}_${consumerId.replace(" ", "_")}_${stampFmt.format(Instant.now())}.csv"
@@ -207,7 +209,7 @@ final class CdcEngine(
       filename: String): ExportJob = exportType match {
     case "full" =>
       runJob(jobId, "full", consumerId, filename) {
-        Ops.exportOrder(Ops.exportProjection(Ops.activeOnly(users)))
+        Ops.singleFileOrder(Ops.exportProjection(Ops.activeOnly(users)))
       }
     case "incremental" =>
       wmStore.get(consumerId) match {
@@ -216,7 +218,7 @@ final class CdcEngine(
           ExportJob(jobId, "completed", "incremental", "", 0L)
         case Some(wm) =>
           runJob(jobId, "incremental", consumerId, filename) {
-            Ops.exportOrder(
+            Ops.singleFileOrder(
               Ops.exportProjection(Ops.incrementalChanges(users, wm)))
           }
       }
@@ -227,7 +229,7 @@ final class CdcEngine(
           ExportJob(jobId, "completed", "delta", "", 0L)
         case Some(wm) =>
           runJob(jobId, "delta", consumerId, filename) {
-            Ops.exportOrder(Ops.withOperation(Ops.deltaChanges(users, wm)))
+            Ops.singleFileOrder(Ops.withOperation(Ops.deltaChanges(users, wm)))
           }
       }
   }
@@ -257,7 +259,7 @@ final class CdcEngine(
         val secs = (System.nanoTime() - t0) / 1e9
         log.info(
           f"export_completed job=$jobId rowsExported=${written.rows} durationSeconds=$secs%.3f")
-        ExportJob(jobId, "completed", exportType, filename, written.rows)
+        ExportJob(jobId, "completed", exportType, written.name, written.rows)
       }
     } catch {
       case e: Throwable =>

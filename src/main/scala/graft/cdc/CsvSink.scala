@@ -37,9 +37,11 @@ object CsvSink {
   val IsoTimestampFormat = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSxxx"
 
   /** What one write pass saw: the rows it wrote and the max `updated_at`
-    * among them (None for an empty batch or a frame without that column).
+    * among them (None for an empty batch or a frame without that column),
+    * and the name of the file it published ("" when it published none).
     */
-  final case class Written(rows: Long, maxUpdatedAt: Option[Timestamp])
+  final case class Written(rows: Long, maxUpdatedAt: Option[Timestamp],
+      name: String = "")
 
   /** Write `df` (already projected + ordered) as CSV under `outPath`.
     * Returns the number of rows written. If `singleFile`, `outPath` is a
@@ -47,7 +49,7 @@ object CsvSink {
     * directory of part-files.
     */
   def write(df: DataFrame, outPath: String, singleFile: Boolean = true): Long =
-    if (singleFile) writeSingle(render(df), outPath, publishEmpty = true).rows
+    if (singleFile) writeSingle(render(df), outPath, batch = false).rows
     else writeSharded(render(df), outPath)
 
   /** The CDC batch write: `df` (already projected + ordered) as one CSV
@@ -55,9 +57,15 @@ object CsvSink {
     * count and the max `updated_at` come from the write pass itself, so
     * the caller's watermark describes exactly the rows in the file and
     * the whole export is one Spark action.
+    *
+    * A batch never replaces a file: its rows are past the watermark the
+    * caller is about to advance, so a replaced earlier batch would be
+    * lost. When `outPath` is taken (two exports minted the same name in
+    * one second), the batch lands at `<name>-<n>.csv` for the least free
+    * `n`, and [[Written.name]] says which name it got.
     */
   def writeBatch(df: DataFrame, outPath: String): Written =
-    writeSingle(render(df), outPath, publishEmpty = false)
+    writeSingle(render(df), outPath, batch = true)
 
   // Render booleans as True/False (reference stringifies Python bools,
   // exports.py:54,63). Spark csv writes true/false, so pre-render.
@@ -72,10 +80,12 @@ object CsvSink {
 
   /** Stage the single part-file under a sibling temp dir, then publish it
     * by one rename. The staging dir is removed whether the write
-    * succeeded, failed, or had nothing to publish.
+    * succeeded, failed, or had nothing to publish. A `batch` publishes
+    * only when it has rows and never replaces; a plain write publishes
+    * even an empty frame, in place of whatever file holds the name.
     */
   private def writeSingle(rendered: DataFrame, outPath: String,
-      publishEmpty: Boolean): Written = {
+      batch: Boolean): Written = {
     val fs = rawFs(rendered.sparkSession, outPath)
     val (counted, acc) = countingRows(rendered.coalesce(1))
     val tmp = new Path(outPath + ".tmpdir-" + java.util.UUID.randomUUID())
@@ -92,17 +102,43 @@ object CsvSink {
       val parts = partStats(acc).values
       val written = Written(parts.map(_.rows).sum,
         parts.flatMap(_.maxUpdatedAt).reduceOption(later))
-      if (written.rows > 0 || publishEmpty) {
+      if (written.rows == 0 && batch) written
+      else {
         val part = fs.listStatus(tmp).toSeq.map(_.getPath)
           .find(_.getName.startsWith("part-"))
           .getOrElse(throw new IllegalStateException(s"no part file in $tmp"))
         val target = new Path(outPath)
         Option(target.getParent).foreach(fs.mkdirs)
-        if (fs.exists(target)) fs.delete(target, false)
-        require(fs.rename(part, target), s"rename $part -> $target failed")
+        val published =
+          if (batch) publishNew(fs, part, target)
+          else {
+            if (fs.exists(target)) fs.delete(target, false)
+            require(fs.rename(part, target), s"rename $part -> $target failed")
+            target
+          }
+        written.copy(name = published.getName)
       }
-      written
     } finally fs.delete(tmp, true)
+  }
+
+  /** Publish `part` at `target`, or at `<target stem>-<n>.csv` for the
+    * least `n` whose name is free; returns the path it took.
+    */
+  private def publishNew(fs: org.apache.hadoop.fs.FileSystem, part: Path,
+      target: Path): Path = {
+    val name = target.getName
+    val (stem, ext) = name.lastIndexOf('.') match {
+      case i if i > 0 => (name.take(i), name.drop(i))
+      case _ => (name, "")
+    }
+    Iterator.from(0)
+      .map(n => if (n == 0) target else new Path(target.getParent, s"$stem-$n$ext"))
+      .find { dst =>
+        TxLog.renameIfAbsent(fs, part, dst) || {
+          require(fs.exists(dst), s"rename $part -> $dst failed")
+          false
+        }
+      }.get
   }
 
   /** Cluster-scale export: one CSV part per partition, each writer

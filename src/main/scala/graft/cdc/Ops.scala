@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * expressions only — no UDFs, no collect), so Catalyst pushes filters
   * and prunes columns down to the parquet scan, and the whole pipeline
   * stays inside whole-stage codegen. The only shuffles are the explicit
-  * `orderBy` (range partition) in the export pipelines and aggregation
-  * exchanges, both with map-side partials.
+  * export-order exchanges and aggregation exchanges with map-side
+  * partials.
   */
 object Ops {
 
@@ -73,9 +73,29 @@ object Ops {
     * (`/root/reference/app/services/exports.py:83,123,159`). Ties are
     * unordered in the reference; we add `id` as a deterministic
     * tiebreaker (documented divergence — makes output reproducible).
+    *
+    * A second documented divergence, in the file name: the reference
+    * stamps `{type}_{consumer}_{utcstamp}.csv` to the second and a
+    * second export of one type for one consumer in that second
+    * overwrites the first. [[CdcEngine]] never replaces an export's file
+    * (the replaced rows would be lost behind the advanced watermark): the
+    * later one is published as `<name>-<n>.csv`, and its job reports that
+    * name ([[CsvSink.writeBatch]]).
+    *
+    * This global sort serves the sharded route, one sorted part per
+    * range partition; a single-file export uses [[singleFileOrder]].
     */
   def exportOrder(df: DataFrame): DataFrame =
     df.orderBy(col("updated_at"), col("id"))
+
+  /** The [[exportOrder]] rows in the same order, as one partition: a
+    * shuffle to a single partition, then a sort inside it. `orderBy`
+    * would add a range-sample job that scans and filters the source a
+    * second time, only for a single CSV writer to take every row anyway;
+    * this way the export is one shuffle-map job and the write.
+    */
+  def singleFileOrder(df: DataFrame): DataFrame =
+    df.repartition(1).sortWithinPartitions(col("updated_at"), col("id"))
 
   /** New-watermark aggregate: max `updated_at` of the exported batch
     * (reference `app/services/exports.py:92,132,168`). This is the

@@ -69,7 +69,8 @@ final case class WatermarkRow(
   * `ExportJobResponse` (`/root/reference/app/schemas.py:11-15`).
   * `rowsExported` is -1 while the job is queued/running — the shape
   * `CdcEngine.submit*Export` returns with `status="started"`; completed
-  * jobs carry the real count.
+  * jobs carry the real count and the name the CSV was published under
+  * (the minted name, or `<name>-<n>.csv` when an earlier export held it).
   */
 final case class ExportJob(
     jobId: String,

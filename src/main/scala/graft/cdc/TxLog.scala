@@ -203,6 +203,30 @@ private[graft] object TxLog {
   def latestVersion(spark: SparkSession, dir: String): Option[Long] =
     versionsOnDisk(spark, dir).lastOption
 
+  /** Move `src` to `dst` unless `dst` already exists; true if moved,
+    * false (with `src` left in place) if the name was taken. Never
+    * replaces: this is the commit fence and the export publish.
+    * HDFS-semantics filesystems refuse a rename onto an existing
+    * destination. The LOCAL filesystem does not: its rename is POSIX
+    * rename(2), which silently OVERWRITES — two same-version committers
+    * would both "succeed" and one's state would be lost (observed as
+    * dropped watermark consumers under a cross-instance race). There the
+    * atomic refuse-if-exists primitive is link(2): hard-link `src` to the
+    * final name, which fails EEXIST atomically in the kernel.
+    */
+  def renameIfAbsent(f: FileSystem, src: Path, dst: Path): Boolean =
+    if (f.getUri.getScheme == "file") {
+      try {
+        java.nio.file.Files.createLink(
+          java.nio.file.Paths.get(f.makeQualified(dst).toUri.getPath),
+          java.nio.file.Paths.get(f.makeQualified(src).toUri.getPath))
+        f.delete(src, false)
+        true
+      } catch {
+        case _: java.nio.file.FileAlreadyExistsException => false
+      }
+    } else f.rename(src, dst)
+
   /** (version, commit wall-clock millis) for every manifest on disk,
     * ascending — the commit time is the manifest file's mtime (stamped
     * by the atomic publish rename). Serves `TIMESTAMP AS OF`: the
@@ -346,27 +370,7 @@ private[graft] object TxLog {
     try p.store(os, null) finally os.close()
     beforeCommit()
     val dst = manifestPath(dir, v)
-    // HDFS-semantics filesystems refuse a rename onto an existing
-    // destination, which IS the fence. The LOCAL filesystem does not:
-    // its rename is POSIX rename(2), which silently OVERWRITES — two
-    // same-version committers would both "succeed" and one's state
-    // would be lost (observed as dropped watermark consumers under a
-    // cross-instance race). There the atomic refuse-if-exists
-    // primitive is link(2): hard-link the temp file to the final name,
-    // which fails EEXIST atomically in the kernel.
-    val committed =
-      if (f.getUri.getScheme == "file") {
-        try {
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(f.makeQualified(dst).toUri.getPath),
-            java.nio.file.Paths.get(f.makeQualified(tmp).toUri.getPath))
-          f.delete(tmp, false)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            f.delete(tmp, false); false
-        }
-      } else f.rename(tmp, dst)
+    val committed = renameIfAbsent(f, tmp, dst)
     if (!committed) {
       f.delete(tmp, false)
       throw new CommitConflict(

@@ -76,7 +76,7 @@ final class CdcStream(
           .ofPattern("yyyyMMdd'T'HHmmss'Z'")
           .withZone(java.time.ZoneOffset.UTC)
           .format(java.time.Instant.now())
-        CsvSink.writeBatch(batch.orderBy(col("updated_at"), col("id")),
+        CsvSink.writeBatch(Ops.singleFileOrder(batch),
           s"$outputDir/${exportType}_${consumerId.replace(" ", "_")}_b${batchId}_$stamp.csv")
         ()
       }

@@ -4,6 +4,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.io.NioLocalFileSystem
+
 /** Shared local SparkSession for all suites (one JVM, forked by sbt). */
 object SparkTestBase {
   lazy val spark: SparkSession = {
@@ -16,6 +18,7 @@ object SparkTestBase {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .config("spark.ui.enabled", "false")
+      .config(NioLocalFileSystem.ConfKey, NioLocalFileSystem.ClassName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -243,7 +243,24 @@ class CdcEngineSpec extends SparkSpec {
     assert(j2.rowsExported == j1.rowsExported)
     val body1 = readCsv(s"$outDir/${j1.outputFilename}")
     val body2 = readCsv(s"$outDir/${j2.outputFilename}")
+    assert(j1.outputFilename != j2.outputFilename)
     assert(body1 == body2) // distinct filenames, identical content
+  }
+
+  test("an export batch never replaces an earlier file under the same name") {
+    val (_, usersDir, outDir) = mkEngine()
+    val users = spark.read.parquet(usersDir)
+    val target = s"$outDir/full_c_20260101T000000Z.csv"
+    val batches = Seq(Seq(1L, 2L), Seq(5L), Seq(3L, 4L))
+    val names = batches.map { ids =>
+      CsvSink.writeBatch(Ops.exportProjection(
+        users.filter(users("id").isin(ids: _*)).orderBy("id")), target).name
+    }
+    assert(names == Seq("full_c_20260101T000000Z.csv",
+      "full_c_20260101T000000Z-1.csv", "full_c_20260101T000000Z-2.csv"))
+    names.zip(batches).foreach { case (name, ids) =>
+      assert(readCsv(s"$outDir/$name").tail.map(_.split(",")(0).toLong) == ids)
+    }
   }
 
   test("failed export: exception propagates, watermark untouched, no file") {
