@@ -5,7 +5,7 @@ import java.util.OptionalLong
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow, Literal, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{BasePredicate, BoundReference, Cast, GenericInternalRow, Literal, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics}
 import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, PartitionedFile}
@@ -42,15 +42,20 @@ private[catalog] object ScanMeta {
         throw new IllegalArgumentException(
           s"no committed manifest under $dir"))
     }
+    of(dir, snap, DataType.fromJson(snap.props("schema_json"))
+      .asInstanceOf[StructType])
+  }
+
+  /** A snapshot the caller already resolved, with its `schema_json`
+    * already parsed — the point read plans against the very manifest
+    * its bucket hash was computed from.
+    */
+  def of(dir: String, snap: TxLog.Snapshot, schema: StructType): ScanMeta =
     ScanMeta(dir, snap.version,
       snap.prop("table_type").getOrElse("merge"), snap.props,
       Bucketing.decodeKeys(snap.props("key")),
       snap.prop("version_col"), snap.prop("delete_col"),
-      snap.props("n_buckets").toInt,
-      DataType.fromJson(snap.props("schema_json"))
-        .asInstanceOf[StructType],
-      snap.buckets, snap.deltas)
-  }
+      snap.props("n_buckets").toInt, schema, snap.buckets, snap.deltas)
 }
 
 /** A bin of clean (no unfolded deltas) files, all from generation
@@ -125,21 +130,28 @@ private[catalog] object GraftScan {
     Compaction.listingPool
 }
 
-private[catalog] final class GraftScan(dir: String, asOf: Option[Long],
-    required: StructType, pushed: Array[Filter],
+/** `spark` is the session the scan plans and reads for: its confs size
+  * the splits and its filesystem lists the buckets. `resolved` hands in
+  * a snapshot the caller already read, and `pin` restricts the scan to
+  * the buckets a point read's key hash selected (composite-key IN lists
+  * included, which the pushed filters cannot pin).
+  */
+private[catalog] final class GraftScan(spark: SparkSession, dir: String,
+    asOf: Option[Long], required: StructType, pushed: Array[Filter],
     tracker: Option[GraftRowTracker] = None,
     streamOptions: org.apache.spark.sql.util.CaseInsensitiveStringMap =
-      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty(),
+    resolved: Option[ScanMeta] = None,
+    pin: Option[Set[Int]] = None)
     extends Scan with Batch with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
 
-  private def spark: SparkSession = SparkSession.active
-
   // ONE manifest snapshot per scan: filterAttributes / filter /
   // planning / stats all answer against the same committed version,
   // and a commit landing mid-planning cannot shift the scan under us
-  private lazy val scanMeta: ScanMeta = ScanMeta.load(spark, dir, asOf)
+  private lazy val scanMeta: ScanMeta =
+    resolved.getOrElse(ScanMeta.load(spark, dir, asOf))
 
   override def readSchema(): StructType = required
 
@@ -301,7 +313,12 @@ private[catalog] final class GraftScan(dir: String, asOf: Option[Long],
       epochSigs: Vector[Seq[String]],
       cleanParts: Array[GraftCleanPartition],
       foldParts: Array[GraftFoldPartition], columnar: Boolean,
-      totalBytes: Long, spj: Boolean)
+      spj: Boolean, files: Seq[(String, Long)]) {
+    def totalBytes: Long = files.map(_._2).sum
+  }
+
+  /** Every file the plan opens, with its length (clean and fold). */
+  private[catalog] def plannedFiles: Seq[(String, Long)] = planned.files
 
   // re-planned when a runtime filter arrives after an earlier plan
   // (estimateStatistics/EXPLAIN may force planning pre-execution)
@@ -341,6 +358,7 @@ private[catalog] final class GraftScan(dir: String, asOf: Option[Long],
     val meta = scanMeta
     val kept = GraftPrune.allowedBuckets(meta, pushed)
       .intersect(runtimeBuckets.getOrElse(meta.liveIds))
+      .intersect(pin.getOrElse(meta.liveIds))
     val fs = TxLog.fs(s, dir)
     val events = Compaction.renameEvents(meta.props)
 
@@ -463,7 +481,7 @@ private[catalog] final class GraftScan(dir: String, asOf: Option[Long],
     // joins with no full-scan regression. An oversized bucket (or a
     // row-level scan, which needs runtime filtering) declines and
     // takes the bin-packed layout.
-    val spj = SQLConf.get.v2BucketingEnabled && tracker.isEmpty &&
+    val spj = s.sessionState.conf.v2BucketingEnabled && tracker.isEmpty &&
       cleanFiles.forall(_._2.map(_._2).sum <=
         s.sessionState.conf.filesMaxPartitionBytes)
     val cleanParts =
@@ -501,10 +519,10 @@ private[catalog] final class GraftScan(dir: String, asOf: Option[Long],
     // the batch layout is positional.
     val columnar = folds.isEmpty && required.nonEmpty &&
       new ParquetFileFormat().supportBatch(s, required)
-    val totalBytes = totalClean +
-      foldFiles.flatMap(_._2).map(_._2).sum
+    val files = (flatClean ++ foldFiles.flatMap(_._2))
+      .map(f => (f._1, f._2))
     Planned(meta, kept, sigIdx.keys.toVector, cleanParts, folds,
-      columnar, totalBytes, spj)
+      columnar, spj, files)
   }
 
   override def planInputPartitions(): Array[InputPartition] =
@@ -563,8 +581,14 @@ private[catalog] final class GraftScan(dir: String, asOf: Option[Long],
         hadoopConf =
           new org.apache.hadoop.conf.Configuration(hadoopConf))
     }
-    val cleanReaders = p.epochSigs.indices
-      .map(e => readerFor(e, required, p.columnar)).toArray
+    // each reader family is built only when a planned partition uses
+    // it: every build broadcasts the session's Hadoop conf, and a
+    // point read on one dirty bucket needs the fold readers alone
+    val cleanReaders =
+      if (p.cleanParts.isEmpty)
+        Array.empty[PartitionedFile => Iterator[InternalRow]]
+      else p.epochSigs.indices
+        .map(e => readerFor(e, required, p.columnar)).toArray
     val foldSpec = if (p.foldParts.isEmpty) None else {
       // the fold needs the key/version/delete columns and the commit
       // sequence regardless of projection; winners project down after.
@@ -783,11 +807,22 @@ private[catalog] final case class GraftFoldSpec(family: String,
     // re-applies expire's predicate so a merge-on-read replay of a
     // pre-floor batch cannot resurrect retired history in catalog
     // reads (Scd2.dropExpired's native twin)
-    expiredBefore: Option[String] = None)
+    expiredBefore: Option[String] = None,
+    // rows (in `foldInput` layout) failing this never enter the fold;
+    // only a key predicate is fold-safe (every version of a key shares
+    // the key) — the driver point read's filter
+    prefilter: Option[BasePredicate] = None)
 
-private[catalog] final class GraftReaderFactory(columnar: Boolean,
+private[catalog] final class GraftReaderFactory(val columnar: Boolean,
     cleanReaders: Array[PartitionedFile => Iterator[InternalRow]],
-    foldSpec: Option[GraftFoldSpec]) extends PartitionReaderFactory {
+    val foldSpec: Option[GraftFoldSpec]) extends PartitionReaderFactory {
+
+  /** This factory with `f` filtering the fold input (see
+    * [[GraftFoldSpec.prefilter]]).
+    */
+  def withFoldPrefilter(f: BasePredicate): GraftReaderFactory =
+    new GraftReaderFactory(columnar, cleanReaders,
+      foldSpec.map(_.copy(prefilter = Some(f))))
 
   override def supportColumnarReads(partition: InputPartition): Boolean =
     columnar
@@ -797,7 +832,8 @@ private[catalog] final class GraftReaderFactory(columnar: Boolean,
     partition match {
       case f: GraftCleanPartition =>
         new GraftIteratorReader(
-          f.files.iterator.flatMap(cleanReaders(f.epoch)))
+          new GraftFileIterator(f.files.length,
+            i => cleanReaders(f.epoch)(f.files(i))))
       case f: GraftFoldPartition =>
         val spec = foldSpec.getOrElse(throw new IllegalStateException(
           "fold partition without a fold spec"))
@@ -814,10 +850,52 @@ private[catalog] final class GraftReaderFactory(columnar: Boolean,
         // yields ColumnarBatch values through the InternalRow-typed
         // iterator (Spark's own FileScanRDD relies on the same cast)
         new GraftColumnarReader(
-          f.files.iterator.flatMap(cleanReaders(f.epoch)))
+          new GraftFileIterator(f.files.length,
+            i => cleanReaders(f.epoch)(f.files(i))))
       case other => throw new IllegalStateException(
         s"columnar read of non-file partition $other")
     }
+}
+
+/** The rows of `files` in order, one file open at a time. Spark's
+  * file-format readers release a file's streams only when their
+  * iterator is exhausted or closed (`FileScanRDD` closes them for file
+  * source scans); a DSv2 reader has to do it itself. Each file's
+  * iterator is closed when the next file opens and by [[close]], so a
+  * vectorized parquet read that fails or stops early leaves no stream
+  * open. Only a closeable iterator can be closed: Spark's row-based
+  * parquet reader (vectorized reader off, or a schema it cannot batch)
+  * hands back a plain mapped iterator, whose file stays open until it
+  * is exhausted or collected. Generic so that a columnar reader's
+  * batches, typed as rows by the FileFormat contract, pass through
+  * uncast.
+  */
+private[catalog] final class GraftFileIterator[T](nFiles: Int,
+    open: Int => Iterator[T]) extends Iterator[T] with AutoCloseable {
+  private var i = 0
+  private var cur: Iterator[T] = Iterator.empty
+  override def hasNext: Boolean = {
+    while (!cur.hasNext) {
+      close()
+      if (i == nFiles) return false
+      cur = open(i)
+      i += 1
+    }
+    true
+  }
+  override def next(): T =
+    if (hasNext) cur.next() else Iterator.empty.next()
+  override def close(): Unit = {
+    GraftFileIterator.closeIfCloseable(cur)
+    cur = Iterator.empty
+  }
+}
+
+private[catalog] object GraftFileIterator {
+  def closeIfCloseable(it: Iterator[_]): Unit = it match {
+    case c: AutoCloseable => c.close()
+    case _ =>
+  }
 }
 
 private[catalog] final class GraftIteratorReader(
@@ -826,9 +904,7 @@ private[catalog] final class GraftIteratorReader(
   override def next(): Boolean =
     if (it.hasNext) { cur = it.next(); true } else false
   override def get(): InternalRow = cur
-  override def close(): Unit = () // file streams close via the task
-                                  // completion listener the FileFormat
-                                  // reader registers
+  override def close(): Unit = GraftFileIterator.closeIfCloseable(it)
 }
 
 private[catalog] final class GraftColumnarReader(
@@ -838,7 +914,7 @@ private[catalog] final class GraftColumnarReader(
     if (it.hasNext) { cur = it.next().asInstanceOf[ColumnarBatch]; true }
     else false
   override def get(): ColumnarBatch = cur
-  override def close(): Unit = ()
+  override def close(): Unit = GraftFileIterator.closeIfCloseable(it)
 }
 
 private[catalog] object GraftFold {
@@ -866,11 +942,18 @@ private[catalog] object GraftFold {
       case _ => foldMerge(spec, epochs, files)
     }
 
-  private def rows(spec: GraftFoldSpec, epochs: Array[Int],
-      files: Array[PartitionedFile]): Iterator[InternalRow] =
-    files.zip(epochs).iterator.flatMap { case (f, e) =>
-      spec.readers(e)(f)
-    }
+  /** Feed every fold input row passing `spec.prefilter` to `f`, with
+    * each file closed as soon as it is read, or on failure.
+    */
+  private def eachRow(spec: GraftFoldSpec, epochs: Array[Int],
+      files: Array[PartitionedFile])(f: InternalRow => Unit): Unit = {
+    val it = new GraftFileIterator(files.length,
+      i => spec.readers(epochs(i))(files(i)))
+    try spec.prefilter match {
+      case None => it.foreach(f)
+      case Some(p) => it.foreach(r => if (p.eval(r)) f(r))
+    } finally it.close()
+  }
 
   private def keyProjOf(spec: GraftFoldSpec): UnsafeProjection = {
     val in = spec.foldInput
@@ -904,7 +987,7 @@ private[catalog] object GraftFold {
     }
 
     val best = new java.util.HashMap[UnsafeRow, InternalRow]()
-    rows(spec, epochs, files).foreach { r =>
+    eachRow(spec, epochs, files) { r =>
       val k = keyProj(r)
       val inc = best.get(k)
       if (inc == null) best.put(k.copy(), r.copy())
@@ -935,7 +1018,7 @@ private[catalog] object GraftFold {
     // keeps the LATEST writer's record (_seq desc, null = base)
     val byKey = new java.util.HashMap[UnsafeRow,
       java.util.HashMap[Any, (Long, InternalRow)]]()
-    rows(spec, epochs, files).foreach { raw =>
+    eachRow(spec, epochs, files) { raw =>
       val r = raw.copy() // versions index into the row's buffer
       val k = keyProj(r)
       var inner = byKey.get(k)
@@ -1022,7 +1105,7 @@ private[catalog] object GraftFold {
         var total: java.math.BigDecimal, var nncnt: Long,
         row: InternalRow)
     val sums = new java.util.HashMap[UnsafeRow, Acc]()
-    rows(spec, epochs, files).foreach { raw =>
+    eachRow(spec, epochs, files) { raw =>
       val k = keyProj(raw)
       val c = raw.getLong(cntIdx)
       val t = if (raw.isNullAt(totIdx)) null
@@ -1155,15 +1238,8 @@ private[catalog] object GraftPrune {
     * ([[graft.cdc.Bucketing]]: `pmod(xxhash64(keys…), n)`), folded on
     * already-internal Catalyst literals driver-side.
     */
-  private def bucketOfLits(ls: Seq[Literal], nBuckets: Int): Int = {
-    import org.apache.spark.sql.catalyst.expressions.{Pmod, XxHash64}
-    import org.apache.spark.sql.types.IntegerType
-    Cast(Pmod(new XxHash64(ls), Literal(nBuckets.toLong, LongType)),
-      IntegerType).eval().asInstanceOf[Int]
-  }
-
   private def bucketOf(meta: ScanMeta, l: Literal): Int =
-    bucketOfLits(Seq(l), meta.nBuckets)
+    Bucketing.bucketOfLiterals(Seq(l), meta.nBuckets)
 
   /** True iff the stored stringified stat, cast back to the column's
     * type, satisfies `op(stat, lit)` — missing stat or null/failed
@@ -1433,7 +1509,7 @@ private[catalog] object GraftPrune {
     }
     def litBucket(e: VExpr): Option[Int] = e match {
       case l: VLit[_] if l.dataType == keyType && l.value != null =>
-        Some(bucketOfLits(Seq(Literal(l.value, l.dataType)),
+        Some(Bucketing.bucketOfLiterals(Seq(Literal(l.value, l.dataType)),
           meta.nBuckets))
       case _ => None
     }
@@ -1545,7 +1621,7 @@ private[catalog] object GraftPrune {
         for (h <- head.toSeq; t <- cross(tail)) yield h +: t
     }
     Some(cross(sets).map(tuple =>
-      bucketOfLits(tuple, meta.nBuckets)).toSet)
+      Bucketing.bucketOfLiterals(tuple, meta.nBuckets)).toSet)
   }
 
   /** Composite-key point pruning: conjuncts binding EVERY key column
@@ -1569,7 +1645,7 @@ private[catalog] object GraftPrune {
         case _ => None
       }.toMap
     if (meta.keys.forall(k => bindings.contains(k.toLowerCase)))
-      Some(Set(bucketOfLits(
+      Some(Set(Bucketing.bucketOfLiterals(
         meta.keys.map(k => bindings(k.toLowerCase)), meta.nBuckets)))
     else None
   }

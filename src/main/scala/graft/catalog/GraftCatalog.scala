@@ -1135,7 +1135,7 @@ final class GraftTable(tableName: String, val dir: String,
 
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(dir, asOf, schema(), None, options)
+    new GraftScanBuilder(spark, dir, asOf, schema(), None, options)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(asOf.isEmpty, "cannot write to a time-travel (AS OF) table")
@@ -1165,8 +1165,8 @@ final class GraftTable(tableName: String, val dir: String,
   * post-scan (Spark re-applies it above), so pushdown is purely a
   * data reduction, never a correctness dependency.
   */
-private[catalog] final class GraftScanBuilder(dir: String,
-    asOf: Option[Long], tableSchema: StructType,
+private[catalog] final class GraftScanBuilder(spark: SparkSession,
+    dir: String, asOf: Option[Long], tableSchema: StructType,
     tracker: Option[GraftRowTracker] = None,
     options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
     extends ScanBuilder
@@ -1220,7 +1220,7 @@ private[catalog] final class GraftScanBuilder(dir: String,
     if (tracker.isDefined) return None // row-level scans read rows
     if (pushed.nonEmpty || agg.groupByExpressions.nonEmpty ||
         agg.aggregateExpressions.isEmpty) return None
-    val meta = try ScanMeta.load(SparkSession.active, dir, asOf)
+    val meta = try ScanMeta.load(spark, dir, asOf)
       catch { case scala.util.control.NonFatal(_) => return None }
     if (meta.dirty.nonEmpty) return None // fold outcome needs a read
     val live = meta.buckets.keySet.toSeq
@@ -1317,8 +1317,8 @@ private[catalog] final class GraftScanBuilder(dir: String,
 
   override def build(): Scan = aggStats match {
     case Some((schema, values)) => new GraftStatsScan(dir, schema, values)
-    case None => new GraftScan(dir, asOf, required, pushed, tracker,
-      options)
+    case None => new GraftScan(spark, dir, asOf, required, pushed,
+      tracker, options)
   }
 }
 
@@ -1390,7 +1390,7 @@ final class GraftReadOnlyTable(tableName: String, val dir: String,
 
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(dir, None, schema())
+    new GraftScanBuilder(spark, dir, None, schema())
 }
 
 /** INSERT INTO = one upsert merge; INSERT OVERWRITE (truncate) = full

@@ -53,14 +53,15 @@ private[catalog] final class GraftRowLevelOperation(dir: String,
 
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder = {
+    val spark = SparkSession.active
     val schema = {
-      val props = TxLog.latest(SparkSession.active, dir).getOrElse(
+      val props = TxLog.latest(spark, dir).getOrElse(
         throw new IllegalArgumentException(
           s"no committed manifest under $dir")).props
       org.apache.spark.sql.types.DataType.fromJson(props("schema_json"))
         .asInstanceOf[StructType]
     }
-    new GraftScanBuilder(dir, None, schema, Some(tracker))
+    new GraftScanBuilder(spark, dir, None, schema, Some(tracker))
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {

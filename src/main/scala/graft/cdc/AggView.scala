@@ -227,16 +227,17 @@ object AggView {
     }
     require(vals.size == keys.size,
       s"key tuple arity ${vals.size} != view key (${keys.mkString(", ")})")
-    val bucket = Bucketing.bucketOfValues(vals, nBuckets)
+    val schema = schemaOf(s)
+    val lits = Bucketing.keyLiterals(schema, keys, vals,
+      spark.sessionState.conf.sessionLocalTimeZone)
+    val bucket = Bucketing.bucketOfLiterals(lits, nBuckets)
     val rels = s.buckets.get(bucket).toSeq ++
       s.deltas.getOrElse(bucket, Nil)
-    val schema = schemaOf(s)
     val base = readPaths(spark, schema,
       rels.map(rel => s"$dir/data/$rel"))
     val one = if (s.deltas.contains(bucket))
       foldPartials(base, keys) else base
-    one.filter(keys.zip(vals).map { case (k, v) => col(k) === lit(v) }
-      .reduce(_ && _))
+    one.filter(Bucketing.keyPredicate(keys, Seq(lits)))
   }
 
   /** Resize the view's bucket count in ONE committed full rewrite —

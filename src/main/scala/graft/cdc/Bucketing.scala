@@ -1,7 +1,11 @@
 package graft.cdc
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EqualNullSafe, Literal, Pmod, XxHash64}
+import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** THE bucketing function of the maintained-table family. One copy on
   * purpose: Compaction, Scd2 and AggView all derive partition
@@ -24,18 +28,62 @@ private[graft] object Bucketing {
   /** The bucket a tuple of literal key values hashes into, folded
     * DRIVER-side through the same Catalyst `xxhash64` expression
     * [[bucketOf]] partitions by — point lookups pay zero Spark jobs
-    * for the constant.
+    * for the constant. The literals hash as typed: user-supplied values
+    * go through [[keyLiterals]] first, because `xxhash64` of an Int and
+    * of the equal Long differ.
     */
-  def bucketOfValues(vs: Seq[Any], nBuckets: Int): Int = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Pmod, XxHash64}
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    Cast(Pmod(new XxHash64(vs.map(Literal(_))),
-      Literal(nBuckets.toLong, LongType)), IntegerType)
-      .eval().asInstanceOf[Int]
-  }
+  def bucketOfLiterals(ls: Seq[Literal], nBuckets: Int): Int =
+    Cast(Pmod(new XxHash64(ls), Literal(nBuckets.toLong, LongType)),
+      IntegerType).eval().asInstanceOf[Int]
 
-  def bucketOfValue(v: Any, nBuckets: Int): Int =
-    bucketOfValues(Seq(v), nBuckets)
+  /** A user-supplied key tuple as literals of the key columns' own
+    * types — what both the bucket hash and the equality predicate of a
+    * point read must see. `7` against a bigint key becomes `7L`; a
+    * value the cast cannot carry over unchanged (`7.5` or `"abc"` on a
+    * bigint key, an int overflow) is refused rather than hashed to a
+    * bucket the key was never written to. A null value stays null: it
+    * equals no key.
+    */
+  def keyLiterals(schema: StructType, keys: Seq[String], vals: Seq[Any],
+      timeZone: String): Seq[Literal] =
+    keys.zip(vals).map { case (k, v) =>
+      val dt = schema.fields.find(_.name.equalsIgnoreCase(k))
+        .getOrElse(throw new IllegalArgumentException(
+          s"key column '$k' is not in the table schema")).dataType
+      def refuse(why: String) = throw new IllegalArgumentException(
+        s"lookup value $v (${v.getClass.getSimpleName}) for key column " +
+          s"'$k' of type ${dt.sql} $why")
+      val given = try Literal(v) catch {
+        case NonFatal(e) => refuse(s"is not a SQL value: ${e.getMessage}")
+      }
+      if (v == null || given.dataType == dt) Literal(given.value, dt)
+      else {
+        val tz = Some(timeZone)
+        val cast = try Cast(given, dt, tz).eval() catch {
+          case NonFatal(e) => refuse(s"does not cast: ${e.getMessage}")
+        }
+        if (cast == null) refuse("casts to NULL")
+        val back = try Cast(Literal(cast, dt), given.dataType, tz).eval()
+          catch { case NonFatal(_) => null }
+        val same = back != null &&
+          EqualNullSafe(Literal(back, given.dataType), given)
+            .eval().asInstanceOf[Boolean]
+        if (!same) refuse(s"changes value when cast (to ${Literal(cast, dt)})")
+        Literal(cast, dt)
+      }
+    }
+
+  /** `keys` equal to any one of `tuples` ([[keyLiterals]] output), as
+    * a Column predicate: an IN list for a single key.
+    */
+  def keyPredicate(keys: Seq[String], tuples: Seq[Seq[Literal]]): Column =
+    if (tuples.isEmpty) lit(false)
+    else if (keys.size == 1)
+      col(keys.head).isin(tuples.map(t => GraftBridge.columnOf(t.head)): _*)
+    else tuples.map(t => keys.zip(t)
+        .map { case (k, l) => col(k) === GraftBridge.columnOf(l) }
+        .reduce(_ && _))
+      .reduce(_ || _)
 
   /** Manifest encoding of the key column list (comma-joined — init
     * rejects commas in key names so the round-trip is unambiguous).

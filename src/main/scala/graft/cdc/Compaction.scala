@@ -1453,26 +1453,26 @@ object Compaction {
   }
 
   /** Point lookup by key: the bucket function pins WHICH single bucket
-    * directory can hold the key, the manifest maps it to its one
-    * directory, and only that directory's files are opened — O(1
-    * bucket) regardless of table size, the maintained-table analog of
-    * the reference's indexed primary-key lookup. Keys hashing to a
-    * bucket absent from the map (all its rows deleted, or never
-    * present) return an empty frame without touching storage. The
-    * equality predicate still applies WITHIN the bucket (a bucket
-    * holds many keys), pushed to the parquet reader.
+    * directory can hold the key, the manifest maps it to its
+    * directories, and only those files are opened — O(1 bucket)
+    * regardless of table size, the maintained-table analog of the
+    * reference's indexed primary-key lookup. The value is cast to the
+    * key column's type first (`7` finds the bigint key `7L`); a value
+    * the cast would change or null out is refused with an
+    * IllegalArgumentException.
+    *
+    * The read is EAGER and runs no Spark job: the catalog scan plans
+    * the pinned bucket (delta chains, renamed columns, `_tp` leaves and
+    * the retention floor included), and its files are read and folded
+    * on the calling thread, filtered to the key, before this returns.
+    * So the frame holds the snapshot resolved at `lookup()` time, its
+    * `collect()` runs no job, and `inputFiles` names the files read.
+    * Rows are filtered to the key before the fold, so the driver holds
+    * only that key's versions. Keys hashing to a bucket absent from
+    * the map return an empty frame without touching storage.
     */
-  def lookup(spark: SparkSession, dir: String, keyValue: Any): DataFrame = {
-    val m = loadMeta(spark, dir)
-    val vals = tupleOf(m, keyValue)
-    val bucket = Bucketing.bucketOfValues(vals, m.nBuckets)
-    // on a dirty bucket the equality predicate is on the fold's window
-    // PARTITION key, so Catalyst pushes it below the window to the
-    // scan — the lookup reconciles only the looked-up key's rows
-    liveView(spark, dir, m, Set(bucket))
-      .drop("bucket")
-      .filter(keyPred(m, vals))
-  }
+  def lookup(spark: SparkSession, dir: String, keyValue: Any): DataFrame =
+    pointRead(spark, dir, Seq(keyValue))
 
   /** A lookup argument for a composite-key table is the key TUPLE as a
     * Seq in declared key order; single-key tables take the bare value
@@ -1488,29 +1488,23 @@ object Compaction {
     vals
   }
 
-  private def keyPred(m: Meta, vals: Seq[Any]): org.apache.spark.sql.Column =
-    m.keys.zip(vals).map { case (k, v) => col(k) === lit(v) }
-      .reduce(_ && _)
-
-  /** Multi-key point lookup: ONE pruned scan over the distinct buckets
-    * the keys hash into (≤ |keys| directories regardless of table
-    * size) with the IN-predicate pushed into their files — the batch
-    * form of [[lookup]], equivalent to the SQL `key IN (…)` path
+  /** Multi-key point lookup over the distinct buckets the keys hash
+    * into (≤ |keys| directories regardless of table size) — the batch
+    * form of [[lookup]], with the same casting and eager zero-job
+    * read, equivalent to the SQL `key IN (…)` path
     * [[graft.plans.MergePruning]] serves.
     */
   def lookupMany(spark: SparkSession, dir: String,
+      keyValues: Seq[Any]): DataFrame =
+    pointRead(spark, dir, keyValues)
+
+  private def pointRead(spark: SparkSession, dir: String,
       keyValues: Seq[Any]): DataFrame = {
     val m = loadMeta(spark, dir)
-    if (keyValues.isEmpty)
-      return readBuckets(spark, dir, m, Nil).drop("bucket")
-    val tuples = keyValues.map(v => tupleOf(m, v))
-    val buckets = tuples.map(t => Bucketing.bucketOfValues(t, m.nBuckets)).toSet
-    val pred =
-      if (m.keys.size == 1) col(m.keys.head).isin(tuples.map(_.head): _*)
-      else tuples.map(t => keyPred(m, t)).reduce(_ || _)
-    liveView(spark, dir, m, buckets)
-      .drop("bucket")
-      .filter(pred)
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val tuples = keyValues.map(v =>
+      Bucketing.keyLiterals(m.schema, m.keys, tupleOf(m, v), tz))
+    graft.catalog.GraftPointRead.read(spark, dir, m.snap, m.schema, tuples)
   }
 
   /** Incremental scan with zone-map pruning: live rows whose version

@@ -323,11 +323,12 @@ object Scd2 {
     }
     require(vals.size == m.keys.size,
       s"key tuple arity ${vals.size} != table key (${m.keys.mkString(", ")})")
-    val bucket = Bucketing.bucketOfValues(vals, m.nBuckets)
+    val lits = Bucketing.keyLiterals(m.schema, m.keys, vals,
+      spark.sessionState.conf.sessionLocalTimeZone)
+    val bucket = Bucketing.bucketOfLiterals(lits, m.nBuckets)
     liveView(spark, dir, m, Set(bucket).intersect(m.liveIds))
       .drop("bucket")
-      .filter(m.keys.zip(vals).map { case (k, v) => col(k) === lit(v) }
-        .reduce(_ && _))
+      .filter(Bucketing.keyPredicate(m.keys, Seq(lits)))
   }
 
   /** The pruned slice a merge of `touched` buckets reads — factored out

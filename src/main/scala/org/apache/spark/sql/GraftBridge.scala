@@ -20,4 +20,10 @@ object GraftBridge {
 
   /** The analyzed logical plan backing a Dataset. */
   def planOf(df: Dataset[_]): LogicalPlan = df.queryExecution.analyzed
+
+  /** `schema` with every field, nested ones included, nullable — the
+    * schema Spark's own file sources read under.
+    */
+  def asNullable(schema: types.StructType): types.StructType =
+    schema.asNullable
 }

@@ -31,6 +31,14 @@ abstract class SparkSpec extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** The bucket of `nBuckets` a key tuple hashes into. The values hash
+    * as given, so pass them typed as the key columns (`7L` for a bigint
+    * key): `xxhash64` of an Int and of the equal Long differ.
+    */
+  def keyBucket(key: Seq[Any], nBuckets: Int): Int =
+    graft.cdc.Bucketing.bucketOfLiterals(
+      key.map(org.apache.spark.sql.catalyst.expressions.Literal(_)), nBuckets)
+
   /** Run `body` and count the Spark jobs it starts, by a job tag unique
     * to this call so that jobs from other threads are not counted.
     */

@@ -75,7 +75,7 @@ class GraftBatchScanSpec extends SparkSpec {
         case _ => Array.empty[String]
       }
     // the one bucket dir the programmatic lookup opens
-    val bucket = graft.cdc.Bucketing.bucketOfValue(7L, 16)
+    val bucket = keyBucket(Seq(7L), 16)
     val expectDir = Compaction.livePaths(spark, dir)(bucket)
     assert(files.nonEmpty && files.forall(_.contains(s"bucket=$bucket")),
       s"files $files should all be under bucket=$bucket")
@@ -180,9 +180,36 @@ class GraftBatchScanSpec extends SparkSpec {
       .as[String].head() == "after")
   }
 
+  test("a scan plans under the session it is given, not the thread's " +
+      "active session") {
+    val dir = mkTable("t10", 200, 16)
+    def session(keyed: Boolean): org.apache.spark.sql.SparkSession = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.sources.v2.bucketing.enabled", keyed.toString)
+      s
+    }
+    val (keyed, binned) = (session(keyed = true), session(keyed = false))
+    def parts(caller: org.apache.spark.sql.SparkSession,
+        active: org.apache.spark.sql.SparkSession): Int = {
+      val prev = org.apache.spark.sql.SparkSession.getActiveSession
+      org.apache.spark.sql.SparkSession.setActiveSession(active)
+      try new GraftScan(caller, dir, None,
+          org.apache.spark.sql.types.StructType(Seq()), Array.empty)
+        .planInputPartitions().length
+      finally prev match {
+        case Some(p) => org.apache.spark.sql.SparkSession.setActiveSession(p)
+        case None => org.apache.spark.sql.SparkSession.clearActiveSession()
+      }
+    }
+    // bucket-keyed: one partition per bucket; bin-packed: the sixteen
+    // small files share fewer
+    assert(parts(keyed, binned) == 16)
+    assert(parts(binned, keyed) < 16)
+  }
+
   test("statistics: rows from manifest, size from pruned listing") {
     mkTable("t7", 300, 4)
-    val scan = new GraftScan(s"$warehouse/t7", None,
+    val scan = new GraftScan(spark, s"$warehouse/t7", None,
       org.apache.spark.sql.types.StructType(Seq()), Array.empty)
     val stats = scan.estimateStatistics()
     assert(stats.numRows().getAsLong == 300L)

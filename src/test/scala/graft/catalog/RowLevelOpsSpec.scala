@@ -45,7 +45,7 @@ class RowLevelOpsSpec extends SparkSpec {
     // only id=7's bucket was rewritten: every other bucket's directory
     // is the SAME rel path as before (group replace, not full rewrite)
     val after = TxLog.latest(spark, dir).get.buckets
-    val touched = graft.cdc.Bucketing.bucketOfValue(7L, 16)
+    val touched = keyBucket(Seq(7L), 16)
     assert(after(touched) != before(touched))
     assert((before - touched).forall { case (b, rel) =>
       after.get(b).contains(rel)
@@ -124,7 +124,7 @@ class RowLevelOpsSpec extends SparkSpec {
       .toDF("id", "name", "version", "deleted")
     val e = intercept[TxLog.StaleBase] {
       Compaction.replaceBuckets(spark, dir, replacement,
-        Set(graft.cdc.Bucketing.bucketOfValue(0L, 4)), v)
+        Set(keyBucket(Seq(0L), 4)), v)
     }
     assert(e.getMessage.contains("re-run"))
     // the rival's write survived
@@ -143,7 +143,7 @@ class RowLevelOpsSpec extends SparkSpec {
     sqlc("DELETE FROM grlo.mor WHERE id = 1")
     val got = sqlc("SELECT id FROM grlo.mor").as[Long].collect().toSet
     assert(got.size == 59 && !got.contains(1L))
-    val touched = graft.cdc.Bucketing.bucketOfValue(1L, 8)
+    val touched = keyBucket(Seq(1L), 8)
     assert(!TxLog.latest(spark, dir).get.deltas.contains(touched))
   }
 }

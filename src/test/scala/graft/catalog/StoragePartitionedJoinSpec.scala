@@ -129,7 +129,7 @@ class StoragePartitionedJoinSpec extends SparkSpec {
       val viaFn = fn.produceResult(
         new org.apache.spark.sql.catalyst.expressions
           .GenericInternalRow(Array[Any](n, id)))
-      assert(viaFn == graft.cdc.Bucketing.bucketOfValue(id, n),
+      assert(viaFn == keyBucket(Seq(id), n),
         s"id=$id n=$n")
     }
   }

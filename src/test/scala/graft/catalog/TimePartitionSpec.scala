@@ -217,7 +217,7 @@ class TimePartitionSpec extends SparkSpec {
   test("merge-on-read retirement folds ONLY the buckets holding doomed " +
       "partitions; untouched delta chains stay byte-intact") {
     val dir = tmpDir("tpart3")
-    val bucketOf = (k: Long) => graft.cdc.Bucketing.bucketOfValues(Seq(k), 4)
+    val bucketOf = (k: Long) => keyBucket(Seq(k), 4)
     // every seed row lives ABOVE the cut (day >= 10) except key 1's
     // v0 at day 2 (superseded below) and key 3's at day 3 (a live row
     // retention genuinely retires)

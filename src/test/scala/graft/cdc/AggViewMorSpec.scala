@@ -88,7 +88,7 @@ class AggViewMorSpec extends SparkSpec {
     assert(state(dir)("c") == ((2L, BigDecimal("4.00"))))
     // every chain that CoW merge touched folded; others may remain
     val dirtyAfter = AggView.deltaStats(spark, dir).map(_._1).toSet
-    val cBucket = Bucketing.bucketOfValues(Seq("c"), 4)
+    val cBucket = keyBucket(Seq("c"), 4)
     assert(!dirtyAfter.contains(cBucket))
     // compact clears the rest; state unchanged
     AggView.compact(spark, dir)

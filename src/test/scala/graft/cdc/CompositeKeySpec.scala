@@ -161,7 +161,7 @@ class CompositeKeySpec extends SparkSpec {
     val q = spark.sql(
       "SELECT payload FROM ck_users WHERE tenant = 't1' AND id = 7")
     assert(q.as[String].collect().toSeq == Seq("t1-7-v0"))
-    val expectBucket = Bucketing.bucketOfValues(Seq("t1", 7L), 8)
+    val expectBucket = keyBucket(Seq("t1", 7L), 8)
     val opened = q.inputFiles.toSet
     assert(opened.nonEmpty &&
       opened.forall(_.contains(s"/bucket=$expectBucket/")),

@@ -132,8 +132,8 @@ class MergeOnReadSpec extends SparkSpec {
     val dir = tmpDir("mor-partial") + "/t"
     mkTable(dir, n = 200)
     // key 7's bucket absorbs TWO deltas; key 9's bucket only one
-    val b7 = Bucketing.bucketOfValue(7L, 16)
-    val b9 = Bucketing.bucketOfValue(9L, 16)
+    val b7 = keyBucket(Seq(7L), 16)
+    val b9 = keyBucket(Seq(9L), 16)
     assert(b7 != b9, "test wants distinct buckets")
     Compaction.merge(spark, dir,
       Seq((7L, "a", 1L, false), (9L, "x", 1L, false))
@@ -170,7 +170,7 @@ class MergeOnReadSpec extends SparkSpec {
     // file-exact pruning: only the delta-carrying buckets' files open
     // (base maxv=0 fails the >0 probe everywhere; dmaxv=1 passes)
     val dirtyBuckets = Set(5L, 6L).map(k =>
-      Bucketing.bucketOfValue(k, 16))
+      keyBucket(Seq(k), 16))
     // inputFiles returns file:// URIs — compare on the manifest-
     // relative directory fragment
     val opened = changed.inputFiles.toSet
@@ -213,7 +213,7 @@ class MergeOnReadSpec extends SparkSpec {
     Compaction.merge(spark, dir,
       Seq((7L, "mor7", 1L, false)).toDF("id", "name", "version", "deleted"),
       mergeOnRead = true)
-    val dirtyB = Bucketing.bucketOfValue(7L, 16)
+    val dirtyB = keyBucket(Seq(7L), 16)
     assert(Compaction.deltaStats(spark, dir).map(_._1).contains(dirtyB))
     // CoW merge touching the SAME bucket (key 7 again) compacts it
     Compaction.merge(spark, dir,

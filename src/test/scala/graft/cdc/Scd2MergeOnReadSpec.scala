@@ -125,8 +125,8 @@ class Scd2MergeOnReadSpec extends SparkSpec {
     val dir = tmpDir("scd2mor-partial") + "/t"
     Scd2.init(changelog(Seq((1L, "a", 0L, false), (2L, "x", 0L, false))),
       dir, "id", "version", "deleted", nBuckets = 4)
-    val b1 = Bucketing.bucketOfValues(Seq(1L), 4)
-    val b2 = Bucketing.bucketOfValues(Seq(2L), 4)
+    val b1 = keyBucket(Seq(1L), 4)
+    val b2 = keyBucket(Seq(2L), 4)
     assume(b1 != b2)
     // key 1 absorbs two deltas, key 2 one
     Scd2.merge(spark, dir, changelog(Seq((1L, "b", 1L, false))),
@@ -152,8 +152,8 @@ class Scd2MergeOnReadSpec extends SparkSpec {
       "id", "version", "deleted", nBuckets = 4)
     // a key landing in a bucket with NO base entry
     val other = (2L to 50L).find(k =>
-      Bucketing.bucketOfValues(Seq(k), 4) !=
-        Bucketing.bucketOfValues(Seq(1L), 4)).get
+      keyBucket(Seq(k), 4) !=
+        keyBucket(Seq(1L), 4)).get
     Scd2.merge(spark, dir, changelog(Seq((other, "n", 0L, false))),
       mergeOnRead = true)
     assert(Scd2.lookup(spark, dir, other).count() == 1)

@@ -390,7 +390,7 @@ class MergePruningSpec extends SparkSpec {
     // the prune is still live AND sound: clean buckets' leaves stay
     // within the queried days, while the dirty bucket (key 7's) keeps
     // its full history — including the out-of-range day-18 delta leaf
-    val dirtyBucket = graft.cdc.Bucketing.bucketOfValues(Seq(7L), 8)
+    val dirtyBucket = keyBucket(Seq(7L), 8)
     val all = spark.sql("SELECT id FROM mp_tp_dirty")
     val (dirtyLeaves, cleanLeaves) = scanDirs(df).partition(
       _.contains(s"/bucket=$dirtyBucket/"))

@@ -20,7 +20,11 @@ change's median is worse than the parent's by more than the bound,
 (unless every change run beats every parent run), else "within bound";
 "gain" marks a change that won at least 9 in 10 pairs by a median gap
 larger than the parent's interquartile range. Failed operations are
-summed per side; a run that exits non-zero is recorded and reported.
+summed per side; when the change's share of failed operations over
+attempted ones is above the parent's, every metric's verdict is "more
+failed ops", whatever the metric shows, because a benchmark run with more
+failures does not count. A run that exits non-zero is recorded and
+reported.
 """
 
 import argparse
@@ -98,10 +102,16 @@ def report(records, metrics):
         broken = sum("error" in v for s in seeds.values() for v in s.values())
         failed = {side: sum(v[side]["failed"] for v in pairs.values())
                   for side in ("parent", "change")}
-        print("\n%s: %d pairs (seeds %s), failed ops parent %d change %d, "
+        attempted = {side: sum(v[side].get("attempted", 0) for v in pairs.values())
+                     for side in ("parent", "change")}
+        share = {side: failed[side] / attempted[side] if attempted[side] else 0.0
+                 for side in ("parent", "change")}
+        more_failed = share["change"] > share["parent"]
+        print("\n%s: %d pairs (seeds %s), failed ops parent %d/%d change %d/%d, "
               "runs that did not finish %d" % (
                   workload, len(pairs), ",".join(map(str, sorted(pairs))),
-                  failed["parent"], failed["change"], broken))
+                  failed["parent"], attempted["parent"],
+                  failed["change"], attempted["change"], broken))
         print("| metric | parent median [q1, q3] | change median [q1, q3] "
               "| median change | change wins | verdict |")
         print("|---|---|---|---|---|---|")
@@ -123,7 +133,10 @@ def report(records, metrics):
             rel = (cm - pm) / pm if pm else 0.0
             worse = rel if lower else -rel
             verdict = ""
-            if wins >= 0.9 * len(pairs) and abs(cm - pm) > piqr:
+            if more_failed:
+                verdict = "more failed ops (%.2f%% vs %.2f%%)" % (
+                    100 * share["change"], 100 * share["parent"])
+            elif wins >= 0.9 * len(pairs) and abs(cm - pm) > piqr:
                 verdict = "gain"
             elif "bound" in m:
                 spread = piqr / abs(pm) if pm else 0.0
