@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, Decimal, DecimalType, LongType, StructField, StructType}
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -931,8 +931,9 @@ private[catalog] object GraftFold {
     *    interval re-derivation (valid_to = next version, is_current =
     *    open ∧ not tombstone) — the reader-side form of Scd2's
     *    window;
-    *  - aggview: per-key partial summation (cnt, total), zero-count
-    *    keys leave the view.
+    *  - aggview: per-key partial summation (cnt, total, nncnt) and,
+    *    on a min/max view, min-of-mins / max-of-maxes (vmin, vmax);
+    *    zero-count keys leave the view.
     */
   def fold(spec: GraftFoldSpec, epochs: Array[Int],
       files: Array[PartitionedFile]): Iterator[InternalRow] =
@@ -1095,15 +1096,24 @@ private[catalog] object GraftFold {
     val cntIdx = in.fieldIndex("cnt")
     val totIdx = in.fieldIndex("total")
     val nnIdx = in.fieldIndex("nncnt")
-    val totType = in.fields(totIdx).dataType
-      .asInstanceOf[org.apache.spark.sql.types.DecimalType]
+    val totType = in.fields(totIdx).dataType.asInstanceOf[DecimalType]
+    // a min/max view's extremes, when the scan reads them
+    val minIdx = in.fieldNames.indexOf("vmin")
+    val maxIdx = in.fieldNames.indexOf("vmax")
+    def extreme(r: InternalRow, i: Int): Decimal =
+      if (i < 0 || r.isNullAt(i)) null
+      else {
+        val t = in.fields(i).dataType.asInstanceOf[DecimalType]
+        r.getDecimal(i, t.precision, t.scale)
+      }
     val keyProj = keyProjOf(spec)
 
-    // key -> (sum cnt, sum total, sum nncnt, a representative row for
-    // key values)
+    // key -> (sum cnt, sum total, sum nncnt, min vmin, max vmax, a
+    // representative row for key values); null extremes are skipped,
+    // as Spark's min/max skip them in AggView.foldPartials
     final case class Acc(var cnt: Long,
         var total: java.math.BigDecimal, var nncnt: Long,
-        row: InternalRow)
+        var vmin: Decimal, var vmax: Decimal, row: InternalRow)
     val sums = new java.util.HashMap[UnsafeRow, Acc]()
     eachRow(spec, epochs, files) { raw =>
       val k = keyProj(raw)
@@ -1112,13 +1122,17 @@ private[catalog] object GraftFold {
         else raw.getDecimal(totIdx, totType.precision, totType.scale)
           .toJavaBigDecimal
       val nn = raw.getLong(nnIdx)
+      val lo = extreme(raw, minIdx)
+      val hi = extreme(raw, maxIdx)
       val acc = sums.get(k)
-      if (acc == null) sums.put(k.copy(), Acc(c, t, nn, raw.copy()))
+      if (acc == null) sums.put(k.copy(), Acc(c, t, nn, lo, hi, raw.copy()))
       else {
         acc.cnt += c
         if (t != null)
           acc.total = if (acc.total == null) t else acc.total.add(t)
         acc.nncnt += nn
+        if (lo != null && (acc.vmin == null || lo < acc.vmin)) acc.vmin = lo
+        if (hi != null && (acc.vmax == null || hi > acc.vmax)) acc.vmax = hi
       }
     }
     val outExprs = spec.required.fields.map(f =>
@@ -1137,9 +1151,10 @@ private[catalog] object GraftFold {
             if (j == cntIdx) acc.cnt
             else if (j == totIdx) {
               if (acc.total == null) null
-              else org.apache.spark.sql.types.Decimal(acc.total,
-                totType.precision, totType.scale)
+              else Decimal(acc.total, totType.precision, totType.scale)
             } else if (j == nnIdx) acc.nncnt
+            else if (j == minIdx) acc.vmin
+            else if (j == maxIdx) acc.vmax
             else if (acc.row.isNullAt(j)) null
             else acc.row.get(j, in.fields(j).dataType))
           j += 1

@@ -31,27 +31,38 @@ private[graft] class GraftPointRelation(output: Seq[Attribute],
   override protected def otherCopyArgs: Seq[AnyRef] = Seq(files)
 }
 
-/** Driver-local point read of a merge table: the catalog scan
-  * ([[GraftScan]]) plans the pinned buckets, exactly as it would for a
-  * SQL point select, and the planned partitions are then read and
-  * folded on the calling thread instead of in a Spark job. Rows are
-  * filtered to the looked-up keys before the fold. Key equality is
-  * fold-safe, because every version of a key carries the key, so
-  * driver memory stays at the versions of those keys. The result is a
+/** Driver-local point read of a maintained table of any kind (merge,
+  * scd2, aggview): the catalog scan ([[GraftScan]]) plans the pinned
+  * buckets, exactly as it would for a SQL point select, and the
+  * planned partitions are then read and folded ([[GraftFold]]) on the
+  * calling thread instead of in a Spark job. Rows are filtered to the
+  * looked-up keys before the fold. Key equality is fold-safe, because
+  * every row a key folds from carries the key, so driver memory stays
+  * at those keys' rows. The result is a
   * [[GraftPointRelation]] holding the rows already read: collecting it
   * runs no Spark job and analyzes no fold plan.
   */
 private[graft] object GraftPointRead {
 
-  /** The live rows of `tuples` (key literals typed as the key columns,
-    * in `snap`'s key order), read from the buckets they hash into,
-    * planned and read under `spark`'s confs.
+  /** The live rows of `keyValues`, read from the buckets they hash
+    * into, planned and read under `spark`'s confs. A key value is the
+    * bare value on a single-key table, or the key TUPLE as a Seq in
+    * `snap`'s key order (a Seq of one also works); each is cast to the
+    * key columns' types in `schema` ([[Bucketing.keyLiterals]]).
     */
   def read(spark: SparkSession, dir: String, snap: TxLog.Snapshot,
-      schema: StructType, tuples: Seq[Seq[Literal]]): DataFrame = {
+      schema: StructType, keyValues: Seq[Any]): DataFrame = {
     val meta = ScanMeta.of(dir, snap, schema)
-    require(meta.family == "merge",
-      s"$dir is a ${meta.family} table; point lookups read merge tables")
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val tuples = keyValues.map { v =>
+      val vals = v match {
+        case s: Seq[_] => s.toSeq
+        case x => Seq(x)
+      }
+      require(vals.size == meta.keys.size, s"key tuple arity ${vals.size} " +
+        s"!= table key (${meta.keys.mkString(", ")})")
+      Bucketing.keyLiterals(schema, meta.keys, vals, tz)
+    }
     // a null key value equals no key
     val wanted = tuples.filterNot(_.exists(_.value == null))
     val scan = new GraftScan(spark, dir, None, schema,

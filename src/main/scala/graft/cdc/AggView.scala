@@ -118,8 +118,7 @@ object AggView {
   }
 
   private def snap(spark: SparkSession, dir: String): TxLog.Snapshot = {
-    val s = TxLog.latest(spark, dir).getOrElse(throw new
-      IllegalArgumentException(s"no committed manifest under $dir"))
+    val s = Compaction.latestSnap(spark, dir)
     // format fence (r12): a view whose state predates the nncnt
     // partial cannot serve it, and silently reading/merging would
     // corrupt the stored schema — refuse loudly, naming the upgrade
@@ -151,12 +150,6 @@ object AggView {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else spark.read.schema(schema).parquet(paths: _*)
 
-  /** Sum partial rows down to one row per key; a key whose merged
-    * count is zero (fully retracted across base + deltas) leaves the
-    * view. This IS merge-on-read for aggregates: partials are
-    * commutative, so delta files need no sequence column and any
-    * subset folds to the same answer.
-    */
   private def hasMinMax(s: TxLog.Snapshot): Boolean =
     s.props.get("agg_minmax").contains("true")
 
@@ -180,6 +173,12 @@ object AggView {
     (if (minMax) Seq(min(col("vmin")).as("vmin"),
       max(col("vmax")).as("vmax")) else Nil)
 
+  /** Sum partial rows down to one row per key; a key whose merged
+    * count is zero (fully retracted across base + deltas) leaves the
+    * view. This IS merge-on-read for aggregates: partials are
+    * commutative, so delta files need no sequence column and any
+    * subset folds to the same answer.
+    */
   private def foldPartials(df: DataFrame, keys: Seq[String]): DataFrame = {
     val minMax = df.columns.exists(_.equalsIgnoreCase("vmin"))
     val aggs = foldAggs(minMax)
@@ -216,28 +215,16 @@ object AggView {
 
   /** One key's aggregate row (the dashboard point read) from the
     * single bucket directory that can hold it — O(1 bucket) on a view
-    * of any size, same mechanics as [[Compaction.lookup]].
+    * of any size. The read is EAGER and runs no Spark job, exactly as
+    * [[Compaction.lookup]]: the pinned bucket's base and delta
+    * partials are read and summed on the calling thread before this
+    * returns, so the frame holds the snapshot resolved at `lookup()`
+    * time and its `inputFiles` name the files read.
     */
   def lookup(spark: SparkSession, dir: String, keyValue: Any): DataFrame = {
     val s = snap(spark, dir)
-    val (keys, nBuckets) = (keysOf(s), s.props("n_buckets").toInt)
-    val vals = keyValue match {
-      case sq: Seq[_] => sq.toSeq
-      case v => Seq(v)
-    }
-    require(vals.size == keys.size,
-      s"key tuple arity ${vals.size} != view key (${keys.mkString(", ")})")
-    val schema = schemaOf(s)
-    val lits = Bucketing.keyLiterals(schema, keys, vals,
-      spark.sessionState.conf.sessionLocalTimeZone)
-    val bucket = Bucketing.bucketOfLiterals(lits, nBuckets)
-    val rels = s.buckets.get(bucket).toSeq ++
-      s.deltas.getOrElse(bucket, Nil)
-    val base = readPaths(spark, schema,
-      rels.map(rel => s"$dir/data/$rel"))
-    val one = if (s.deltas.contains(bucket))
-      foldPartials(base, keys) else base
-    one.filter(Bucketing.keyPredicate(keys, Seq(lits)))
+    graft.catalog.GraftPointRead.read(spark, dir, s, schemaOf(s),
+      Seq(keyValue))
   }
 
   /** Resize the view's bucket count in ONE committed full rewrite —
@@ -249,23 +236,16 @@ object AggView {
   def rebucket(spark: SparkSession, dir: String, newNBuckets: Int,
       retainHistory: Boolean = false): Unit = {
     require(newNBuckets > 0, "nBuckets must be positive")
-    TxLog.withOcc(spark, dir) {
+    TableTxn.rewrite(spark, dir, "rebucket", retainHistory) {
       val s = snap(spark, dir)
-      val (keys, valueCol) = (keysOf(s), s.props("value_col"))
-      if (s.props("n_buckets").toInt == newNBuckets) return
-      TxLog.sweep(spark, dir)
-      val txn = new TableTxn(spark, dir, s)
-      val staged = txn.stage(
-        storedData(spark, dir, s)
-          .withColumn("bucket", bucketOf(keys.map(col), newNBuckets))
-          .repartition(col("bucket")),
-        keys)
-      txn.commit(
-        staged.map(b => b -> txn.bucketRel(b)).toMap,
-        coreProps(keys, valueCol, newNBuckets,
-          s.props("last_batch_id").toLong, s.props("schema_json"),
-          hasMinMax(s)),
-        op = "rebucket", vacuum = !retainHistory)
+      val keys = keysOf(s)
+      Option.when(s.props("n_buckets").toInt != newNBuckets)(
+        TableTxn.Rewrite(s, Map.empty, storedData(spark, dir, s)
+            .withColumn("bucket", bucketOf(keys.map(col), newNBuckets))
+            .repartition(col("bucket")),
+          (_, _) => coreProps(keys, s.props("value_col"),
+            newNBuckets, s.props("last_batch_id").toLong,
+            s.props("schema_json"), hasMinMax(s))))
     }
   }
 
@@ -378,33 +358,25 @@ object AggView {
     * [[Compaction.compact]].
     */
   def compact(spark: SparkSession, dir: String, minDeltas: Int = 1,
-      retainHistory: Boolean = false): Unit = {
-    TxLog.withOcc(spark, dir) {
+      retainHistory: Boolean = false): Unit =
+    TableTxn.rewrite(spark, dir, "compact", retainHistory) {
       val s = snap(spark, dir)
       val dirty = s.deltas.collect {
         case (b, rels) if rels.size >= minDeltas => b
       }.toSet
-      if (dirty.isEmpty) return
       val (keys, valueCol, nBuckets) =
         (keysOf(s), s.props("value_col"), s.props("n_buckets").toInt)
-      TxLog.sweep(spark, dir)
-      val txn = new TableTxn(spark, dir, s)
       val rels = dirty.toSeq.flatMap(b => s.buckets.get(b)) ++
         dirty.toSeq.flatMap(b => s.deltas.getOrElse(b, Nil))
-      val staged = txn.stage(
+      Option.when(dirty.nonEmpty)(TableTxn.Rewrite(s, s.buckets -- dirty,
         foldPartials(readPaths(spark, schemaOf(s),
             rels.map(rel => s"$dir/data/$rel")), keys)
           .withColumn("bucket", bucketOf(keys.map(col), nBuckets))
           .repartition(col("bucket")),
-        keys)
-      txn.commit(
-        (s.buckets -- dirty) ++ staged.map(b => b -> txn.bucketRel(b)).toMap,
-        coreProps(keys, valueCol, nBuckets,
+        (_, _) => coreProps(keys, valueCol, nBuckets,
           s.props("last_batch_id").toLong, s.props("schema_json"),
-          hasMinMax(s)) ++ carriedChains(s, dirty),
-        op = "compact", vacuum = !retainHistory)
+          hasMinMax(s)) ++ carriedChains(s, dirty)))
     }
-  }
 
   /** Delta chains of buckets a commit does NOT rewrite/restage carry
     * verbatim; a CoW rewrite folds its buckets' chains in and drops
@@ -423,55 +395,24 @@ object AggView {
   private def mergeDeltas(spark: SparkSession, dir: String,
       deltaPartials: DataFrame,
       batchId: Long, canRetract: Boolean,
-      mergeOnRead: Boolean): MergeStats = {
-    var attempts = 0
-    while (true) {
-      try return mergeDeltasBucketed(spark, dir, deltaPartials,
-        batchId, canRetract, mergeOnRead)
-      catch {
-        case _: Compaction.RebucketedDuringWrite if attempts < 3 =>
-          attempts += 1
-      }
+      mergeOnRead: Boolean): MergeStats =
+    // each OCC attempt re-resolves the snapshot AND the fence — a
+    // concurrent writer may have applied this very batchId, in which
+    // case the retry degrades to the exactly-once no-op
+    TableTxn.merge(spark, dir, deltaPartials, () => snap(spark, dir),
+      ifEmpty = None) { (s, txn, delta, touched) =>
+      if (batchId <= s.props("last_batch_id").toLong)
+        MergeStats(applied = false, Nil)
+      else mergeDeltasOnce(spark, dir, s, txn, delta, touched, batchId,
+        canRetract, mergeOnRead)
     }
-    sys.error("unreachable")
-  }
-
-  private def mergeDeltasBucketed(spark: SparkSession, dir: String,
-      deltaPartials: DataFrame,
-      batchId: Long, canRetract: Boolean,
-      mergeOnRead: Boolean): MergeStats = {
-    // bucket + cache the delta ONCE; each OCC attempt re-resolves the
-    // snapshot AND the fence — a concurrent writer may have applied
-    // this very batchId, in which case the retry degrades to the
-    // exactly-once no-op; a concurrent rebucket invalidates the cached
-    // bucket ids and restarts mergeDeltas wholesale
-    val s0 = snap(spark, dir)
-    val nBuckets0 = s0.props("n_buckets").toInt
-    val delta = deltaPartials
-      .withColumn("bucket", bucketOf(keysOf(s0).map(col), nBuckets0))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val touched = delta.select(col("bucket")).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      TxLog.withOcc(spark, dir) {
-        mergeDeltasOnce(spark, dir, delta, touched, nBuckets0,
-          batchId, canRetract, mergeOnRead)
-      }
-    } finally delta.unpersist()
-  }
 
   private def mergeDeltasOnce(spark: SparkSession, dir: String,
-      delta: DataFrame, touched: Seq[Int], bucketedWith: Int,
+      s: TxLog.Snapshot, txn: TableTxn, delta: DataFrame, touched: Seq[Int],
       batchId: Long, canRetract: Boolean,
       mergeOnRead: Boolean): MergeStats = {
-    val s = snap(spark, dir)
-    if (s.props("n_buckets").toInt != bucketedWith)
-      throw new Compaction.RebucketedDuringWrite
-    if (batchId <= s.props("last_batch_id").toLong)
-      return MergeStats(applied = false, Nil)
     val (keys, valueCol, nBuckets) =
       (keysOf(s), s.props("value_col"), s.props("n_buckets").toInt)
-    val txn = new TableTxn(spark, dir, s)
     var newBuckets = s.buckets
     val touchedSet = touched.toSet
     var extraProps: Map[String, String] = carriedChains(s,
@@ -479,16 +420,12 @@ object AggView {
     if (touched.nonEmpty && mergeOnRead) {
       // O(batch): stage the delta partials themselves; base entries
       // (and prior chains) carry verbatim, reads fold by summation
-      TxLog.sweep(spark, dir)
       val staged = txn.stage(delta.repartition(col("bucket")), keys)
       extraProps = carriedChains(s, staged.toSet) ++ staged.map { b =>
         val rels = s.deltas.getOrElse(b, Nil) :+ txn.bucketRel(b)
         s"delta.$b" -> rels.mkString(",")
       }
     } else if (touched.nonEmpty) {
-      // crashed-writer leftovers (grace-aware: a LIVE concurrent
-      // writer's staging and in-flight generation survive)
-      TxLog.sweep(spark, dir)
       // fold the touched buckets' base AND any delta chains in: a CoW
       // rewrite leaves its buckets clean
       val touchedRels = s.buckets.view.filterKeys(touchedSet).values.toSeq ++

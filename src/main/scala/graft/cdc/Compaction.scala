@@ -67,9 +67,11 @@ object Compaction {
 
   /** Null-tombstone convention, engine-wide: a NULL delete flag means
     * LIVE — a delta row without an explicit tombstone is an upsert.
-    * Every fold (foldBuckets, morMerge, replaceBuckets, init, Scd2)
-    * and the catalog reader's in-reader fold (GraftFold.foldMerge /
-    * foldScd2) apply this same rule, so a dirty-bucket read and the
+    * Every fold (foldBuckets, the merge's winners and feed in
+    * mergeTail/stageFeed, replaceBuckets, init, Scd2's window,
+    * dropExpired and asOf) and the catalog reader's in-reader fold
+    * (GraftFold.foldMerge / foldScd2, which also serves every point
+    * lookup) apply this same rule, so a dirty-bucket read and the
     * post-compaction read of the same table always agree. A bare
     * `!col(deleteCol)` would silently DROP null-flag rows under
     * three-valued logic — never write that; use `!isDeleted(...)`.
@@ -1177,7 +1179,7 @@ object Compaction {
     * the key columns, the bucket count, the stored schema AND the live
     * bucket map — pure bookkeeping that costs zero Spark jobs.
     */
-  private final case class Meta(snap: TxLog.Snapshot, keys: Seq[String],
+  private[cdc] final case class Meta(snap: TxLog.Snapshot, keys: Seq[String],
       versionCol: String, deleteCol: String, nBuckets: Int,
       schema: org.apache.spark.sql.types.StructType) {
     def keyCols: Seq[org.apache.spark.sql.Column] = keys.map(col)
@@ -1200,13 +1202,15 @@ object Compaction {
     def liveIds: Set[Int] = buckets.keySet ++ dirty
   }
 
-  private def loadMeta(spark: SparkSession, dir: String): Meta = {
-    val snap = TxLog.latest(spark, dir).getOrElse(throw new
-        IllegalArgumentException(s"no committed manifest under $dir"))
-    metaOf(snap)
-  }
+  private[cdc] def loadMeta(spark: SparkSession, dir: String): Meta =
+    metaOf(latestSnap(spark, dir))
 
-  private def metaOf(snap: TxLog.Snapshot): Meta =
+  private[cdc] def latestSnap(spark: SparkSession,
+      dir: String): TxLog.Snapshot =
+    TxLog.latest(spark, dir).getOrElse(throw new
+      IllegalArgumentException(s"no committed manifest under $dir"))
+
+  private[cdc] def metaOf(snap: TxLog.Snapshot): Meta =
     Meta(snap, Bucketing.decodeKeys(snap.props("key")),
       snap.props("version_col"),
       snap.props("delete_col"), snap.props("n_buckets").toInt,
@@ -1459,7 +1463,8 @@ object Compaction {
     * reference's indexed primary-key lookup. The value is cast to the
     * key column's type first (`7` finds the bigint key `7L`); a value
     * the cast would change or null out is refused with an
-    * IllegalArgumentException.
+    * IllegalArgumentException. A composite-key table takes the key
+    * TUPLE as a Seq in declared key order.
     *
     * The read is EAGER and runs no Spark job: the catalog scan plans
     * the pinned bucket (delta chains, renamed columns, `_tp` leaves and
@@ -1474,20 +1479,6 @@ object Compaction {
   def lookup(spark: SparkSession, dir: String, keyValue: Any): DataFrame =
     pointRead(spark, dir, Seq(keyValue))
 
-  /** A lookup argument for a composite-key table is the key TUPLE as a
-    * Seq in declared key order; single-key tables take the bare value
-    * (a Seq of one also works).
-    */
-  private def tupleOf(m: Meta, keyValue: Any): Seq[Any] = {
-    val vals = keyValue match {
-      case s: Seq[_] => s.toSeq
-      case v => Seq(v)
-    }
-    require(vals.size == m.keys.size,
-      s"key tuple arity ${vals.size} != table key (${m.keys.mkString(", ")})")
-    vals
-  }
-
   /** Multi-key point lookup over the distinct buckets the keys hash
     * into (≤ |keys| directories regardless of table size) — the batch
     * form of [[lookup]], with the same casting and eager zero-job
@@ -1501,10 +1492,7 @@ object Compaction {
   private def pointRead(spark: SparkSession, dir: String,
       keyValues: Seq[Any]): DataFrame = {
     val m = loadMeta(spark, dir)
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val tuples = keyValues.map(v =>
-      Bucketing.keyLiterals(m.schema, m.keys, tupleOf(m, v), tz))
-    graft.catalog.GraftPointRead.read(spark, dir, m.snap, m.schema, tuples)
+    graft.catalog.GraftPointRead.read(spark, dir, m.snap, m.schema, keyValues)
   }
 
   /** Incremental scan with zone-map pruning: live rows whose version
@@ -2133,23 +2121,18 @@ object Compaction {
   def rebucket(spark: SparkSession, dir: String, newNBuckets: Int,
       retainHistory: Boolean = false): Unit = {
     require(newNBuckets > 0, "nBuckets must be positive")
-    TxLog.withOcc(spark, dir) {
+    TableTxn.rewrite(spark, dir, "rebucket", retainHistory) {
       val m = loadMeta(spark, dir)
-      if (m.nBuckets == newNBuckets) return
-      TxLog.sweep(spark, dir)
-      val txn = new TableTxn(spark, dir, m.snap)
-      val staged = txn.stage(
-        storedData(spark, dir, m).drop("bucket")
+      Option.when(m.nBuckets != newNBuckets)(TableTxn.Rewrite(m.snap,
+        Map.empty, storedData(spark, dir, m).drop("bucket")
           .withColumn("bucket", bucketOf(m.keyCols, newNBuckets))
           .repartition(col("bucket")),
-        m.keys, m.clusterBy, m.tp)
-      val props = coreProps(m.keys, m.versionCol, m.deleteCol,
-        newNBuckets, m.schema.json, m.clusterBy) ++
-        evolutionProps(m.snap) ++
-        rowProps(stagedStats(spark, txn.staging, staged, m.versionCol,
-          m.clusterBy, ndvPOf(m.snap)))
-      txn.commit(staged.map(b => b -> txn.bucketRel(b)).toMap, props,
-        op = "rebucket", vacuum = !retainHistory)
+        (txn, staged) =>
+          coreProps(m.keys, m.versionCol, m.deleteCol, newNBuckets,
+            m.schema.json, m.clusterBy) ++ evolutionProps(m.snap) ++
+          rowProps(stagedStats(spark, txn.staging, staged, m.versionCol,
+            m.clusterBy, ndvPOf(m.snap))),
+        m.clusterBy, m.tp))
     }
   }
 
@@ -2176,39 +2159,34 @@ object Compaction {
     */
   def repartitionTime(spark: SparkSession, dir: String,
       timePartition: Option[(String, String)],
-      retainHistory: Boolean = false): Unit = {
-    TxLog.withOcc(spark, dir) {
+      retainHistory: Boolean = false): Unit =
+    TableTxn.rewrite(spark, dir, "repartition", retainHistory) {
       val m = loadMeta(spark, dir)
       timePartition.foreach { case (u, c) =>
         tpValueOf(u, new java.sql.Timestamp(0L)) // validates the unit
         require(m.schema.fieldNames.exists(_.equalsIgnoreCase(c)),
           s"time-partition column '$c' missing from the table schema")
       }
-      if (m.tp == timePartition) return
-      TxLog.sweep(spark, dir)
-      val txn = new TableTxn(spark, dir, m.snap)
       // the fold inside storedData reconciles merge-on-read chains, so
       // the rewrite doubles as a full compaction (dirty buckets clean)
-      val staged = txn.stage(
-        storedData(spark, dir, m).drop("bucket")
+      Option.when(m.tp != timePartition)(TableTxn.Rewrite(m.snap,
+        Map.empty, storedData(spark, dir, m).drop("bucket")
           .withColumn("bucket", bucketOf(m.keyCols, m.nBuckets))
           .repartition(col("bucket")),
-        m.keys, m.clusterBy, timePartition)
-      val props = coreProps(m.keys, m.versionCol, m.deleteCol,
-        m.nBuckets, m.schema.json, m.clusterBy) ++
-        (evolutionProps(m.snap) -- Seq("tp_unit", "tp_col", "tp_min")) ++
-        timePartition.map { case (u, c) =>
-          Map("tp_unit" -> u, "tp_col" -> c) }.getOrElse(Map.empty) ++
-        rowProps(stagedStats(spark, txn.staging, staged, m.versionCol,
-          m.clusterBy, ndvPOf(m.snap))) +
-        // durable marker: the feed may now hold batches of BOTH
-        // layouts (flat and `_tp=`-nested) — readFeed must take the
-        // layout-aware listing route forever after
-        ("tp_evolved" -> "true")
-      txn.commit(staged.map(b => b -> txn.bucketRel(b)).toMap, props,
-        op = "repartition", vacuum = !retainHistory)
+        (txn, staged) =>
+          coreProps(m.keys, m.versionCol, m.deleteCol, m.nBuckets,
+            m.schema.json, m.clusterBy) ++
+          (evolutionProps(m.snap) -- Seq("tp_unit", "tp_col", "tp_min")) ++
+          timePartition.map { case (u, c) =>
+            Map("tp_unit" -> u, "tp_col" -> c) }.getOrElse(Map.empty) ++
+          rowProps(stagedStats(spark, txn.staging, staged, m.versionCol,
+            m.clusterBy, ndvPOf(m.snap))) +
+          // durable marker: the feed may now hold batches of BOTH
+          // layouts (flat and `_tp=`-nested) — readFeed must take the
+          // layout-aware listing route forever after
+          ("tp_evolved" -> "true"),
+        m.clusterBy, timePartition))
     }
-  }
 
   /** Versions time travel can reconstruct (ascending): every committed
     * manifest still on disk below the live one. A merge with
@@ -2821,49 +2799,10 @@ object Compaction {
     * zero-effect delta under the next batch id rather than a
     * duplicate real one.
     */
-  /** Thrown (and handled inside [[merge]]) when a concurrent
-    * [[rebucket]] committed between bucketing the changelog and the
-    * merge's own commit: the cached bucket ids are computed under the
-    * OLD layout and writing them would misplace keys in the new one,
-    * so the whole merge must re-bucket — an OCC retry alone cannot
-    * fix it.
-    */
-  private[cdc] final class RebucketedDuringWrite extends RuntimeException(
-    "bucket count changed under an in-flight merge")
-
   def merge(spark: SparkSession, dir: String, changelog: DataFrame,
       emitFeed: Boolean = false, retainHistory: Boolean = false,
       mergeOnRead: Boolean = false,
       expectedBase: Option[Long] = None): MergeStats = {
-    var attempts = 0
-    while (true) {
-      try return mergeBucketed(spark, dir, changelog, emitFeed,
-        retainHistory, mergeOnRead, expectedBase)
-      catch { case _: RebucketedDuringWrite if attempts < 3 => attempts += 1 }
-    }
-    sys.error("unreachable")
-  }
-
-  private def mergeBucketed(spark: SparkSession, dir: String,
-      changelog: DataFrame,
-      emitFeed: Boolean, retainHistory: Boolean,
-      mergeOnRead: Boolean, expectedBase: Option[Long]): MergeStats = {
-    // bucketing params change only under a (rare) concurrent rebucket
-    // — detected inside mergeOnce, restarting merge() wholesale — so
-    // the bucketed changelog, the expensive input, is computed and
-    // cached ONCE and reused verbatim across OCC retries; each attempt
-    // re-resolves the manifest snapshot inside withOcc.
-    val m0 = loadMeta(spark, dir)
-    // check the read-modify-write fence BEFORE materializing the
-    // changelog: when the table already advanced past the caller's
-    // snapshot, that snapshot's files may have been vacuumed — reading
-    // them would fail with FILE_NOT_EXIST instead of the actionable
-    // StaleBase (the in-OCC re-check below still covers a commit that
-    // lands between here and ours)
-    expectedBase.filter(_ != m0.snap.version).foreach { want =>
-      throw new TxLog.StaleBase(
-        s"changelog derived at v$want but table is at v${m0.snap.version}")
-    }
     // `_order` is the sanctioned intra-version ordering channel: when
     // a changelog carries it (feedAsChangelog stamps the feed batch
     // id), rows tying on (key, version) resolve by _order DESC
@@ -2872,31 +2811,26 @@ object Compaction {
     // order. The column rides INTO the merge's own ranking window
     // (no extra shuffle on the catch-up path) and is dropped before
     // anything is stored.
-    val dataCols = changelog.columns
+    val dataCols = changelog.columns.toSeq
       .filterNot(c => c == "bucket" || c == "_order")
-    requireNoReserved(dataCols.toSeq, "changelog schema")
-    val changes = changelog
-      .withColumn("bucket", bucketOf(m0.keyCols, m0.nBuckets))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // distinct over the partition-id domain: ≤ nBuckets values, a
-      // metadata-sized collect regardless of batch row count
-      val touched = changes.select(col("bucket")).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      if (touched.isEmpty) return MergeStats(Nil, Nil, 0L)
-      TxLog.withOcc(spark, dir) {
-        mergeOnce(spark, dir, changes, dataCols.toSeq, touched,
-          m0.nBuckets, emitFeed, retainHistory, mergeOnRead, expectedBase)
-      }
-    } finally changes.unpersist()
+    requireNoReserved(dataCols, "changelog schema")
+    // the fences run before the changelog is materialized too: when the
+    // table already advanced past the caller's snapshot, that
+    // snapshot's files may have been vacuumed — reading them would fail
+    // with FILE_NOT_EXIST instead of the actionable StaleBase
+    TableTxn.merge(spark, dir, changelog,
+      () => mergeBase(spark, dir, dataCols, expectedBase),
+      ifEmpty = Some(MergeStats(Nil, Nil, 0L))) {
+      (snap, txn, changes, touched) =>
+        mergeOnce(spark, dir, metaOf(snap), txn, changes, dataCols,
+          touched, emitFeed, retainHistory, mergeOnRead)
+    }
   }
 
-  private def mergeOnce(spark: SparkSession, dir: String,
-      changes: DataFrame, dataCols: Seq[String], touched: Seq[Int],
-      bucketedWith: Int,
-      emitFeed: Boolean, retainHistory: Boolean,
-      mergeOnRead: Boolean, expectedBase: Option[Long]): MergeStats = {
-    val m = loadMeta(spark, dir)
+  /** The latest manifest, fenced for a merge of `dataCols`. */
+  private def mergeBase(spark: SparkSession, dir: String,
+      dataCols: Seq[String], expectedBase: Option[Long]): TxLog.Snapshot = {
+    val snap = latestSnap(spark, dir)
     // read-modify-write fence: a caller whose changelog was DERIVED
     // from a specific snapshot (SQL UPDATE/DELETE re-emitting current
     // rows at their stored version) pins that version here; if the
@@ -2904,29 +2838,31 @@ object Compaction {
     // overwrite the concurrent writer (lost update). StaleBase is
     // non-retryable by withOcc on purpose — only the CALLER can
     // rebuild the changelog against the new snapshot.
-    expectedBase.filter(_ != m.snap.version).foreach { want =>
+    expectedBase.filter(_ != snap.version).foreach { want =>
       throw new TxLog.StaleBase(
-        s"changelog derived at v$want but table is at v${m.snap.version}")
+        s"changelog derived at v$want but table is at v${snap.version}")
     }
-    if (m.nBuckets != bucketedWith) throw new RebucketedDuringWrite
     // merge-time evolution fence: a changelog column whose name was
     // DROPPED or is a pre-rename spelling would silently resurrect
     // bytes still present in un-rewritten files under a new meaning
-    val fencedNames = m.snap.prop("dead_cols")
+    val fencedNames = snap.prop("dead_cols")
       .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
       .map(_.toLowerCase).toSet ++
-      renameEvents(m.snap.props).map(_._2.toLowerCase)
+      renameEvents(snap.props).map(_._2.toLowerCase)
     val nameClash = dataCols.map(_.toLowerCase).toSet
       .intersect(fencedNames)
     require(nameClash.isEmpty,
       s"changelog columns (${nameClash.mkString(", ")}) reuse dropped/" +
         "pre-rename column names whose data may still exist in " +
         "un-rewritten files; rename the changelog column")
+    snap
+  }
+
+  private def mergeOnce(spark: SparkSession, dir: String, m: Meta,
+      txn: TableTxn, changes: DataFrame, dataCols: Seq[String],
+      touched: Seq[Int], emitFeed: Boolean, retainHistory: Boolean,
+      mergeOnRead: Boolean): MergeStats = {
     val versionCol = m.versionCol
-    // clear crashed writers' leftovers (grace-aware: a LIVE concurrent
-    // writer's staging and in-flight generation survive the sweep)
-    prof("merge.sweep") { TxLog.sweep(spark, dir) }
-    val txn = new TableTxn(spark, dir, m.snap)
     // a table that opted into the change feed emits on EVERY merge —
     // the caller flag remains for per-call opt-in on plain tables
     val emitFeedEff = emitFeed || feedEnabled(m.snap)
@@ -3388,19 +3324,8 @@ object Compaction {
       txn: TableTxn, changes: DataFrame, dataCols: Seq[String],
       touched: Seq[Int],
       emitFeed: Boolean, retainHistory: Boolean): MergeStats = {
-    val fs = TxLog.fs(spark, dir)
-    val vType = m.schema(m.versionCol).dataType
-    // common columns must match the stored types exactly — a delta
-    // file with a drifted physical type would poison every later fold
-    dataCols.foreach { c =>
-      m.schema.fields.find(_.name == c).foreach { f =>
-        val got = changes.schema(c).dataType
-        require(got == f.dataType,
-          s"changelog column $c: ${got.simpleString} does not match " +
-            s"stored ${f.dataType.simpleString} (merge-on-read deltas " +
-            "must be byte-compatible with the base)")
-      }
-    }
+    // THE delta write — the only data-sized cost of the merge
+    val (deltaProps, deltaRows) = txn.appendDeltas(m, changes, dataCols)
 
     // optional feed: rank the changelog against the RECONCILED
     // pre-state of the touched buckets — reads those buckets (the
@@ -3419,18 +3344,9 @@ object Compaction {
         .orderBy(col(m.versionCol).desc, col("_src").desc)
       val ranked = unioned.repartition(col("bucket"))
         .withColumn("_rn", row_number().over(w))
-      stageFeed(spark, fs, txn.staging, ranked, unioned, m.keys,
-        m.deleteCol, m.versionCol, m.tp)
+      stageFeed(spark, TxLog.fs(spark, dir), txn.staging, ranked, unioned,
+        m.keys, m.deleteCol, m.versionCol, m.tp)
     }
-
-    // THE delta write — the only data-sized cost of the merge
-    val staged = txn.stage(
-      changes.select(col("bucket") +: dataCols.map(col): _*)
-        .withColumn("_seq", lit(txn.newVersion))
-        .repartition(col("bucket")),
-      m.keys, m.clusterBy, m.tp)
-    val newStats = stagedStats(spark, txn.staging, staged, m.versionCol)
-    val deltaRows = newStats.values.map(_.rows).sum
 
     // a changelog that ADDS columns widens the manifest schema (base
     // and older delta files null-extend under the explicit read
@@ -3440,24 +3356,8 @@ object Compaction {
     val schemaJson = if (newCols.isEmpty) m.schema.json
       else org.apache.spark.sql.types.StructType(
         (m.schema.fields ++ newCols).map(_.copy(nullable = true))).json
-
-    // base entries, base stats and prior deltas all carry verbatim;
-    // each staged bucket APPENDS one delta dir and folds its footer
-    // stats into the delta-side zone map
-    val deltaProps = deltaAppendProps(m.snap, staged, newStats,
-      txn.bucketRel, vType)
-    // base stats carry for every bucket (the base is untouched); delta
-    // props carry only for buckets this merge did NOT stage — a staged
-    // bucket's delta props are fully replaced by deltaProps, so a
-    // dropped dmaxv (uncombinable stat) cannot leave a stale one behind.
-    // vminl./vmaxl. ride along (r15): the base's leaf-version maps stay
-    // true for the base files a MoR merge never touches — dropping them
-    // here made ONE merge-on-read commit disarm leaf pruning table-wide
-    // (leaf consumers already skip dirty buckets)
-    val carried = carriedStats(m.snap.props, staged.toSet, DeltaPrefixes)
     val props = coreProps(m.keys, m.versionCol, m.deleteCol, m.nBuckets,
-      schemaJson, m.clusterBy) ++ evolutionProps(m.snap) ++
-      carried ++ deltaProps
+      schemaJson, m.clusterBy) ++ evolutionProps(m.snap) ++ deltaProps
 
     // the base bucket map is UNCHANGED — that is the whole point
     txn.commit(m.buckets, props, op = "merge-mor", vacuum = !retainHistory,
@@ -3506,31 +3406,24 @@ object Compaction {
 
   private def compactSelected(spark: SparkSession, dir: String,
       select: Map[Int, Seq[String]] => Set[Int],
-      retainHistory: Boolean): Unit = {
-    TxLog.withOcc(spark, dir) {
+      retainHistory: Boolean): Unit =
+    TableTxn.rewrite(spark, dir, "compact", retainHistory) {
       val m = loadMeta(spark, dir)
       val dirty = select(m.deltas)
-      if (dirty.isEmpty) return
-      TxLog.sweep(spark, dir)
-      val txn = new TableTxn(spark, dir, m.snap)
       // bucketed fold: the fold window itself establishes the bucket
       // distribution the staged write needs — no second exchange (r16)
-      val staged = txn.stage(
-        foldBuckets(spark, dir, m, dirty, bucketed = true),
-        m.keys, m.clusterBy, m.tp)
-      // base stats carry for untouched buckets; delta props carry for
-      // dirty-but-below-threshold buckets (their chains stay live)
-      val carried = carriedStats(m.snap.props, dirty)
-      val props = coreProps(m.keys, m.versionCol, m.deleteCol, m.nBuckets,
-        m.schema.json, m.clusterBy) ++ evolutionProps(m.snap) ++
-        carried ++
-        rowProps(stagedStats(spark, txn.staging, staged, m.versionCol,
-          m.clusterBy, ndvPOf(m.snap)))
-      txn.commit(
-        (m.buckets -- dirty) ++ staged.map(b => b -> txn.bucketRel(b)).toMap,
-        props, op = "compact", vacuum = !retainHistory)
+      Option.when(dirty.nonEmpty)(TableTxn.Rewrite(m.snap,
+        m.buckets -- dirty, foldBuckets(spark, dir, m, dirty, bucketed = true),
+        (txn, staged) =>
+          coreProps(m.keys, m.versionCol, m.deleteCol, m.nBuckets,
+            m.schema.json, m.clusterBy) ++ evolutionProps(m.snap) ++
+          // base stats carry for untouched buckets; delta props carry
+          // for dirty-but-below-threshold buckets (their chains stay live)
+          carriedStats(m.snap.props, dirty) ++
+          rowProps(stagedStats(spark, txn.staging, staged, m.versionCol,
+            m.clusterBy, ndvPOf(m.snap))),
+        m.clusterBy, m.tp))
     }
-  }
 
   /** Per-bucket stats for a set of COMMITTED clean buckets, computed
     * from the table's live files — the committed-dirs twin of

@@ -41,6 +41,8 @@ import org.apache.spark.sql.functions._
   */
 object Scd2 {
 
+  import Compaction.{Meta, loadMeta}
+
   /** Outcome of one merge batch, for observability and specs. */
   final case class MergeStats(touchedBuckets: Seq[Int], rowsWritten: Long)
 
@@ -166,42 +168,6 @@ object Scd2 {
     }
   }
 
-  /** One read of the driver-side manifest per public call — merge needs
-    * the key columns, the bucket count, the stored schema AND the live
-    * bucket map — pure bookkeeping that costs zero Spark jobs.
-    */
-  private final case class Meta(snap: TxLog.Snapshot, keys: Seq[String],
-      versionCol: String, deleteCol: String, nBuckets: Int,
-      schema: org.apache.spark.sql.types.StructType) {
-    def buckets: Map[Int, String] = snap.buckets
-    def keyCols: Seq[org.apache.spark.sql.Column] = keys.map(col)
-    /** Merge-on-read delta dirs per bucket, commit order. */
-    def deltas: Map[Int, Seq[String]] = snap.deltas
-    /** Buckets whose reads must re-window (unfolded deltas). */
-    def dirty: Set[Int] = deltas.keySet
-    /** Every bucket with live contents (a delta-only bucket has no
-      * base entry).
-      */
-    def liveIds: Set[Int] = buckets.keySet ++ dirty
-    /** The state-record schema: stored columns minus the generated
-      * interval pair (what a merge batch carries, what delta files
-      * hold).
-      */
-    def stateSchema: org.apache.spark.sql.types.StructType =
-      org.apache.spark.sql.types.StructType(schema.fields.filterNot(f =>
-        f.name == "valid_to" || f.name == "is_current"))
-  }
-
-  private def loadMeta(spark: SparkSession, dir: String): Meta = {
-    val snap = TxLog.latest(spark, dir).getOrElse(throw new
-      IllegalArgumentException(s"no committed manifest under $dir"))
-    Meta(snap, Bucketing.decodeKeys(snap.props("key")),
-      snap.props("version_col"),
-      snap.props("delete_col"), snap.props("n_buckets").toInt,
-      org.apache.spark.sql.types.DataType.fromJson(snap.props("schema_json"))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-  }
-
   private def readBuckets(spark: SparkSession, dir: String, m: Meta,
       rels: Iterable[String]): DataFrame = {
     val paths = rels.map(rel => s"$dir/data/$rel").toSeq
@@ -212,18 +178,6 @@ object Scd2 {
     noBucket.withColumn("bucket", bucketOf(m.keyCols, m.nBuckets))
   }
 
-  /** Fold DIRTY buckets' base + delta files into live history — the
-    * read half of Scd2 merge-on-read. One scan over base dirs (full
-    * interval rows, `_seq` null) and delta dirs (state records,
-    * interval columns null, `_seq` = committing version) under one
-    * widened schema; then (1) deduplicate `(key, version)` replays —
-    * `_seq` descending nulls-last, so the LATEST delta beats earlier
-    * ones and any delta beats the base — collapse to state records,
-    * and (2) re-derive the intervals with the same [[window]] every
-    * other path uses. A late change splices exactly: the window is
-    * the definition, not an incremental patch. Cost: the window
-    * shuffle touches only the dirty buckets' rows.
-    */
   /** Drop the rows the committed retention floor has retired — the
     * EXACT predicate [[expireHistoryBefore]] deletes with: fully-
     * superseded history (`valid_to <= floor`) and tombstones at
@@ -245,6 +199,18 @@ object Scd2 {
             col(m.versionCol) <= cut)))
     }
 
+  /** Fold DIRTY buckets' base + delta files into live history — the
+    * read half of Scd2 merge-on-read. One scan over base dirs (full
+    * interval rows, `_seq` null) and delta dirs (state records,
+    * interval columns null, `_seq` = committing version) under one
+    * widened schema; then (1) deduplicate `(key, version)` replays —
+    * `_seq` descending nulls-last, so the LATEST delta beats earlier
+    * ones and any delta beats the base — collapse to state records,
+    * and (2) re-derive the intervals with the same [[window]] every
+    * other path uses. A late change splices exactly: the window is
+    * the definition, not an incremental patch. Cost: the window
+    * shuffle touches only the dirty buckets' rows.
+    */
   private def foldBuckets(spark: SparkSession, dir: String, m: Meta,
       ids: Iterable[Int], bucketed: Boolean = false): DataFrame = {
     val idSeq = ids.toSeq
@@ -301,34 +267,26 @@ object Scd2 {
 
   /** Absolute live bucket directories (for specs and path accounting). */
   private[graft] def livePaths(spark: SparkSession, dir: String): Map[Int, String] =
-    loadMeta(spark, dir).buckets.map { case (b, rel) => b -> s"$dir/data/$rel" }
+    Compaction.livePaths(spark, dir)
 
   /** The (key, versionCol, deleteCol, nBuckets) the table runs with. */
-  def readMeta(spark: SparkSession, dir: String): (String, String, String, Int) = {
-    val m = loadMeta(spark, dir)
-    (m.keys.mkString(","), m.versionCol, m.deleteCol, m.nBuckets)
-  }
+  def readMeta(spark: SparkSession, dir: String): (String, String, String, Int) =
+    Compaction.readMeta(spark, dir)
 
   /** One key's FULL history (all its validity intervals, tombstones
     * included) from the single bucket directory that can hold it —
     * the audit query "show me everything this key ever was", O(1
-    * bucket) on a history of any size (same mechanics as
-    * [[Compaction.lookup]]).
+    * bucket) on a history of any size. The read is EAGER and runs no
+    * Spark job, exactly as [[Compaction.lookup]]: the pinned bucket is
+    * read and folded (the interval re-window and the retention floor
+    * included) on the calling thread before this returns, so the
+    * frame holds the snapshot resolved at `lookup()` time and its
+    * `inputFiles` name the files read.
     */
   def lookup(spark: SparkSession, dir: String, keyValue: Any): DataFrame = {
     val m = loadMeta(spark, dir)
-    val vals = keyValue match {
-      case s: Seq[_] => s.toSeq
-      case v => Seq(v)
-    }
-    require(vals.size == m.keys.size,
-      s"key tuple arity ${vals.size} != table key (${m.keys.mkString(", ")})")
-    val lits = Bucketing.keyLiterals(m.schema, m.keys, vals,
-      spark.sessionState.conf.sessionLocalTimeZone)
-    val bucket = Bucketing.bucketOfLiterals(lits, m.nBuckets)
-    liveView(spark, dir, m, Set(bucket).intersect(m.liveIds))
-      .drop("bucket")
-      .filter(Bucketing.keyPredicate(m.keys, Seq(lits)))
+    graft.catalog.GraftPointRead.read(spark, dir, m.snap, m.schema,
+      Seq(keyValue))
   }
 
   /** The pruned slice a merge of `touched` buckets reads — factored out
@@ -352,23 +310,17 @@ object Scd2 {
   def rebucket(spark: SparkSession, dir: String, newNBuckets: Int,
       retainHistory: Boolean = false): Unit = {
     require(newNBuckets > 0, "nBuckets must be positive")
-    TxLog.withOcc(spark, dir) {
+    TableTxn.rewrite(spark, dir, "rebucket", retainHistory) {
       val m = loadMeta(spark, dir)
-      if (m.nBuckets == newNBuckets) return
-      TxLog.sweep(spark, dir)
-      val txn = new TableTxn(spark, dir, m.snap)
-      val staged = txn.stage(
-        storedData(spark, dir, m).drop("bucket")
+      Option.when(m.nBuckets != newNBuckets)(TableTxn.Rewrite(m.snap,
+        Map.empty, storedData(spark, dir, m).drop("bucket")
           .withColumn("bucket", bucketOf(m.keyCols, newNBuckets))
           .repartition(col("bucket")),
-        m.keys)
-      txn.commit(
-        staged.map(b => b -> txn.bucketRel(b)).toMap,
-        coreProps(m.keys, m.versionCol, m.deleteCol, newNBuckets,
-          m.schema.json) ++ floorProp(m.snap) ++
+        (txn, staged) =>
+          coreProps(m.keys, m.versionCol, m.deleteCol, newNBuckets,
+            m.schema.json) ++ floorProp(m.snap) ++
           Compaction.rowProps(Compaction.stagedStats(
-            spark, txn.staging, staged, m.versionCol)),
-        op = "rebucket", vacuum = !retainHistory)
+            spark, txn.staging, staged, m.versionCol))))
     }
   }
 
@@ -435,50 +387,20 @@ object Scd2 {
     */
   def merge(spark: SparkSession, dir: String, changes0: DataFrame,
       mergeOnRead: Boolean = false): MergeStats = {
-    var attempts = 0
-    while (true) {
-      try return mergeBucketed(spark, dir, changes0, mergeOnRead)
-      catch {
-        case _: Compaction.RebucketedDuringWrite if attempts < 3 =>
-          attempts += 1
-      }
-    }
-    sys.error("unreachable")
-  }
-
-  private def mergeBucketed(spark: SparkSession, dir: String,
-      changes0: DataFrame, mergeOnRead: Boolean): MergeStats = {
-    // bucket and cache the batch ONCE, re-resolve the snapshot per OCC
-    // attempt; a concurrent rebucket invalidates the cached bucket ids
-    // and restarts merge() wholesale (see Compaction)
-    val m0 = loadMeta(spark, dir)
     requireNoGenerated(changes0.columns.toSeq, "merge batch schema")
-    val changes = changes0
-      .withColumn("bucket", bucketOf(m0.keyCols, m0.nBuckets))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val touched = changes.select(col("bucket")).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      if (touched.isEmpty) return MergeStats(Nil, 0L)
-      TxLog.withOcc(spark, dir) {
-        mergeOnce(spark, dir, changes, touched, m0.nBuckets, mergeOnRead)
-      }
-    } finally changes.unpersist()
+    TableTxn.merge(spark, dir, changes0,
+      () => Compaction.latestSnap(spark, dir),
+      ifEmpty = Some(MergeStats(Nil, 0L))) { (snap, txn, changes, touched) =>
+      val m = Compaction.metaOf(snap)
+      if (mergeOnRead) morMerge(m, txn, changes, touched)
+      else cowMerge(spark, dir, m, txn, changes, touched)
+    }
   }
 
-  private def mergeOnce(spark: SparkSession, dir: String,
-      changes: DataFrame, touched: Seq[Int],
-      bucketedWith: Int, mergeOnRead: Boolean): MergeStats = {
-    val m = loadMeta(spark, dir)
-    if (m.nBuckets != bucketedWith)
-      throw new Compaction.RebucketedDuringWrite
+  private def cowMerge(spark: SparkSession, dir: String, m: Meta,
+      txn: TableTxn, changes: DataFrame, touched: Seq[Int]): MergeStats = {
     val (keys, versionCol, deleteCol, nBuckets) =
       (m.keys, m.versionCol, m.deleteCol, m.nBuckets)
-    TxLog.sweep(spark, dir)
-    val txn = new TableTxn(spark, dir, m.snap)
-    if (mergeOnRead)
-      return morMerge(spark, dir, m, txn, changes, touched)
-
     val hist = prunedHistory(spark, dir, touched, m)
     val changedKeys = changes.select(m.keyCols: _*).distinct()
     // unchanged keys: rows pass through byte-equivalent; changed keys:
@@ -555,52 +477,25 @@ object Scd2 {
     * late-splice re-window over base + deltas); [[compact]] restores
     * the zero-window read path.
     */
-  private def morMerge(spark: SparkSession, dir: String, m: Meta,
-      txn: TableTxn, changes: DataFrame,
+  private def morMerge(m: Meta, txn: TableTxn, changes: DataFrame,
       touched: Seq[Int]): MergeStats = {
-    val vType = m.schema(m.versionCol).dataType
-    // common columns must match stored types exactly — a drifted delta
-    // file would poison every later fold under the explicit schema
-    changes.columns.filterNot(_ == "bucket").foreach { c =>
-      m.schema.fields.find(_.name == c).foreach { f =>
-        val got = changes.schema(c).dataType
-        require(got == f.dataType,
-          s"batch column $c: ${got.simpleString} does not match stored " +
-            s"${f.dataType.simpleString} (merge-on-read deltas must be " +
-            "byte-compatible with the base)")
-      }
-    }
-    val dataCols = changes.columns.filterNot(_ == "bucket").toSeq
-    val staged = txn.stage(
-      changes.select(col("bucket") +: dataCols.map(col): _*)
-        .withColumn("_seq", lit(txn.newVersion))
-        .repartition(col("bucket")),
-      m.keys)
-    val newStats = Compaction.stagedStats(
-      spark, txn.staging, staged, m.versionCol)
-    val deltaRows = newStats.values.map(_.rows).sum
-
+    val dataCols = changes.columns.toSeq.filterNot(_ == "bucket")
+    val (deltaProps, deltaRows) = txn.appendDeltas(m, changes, dataCols)
     // a batch that ADDS columns widens the manifest schema (base and
     // older delta files null-extend under the explicit read schema);
-    // the generated interval columns stay LAST so stateSchema and
-    // window output agree
+    // the generated interval columns stay LAST so the state-record
+    // columns and window output agree
+    val (intervals, states) = m.schema.fields.partition(f =>
+      f.name == "valid_to" || f.name == "is_current")
     val newCols = changes.drop("bucket").schema.fields
       .filterNot(f => m.schema.fieldNames.contains(f.name))
     val schemaJson = if (newCols.isEmpty) m.schema.json
       else org.apache.spark.sql.types.StructType(
-        (m.stateSchema.fields ++ newCols ++
-          m.schema.fields.filter(f =>
-            f.name == "valid_to" || f.name == "is_current"))
-          .map(_.copy(nullable = true))).json
-
-    val deltaProps = Compaction.deltaAppendProps(m.snap, staged, newStats,
-      txn.bucketRel, vType)
-    val carried = Compaction.carriedStats(m.snap.props, staged.toSet,
-      Compaction.DeltaPrefixes)
+        (states ++ newCols ++ intervals).map(_.copy(nullable = true))).json
     // the base bucket map is UNCHANGED — that is the whole point
     txn.commit(m.buckets,
       coreProps(m.keys, m.versionCol, m.deleteCol, m.nBuckets,
-        schemaJson) ++ floorProp(m.snap) ++ carried ++ deltaProps,
+        schemaJson) ++ floorProp(m.snap) ++ deltaProps,
       op = "merge-mor", vacuum = true)
     MergeStats(touched, deltaRows)
   }
@@ -706,37 +601,27 @@ object Scd2 {
     * verbatim. Same incremental contract as [[Compaction.compact]].
     */
   def compact(spark: SparkSession, dir: String, minDeltas: Int = 1,
-      retainHistory: Boolean = false): Unit = {
-    TxLog.withOcc(spark, dir) {
+      retainHistory: Boolean = false): Unit =
+    TableTxn.rewrite(spark, dir, "compact", retainHistory) {
       val m = loadMeta(spark, dir)
       val dirty = m.deltas.collect {
         case (b, rels) if rels.size >= minDeltas => b
       }.toSet
-      if (dirty.isEmpty) return
-      TxLog.sweep(spark, dir)
-      val txn = new TableTxn(spark, dir, m.snap)
       // bucketed fold: the fold itself establishes the bucket
       // distribution the staged write needs — no second exchange (r16)
-      val staged = txn.stage(
-        foldBuckets(spark, dir, m, dirty, bucketed = true), m.keys)
-      txn.commit(
-        (m.buckets -- dirty) ++ staged.map(b => b -> txn.bucketRel(b)).toMap,
-        coreProps(m.keys, m.versionCol, m.deleteCol, m.nBuckets,
-          m.schema.json) ++ floorProp(m.snap) ++
+      Option.when(dirty.nonEmpty)(TableTxn.Rewrite(m.snap,
+        m.buckets -- dirty, foldBuckets(spark, dir, m, dirty, bucketed = true),
+        (txn, staged) =>
+          coreProps(m.keys, m.versionCol, m.deleteCol, m.nBuckets,
+            m.schema.json) ++ floorProp(m.snap) ++
           Compaction.carriedStats(m.snap.props, dirty) ++
           Compaction.rowProps(Compaction.stagedStats(
-            spark, txn.staging, staged, m.versionCol)),
-        op = "compact", vacuum = !retainHistory)
+            spark, txn.staging, staged, m.versionCol))))
     }
-  }
 
   /** Per-bucket merge-on-read pressure, manifest-only: (bucket,
     * unfolded delta dirs, delta rows).
     */
-  def deltaStats(spark: SparkSession, dir: String): Seq[(Int, Int, Long)] = {
-    val m = loadMeta(spark, dir)
-    m.deltas.toSeq.sortBy(_._1).map { case (b, rels) =>
-      (b, rels.size, m.snap.counter(s"drows.$b"))
-    }
-  }
+  def deltaStats(spark: SparkSession, dir: String): Seq[(Int, Int, Long)] =
+    Compaction.deltaStats(spark, dir)
 }

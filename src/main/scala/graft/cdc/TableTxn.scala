@@ -2,7 +2,8 @@ package graft.cdc
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.storage.StorageLevel
 
 /** One writer's attempt to advance a maintained table by one version —
   * the ONLY write protocol of [[Compaction]], [[Scd2]] and [[AggView]]:
@@ -22,7 +23,11 @@ import org.apache.spark.sql.functions.col
   *
   * A metadata-only commit (no staged data) is the same call with the
   * base's own bucket map, its props built by [[TableTxn.tableProps]].
-  * The protocol is safe for CONCURRENT writers:
+  * Around the transaction, the companion holds what the three kinds
+  * share: the merge loop ([[TableTxn.merge]]), the merge-on-read
+  * delta append ([[appendDeltas]]) and the rewrite skeleton
+  * ([[TableTxn.rewrite]]); each kind supplies only its reconcile step
+  * and its props. The protocol is safe for CONCURRENT writers:
   *
   *  - the staging directory is writer-unique (`.staging-<txn>`), so
   *    two in-flight merges never overwrite each other's staged data
@@ -104,6 +109,43 @@ private[cdc] final class TableTxn private (spark: SparkSession,
     if (!fs.exists(p)) Nil
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
       .collect { case s if s.startsWith("bucket=") => s.drop(7).toInt }
+  }
+
+  /** Stage `rows` (carrying `bucket`, then `dataCols`) as this
+    * transaction's merge-on-read delta files, each tagged `_seq` = the
+    * committing version, under `m`'s layout. Returns the delta props
+    * the commit needs and the rows staged (footer counts): each staged
+    * bucket appends its dir to its `delta.<b>` chain
+    * ([[Compaction.deltaAppendProps]]); every other bucket's chain
+    * carries verbatim, as do all base stats — the base is untouched.
+    * The base's leaf-version zone maps (`vminl.`/`vmaxl.`) stay true
+    * for the base files too; dropping them would let one append disarm
+    * leaf pruning table-wide (leaf consumers skip dirty buckets).
+    * Common columns must match `m`'s stored types exactly: a delta
+    * file with a drifted physical type would poison every later fold.
+    */
+  def appendDeltas(m: Compaction.Meta, rows: DataFrame,
+      dataCols: Seq[String]): (Map[String, String], Long) = {
+    dataCols.foreach { c =>
+      m.schema.fields.find(_.name == c).foreach { f =>
+        val got = rows.schema(c).dataType
+        require(got == f.dataType,
+          s"batch column $c: ${got.simpleString} does not match stored " +
+            s"${f.dataType.simpleString} (merge-on-read deltas must be " +
+            "byte-compatible with the base)")
+      }
+    }
+    val staged = stage(
+      rows.select(col("bucket") +: dataCols.map(col): _*)
+        .withColumn("_seq", lit(newVersion))
+        .repartition(col("bucket")),
+      m.keys, m.clusterBy, m.tp)
+    val stats = Compaction.stagedStats(spark, staging, staged, m.versionCol)
+    (Compaction.carriedStats(m.snap.props, staged.toSet,
+      Compaction.DeltaPrefixes) ++
+      Compaction.deltaAppendProps(m.snap, staged, stats, bucketRel,
+        m.schema(m.versionCol).dataType),
+      stats.values.map(_.rows).sum)
   }
 
   /** Publish this transaction as the table's next version: the base's
@@ -251,6 +293,94 @@ private[cdc] object TableTxn {
     TxLog.invalidate(dir)
     new TableTxn(spark, dir, None)
   }
+
+  /** Thrown inside [[merge]] when a concurrent rebucket committed
+    * between bucketing the batch and the attempt's own commit: the
+    * cached bucket ids are computed under the OLD layout and writing
+    * them would misplace keys in the new one, so the whole merge must
+    * re-bucket — an OCC retry alone cannot fix it.
+    */
+  private final class RebucketedDuringWrite extends RuntimeException(
+    "bucket count changed under an in-flight merge")
+
+  /** The merge loop of every maintained-table kind: bucket `batch`
+    * under the layout `resolve` returns and cache it ONCE, collect the
+    * touched buckets (a distinct over the bucket-id domain — a
+    * metadata-sized collect whatever the batch size), then run OCC
+    * attempts. Each attempt re-resolves the manifest, fences on the
+    * bucket count it bucketed with, sweeps crashed writers' leftovers
+    * (grace-aware: a LIVE concurrent writer's staging and in-flight
+    * generation survive) and hands `attempt` the snapshot, a
+    * transaction opened on it, the bucketed batch and the touched
+    * buckets. A rebucket landing under the merge restarts it here,
+    * re-bucketed (at most three times). `resolve` also carries the
+    * caller's own fences: it runs before the batch is materialized and
+    * again in every attempt. A batch touching no bucket returns
+    * `ifEmpty` when given, without a commit.
+    */
+  def merge[R](spark: SparkSession, dir: String, batch: DataFrame,
+      resolve: () => TxLog.Snapshot, ifEmpty: Option[R])(
+      attempt: (TxLog.Snapshot, TableTxn, DataFrame, Seq[Int]) => R): R = {
+    var restarts = 0
+    while (true) {
+      try return mergeBucketed(spark, dir, batch, resolve, ifEmpty, attempt)
+      catch { case _: RebucketedDuringWrite if restarts < 3 => restarts += 1 }
+    }
+    sys.error("unreachable")
+  }
+
+  private def mergeBucketed[R](spark: SparkSession, dir: String,
+      batch: DataFrame, resolve: () => TxLog.Snapshot, ifEmpty: Option[R],
+      attempt: (TxLog.Snapshot, TableTxn, DataFrame, Seq[Int]) => R): R = {
+    val base = resolve()
+    val nBuckets = base.props("n_buckets").toInt
+    val bucketed = batch
+      .withColumn("bucket", Bucketing.bucketOf(
+        Bucketing.decodeKeys(base.props("key")).map(col), nBuckets))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val touched = bucketed.select(col("bucket")).distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+      ifEmpty.filter(_ => touched.isEmpty).getOrElse(
+        TxLog.withOcc(spark, dir) {
+          val snap = resolve()
+          if (snap.props("n_buckets").toInt != nBuckets)
+            throw new RebucketedDuringWrite
+          Compaction.prof("merge.sweep") { TxLog.sweep(spark, dir) }
+          attempt(snap, new TableTxn(spark, dir, snap), bucketed, touched)
+        })
+    } finally bucketed.unpersist()
+  }
+
+  /** A rewrite of some or all buckets of `base`: `rows` (carrying
+    * `bucket`, distributed by it) are the rewritten buckets' new
+    * contents, staged under `clusterBy`/`tp`; `keep` are the base
+    * buckets the commit keeps; `props` builds the commit's props from
+    * the transaction and the buckets it staged.
+    */
+  private[cdc] final case class Rewrite(base: TxLog.Snapshot,
+      keep: Map[Int, String], rows: DataFrame,
+      props: (TableTxn, Seq[Int]) => Map[String, String],
+      clusterBy: Seq[String] = Nil, tp: Option[(String, String)] = None)
+
+  /** The rewrite skeleton of compaction, rebucket and repartition:
+    * under OCC, `plan` resolves the manifest and returns the rewrite,
+    * or None when there is nothing to do (no sweep, no commit); the
+    * rewrite then sweeps, stages its rows and commits them as `op` —
+    * dropping every older manifest unless `retainHistory`.
+    */
+  def rewrite(spark: SparkSession, dir: String, op: String,
+      retainHistory: Boolean)(plan: => Option[Rewrite]): Unit =
+    TxLog.withOcc(spark, dir) {
+      plan.foreach { r =>
+        TxLog.sweep(spark, dir)
+        val txn = new TableTxn(spark, dir, r.base)
+        val staged = txn.stage(r.rows,
+          Bucketing.decodeKeys(r.base.props("key")), r.clusterBy, r.tp)
+        txn.commit(r.keep ++ staged.map(b => b -> txn.bucketRel(b)),
+          r.props(txn, staged), op, vacuum = !retainHistory)
+      }
+    }
 
   /** Staged-intent marker `_batch-<n>`, written into `<staging>/feed`
     * BEFORE the commit that reserves batch `n` ([[TableTxn.reserveFeed]]):

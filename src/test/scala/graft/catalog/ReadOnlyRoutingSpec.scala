@@ -141,4 +141,23 @@ class ReadOnlyRoutingSpec extends SparkSpec {
     assert(rows2.toSet == api)
     assert(rows2.map(_._1).toSet == Set("a", "b", "c"))
   }
+
+  test("a min/max view's dirty buckets fold vmin/vmax in catalog reads") {
+    val dir = s"$warehouse/dash_mm"
+    AggView.init(Seq(("a", 10.0), ("b", 4.0)).toDF("grp", "amount"), dir,
+      Seq("grp"), "amount", 4, -1L, minMax = true)
+    AggView.merge(spark, dir,
+      Seq(("a", 20.0), ("b", 1.0)).toDF("grp", "amount"),
+      batchId = 1L, mergeOnRead = true)
+    assert(graft.cdc.TxLog.latest(spark, dir).get.deltas.nonEmpty)
+    val api = AggView.read(spark, dir).collect().toSet
+    def extremes(rows: Set[org.apache.spark.sql.Row]) = rows.map(r =>
+      (r.getAs[String]("grp"), r.getAs[java.math.BigDecimal]("vmin")
+        .doubleValue, r.getAs[java.math.BigDecimal]("vmax").doubleValue))
+    assert(extremes(api) == Set(("a", 10.0, 20.0), ("b", 1.0, 4.0)))
+    val viaCatalog = sqlc("SELECT * FROM gro.dash_mm")
+    assert(viaCatalog.queryExecution.executedPlan.toString
+      .contains("GraftScan"))
+    assert(viaCatalog.collect().toSet == api)
+  }
 }

@@ -203,6 +203,76 @@ class ConcurrentMergeSpec extends SparkSpec {
     assert(got.toSeq == Seq((5L, 172.0)), s"got $got")
   }
 
+  /** Runs `write` with `rebucket` fired from inside its first commit
+    * attempt, so that attempt's CAS loses to a new bucket layout.
+    */
+  private def underRebucket[A](rebucket: () => Unit)(write: => A): A = {
+    var fired = false
+    TxLog.beforeCommit = () => {
+      if (!fired) {
+        fired = true
+        TxLog.beforeCommit = () => ()
+        rebucket()
+      }
+    }
+    try write
+    finally TxLog.beforeCommit = () => ()
+  }
+
+  test("Scd2: a rebucket landing under an in-flight merge forces a " +
+      "re-bucketed retry") {
+    val dir = tmpDir("occ-scd2-rebucket") + "/t"
+    Scd2.init((1L to 40L).map(i => (i, s"v0-$i", 0L, false))
+      .toDF("id", "payload", "version", "deleted"),
+      dir, "id", "version", "deleted", nBuckets = 4)
+    underRebucket(() => Scd2.rebucket(spark, dir, 16)) {
+      Scd2.merge(spark, dir, Seq((7L, "v1-7", 1L, false))
+        .toDF("id", "payload", "version", "deleted"))
+    }
+    val (_, _, _, nB) = Scd2.readMeta(spark, dir)
+    assert(nB == 16, "the rebucket must have won the layout")
+    // the spliced history is found by the NEW layout's point lookup
+    assert(Scd2.lookup(spark, dir, 7L)
+      .select($"payload", $"is_current").as[(String, Boolean)]
+      .collect().toSet == Set(("v0-7", false), ("v1-7", true)))
+    assert(Scd2.read(spark, dir).count() == 41L)
+    Scd2.livePaths(spark, dir).foreach { case (b, p) =>
+      spark.read.parquet(p).select($"id").as[Long].collect().foreach { id =>
+        assert(keyBucket(Seq(id), 16) == b,
+          s"key $id misplaced: dir bucket=$b, hash ${keyBucket(Seq(id), 16)}")
+      }
+    }
+  }
+
+  test("AggView merge-on-read: an in-flight delta append restarts " +
+      "re-bucketed") {
+    val dir = tmpDir("occ-agg-mor-rebucket") + "/v"
+    AggView.init((1L to 40L).map(i => (i % 10, i.toDouble)).toDF("k", "v"),
+      dir, "k", "v", nBuckets = 2, batchId = 0L)
+    val stats = underRebucket(() => AggView.rebucket(spark, dir, 8)) {
+      AggView.merge(spark, dir, Seq((3L, 100.0)).toDF("k", "v"),
+        batchId = 1L, mergeOnRead = true)
+    }
+    assert(stats.applied)
+    val (_, _, nB, fence) = AggView.readMeta(spark, dir)
+    assert(nB == 8 && fence == 1L)
+    // the delta landed under the new layout: its chain is keyed by the
+    // 8-bucket hash of the rows it holds
+    val snap = TxLog.latest(spark, dir).get
+    assert(snap.deltas.nonEmpty, "the restarted merge must stay merge-on-read")
+    snap.deltas.foreach { case (b, rels) =>
+      rels.foreach { rel =>
+        spark.read.parquet(s"$dir/data/$rel").select($"k").as[Long]
+          .collect().foreach(k => assert(keyBucket(Seq(k), 8) == b,
+            s"delta key $k misplaced: chain bucket=$b"))
+      }
+    }
+    val got = AggView.read(spark, dir).filter(col("k") === 3L)
+      .select(col("cnt"), col("total").cast("double"))
+      .as[(Long, Double)].collect()
+    assert(got.toSeq == Seq((5L, 172.0)), s"got $got")
+  }
+
   test("sweep leaves a younger-than-grace in-flight generation alone") {
     val dir = tmpDir("occ-grace") + "/t"
     Compaction.init(Seq((1L, "x", 0L, false))

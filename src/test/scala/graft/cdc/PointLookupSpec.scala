@@ -5,14 +5,15 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The driver-local point read behind [[Compaction.lookup]] and
-  * [[Compaction.lookupMany]]: zero Spark jobs on clean, dirty and
-  * absent buckets; the same rows as a filter over [[Compaction.read]]
-  * on every table shape the catalog scan plans (merge-on-read chains,
-  * tombstones, NULL delete flags, composite keys, renamed and added
-  * columns, retired time partitions); the caller's session, not the
-  * thread's active one; key values cast to the key column's type; and
-  * every file closed when a read fails.
+/** The driver-local point read behind [[Compaction.lookup]],
+  * [[Compaction.lookupMany]], [[Scd2.lookup]] and [[AggView.lookup]]:
+  * zero Spark jobs on clean, dirty and absent buckets; the same rows
+  * as a filter over the kind's full read on every table shape the
+  * catalog scan plans (merge-on-read chains, tombstones, NULL delete
+  * flags, composite keys, renamed and added columns, retired time
+  * partitions, an SCD2 retention floor, min/max partials); the
+  * caller's session, not the thread's active one; key values cast to
+  * the key column's type; and every file closed when a read fails.
   */
 class PointLookupSpec extends SparkSpec {
 
@@ -241,5 +242,74 @@ class PointLookupSpec extends SparkSpec {
     intercept[Exception](Compaction.lookup(spark, dir, 7L))
     val leaked = openUnderTable()
     assert(leaked.isEmpty, s"files left open: ${leaked.mkString(", ")}")
+  }
+
+  /** `lookup(k)` equals `all.filter(key = k)`, runs no Spark job, and
+    * names files of k's bucket only.
+    */
+  private def pointAgrees(all: DataFrame, key: String, nBuckets: Int,
+      keys: Seq[Long])(lookup: Long => DataFrame): Unit =
+    keys.foreach { k =>
+      val ((got, files), jobs) = jobsOf {
+        val df = lookup(k)
+        (df.collect(), df.inputFiles)
+      }
+      assert(jobs == 0, s"lookup($k) ran $jobs Spark jobs")
+      assert(got.toSet == rows(all.filter(col(key) === k)), s"lookup($k)")
+      val buckets = files.map(f =>
+        "/bucket=([0-9]+)/".r.findFirstMatchIn(f).get.group(1).toInt).toSet
+      assert(buckets.subsetOf(Set(keyBucket(Seq(k), nBuckets))),
+        s"lookup($k) read buckets $buckets")
+    }
+
+  test("Scd2.lookup reads one bucket on the driver: clean, merge-on-read " +
+      "and across an expire floor") {
+    val dir = tmpDir("point-lookup-scd2") + "/h"
+    def batch(rs: (Long, String, Long, Boolean)*) =
+      rs.toDF("id", "payload", "version", "deleted")
+    Scd2.init((1L to 100L).map(i => (i, s"v0-$i", 0L, false))
+      .toDF("id", "payload", "version", "deleted"),
+      dir, "id", "version", "deleted", 8)
+    Scd2.merge(spark, dir, batch((5L, "cow-5", 1L, false),
+      (6L, "", 1L, true)))
+    Scd2.merge(spark, dir, batch((7L, "mor-7", 2L, false),
+      (5L, "mor-5", 2L, false), (200L, "mor-200", 2L, false)),
+      mergeOnRead = true)
+    assert(Scd2.deltaStats(spark, dir).nonEmpty)
+    val keys = Seq(5L, 6L, 7L, 8L, 200L, 999L)
+    pointAgrees(Scd2.read(spark, dir), "id", 8, keys)(
+      Scd2.lookup(spark, dir, _))
+    assert(Scd2.lookup(spark, dir, 5L).count() == 3L)
+
+    // retire the history superseded at version 1, then replay a
+    // pre-floor change into a delta: reads drop what expire dropped
+    assert(Scd2.expireHistoryBefore(spark, dir, 1L) > 0L)
+    Scd2.merge(spark, dir, batch((5L, "v0-5", 0L, false),
+      (8L, "mor-8", 3L, false)), mergeOnRead = true)
+    assert(Scd2.deltaStats(spark, dir).nonEmpty)
+    pointAgrees(Scd2.read(spark, dir), "id", 8, keys)(
+      Scd2.lookup(spark, dir, _))
+    assert(Scd2.lookup(spark, dir, 5L).select("payload").as[String]
+      .collect().toSet == Set("cow-5", "mor-5"))
+    assert(Scd2.lookup(spark, dir, 6L).collect().isEmpty)
+  }
+
+  test("AggView.lookup reads one bucket on the driver: clean and " +
+      "merge-on-read, min/max partials included") {
+    val dir = tmpDir("point-lookup-agg") + "/v"
+    def batch(rs: (Long, Double)*) = rs.toDF("k", "v")
+    AggView.init((1L to 60L).map(i => (i % 20, i.toDouble)).toDF("k", "v"),
+      dir, Seq("k"), "v", 8, 0L, minMax = true)
+    AggView.merge(spark, dir, batch((3L, 100.0), (4L, -5.0)), batchId = 1L)
+    AggView.merge(spark, dir, batch((3L, 500.0), (5L, -50.0),
+      (30L, 7.0)), batchId = 2L, mergeOnRead = true)
+    AggView.merge(spark, dir, batch((5L, 0.5)), batchId = 3L,
+      mergeOnRead = true)
+    assert(AggView.deltaStats(spark, dir).nonEmpty)
+    pointAgrees(AggView.read(spark, dir), "k", 8,
+      Seq(1L, 3L, 4L, 5L, 30L, 999L))(AggView.lookup(spark, dir, _))
+    assert(AggView.lookup(spark, dir, 5L)
+      .select(col("vmin").cast("double"), col("vmax").cast("double"))
+      .as[(Double, Double)].collect().toSeq == Seq((-50.0, 45.0)))
   }
 }

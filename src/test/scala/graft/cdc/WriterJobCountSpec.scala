@@ -25,7 +25,15 @@ class WriterJobCountSpec extends SparkSpec {
     "Scd2.init" -> 2,
     "Scd2.merge" -> 9,
     "AggView.init" -> 3,
-    "AggView.applyFeed" -> 7)
+    "AggView.applyFeed" -> 7,
+    "Scd2.merge (merge-on-read)" -> 5,
+    "Scd2.compact" -> 2,
+    "Scd2.rebucket" -> 2,
+    "AggView.merge (copy-on-write)" -> 7,
+    "AggView.merge (merge-on-read)" -> 6,
+    "AggView.compact" -> 3,
+    "AggView.rebucket" -> 2,
+    "Compaction.repartitionTime" -> 2)
 
   private def rows(ids: Seq[Long], version: Long,
       deleted: Long => Boolean = _ => false): DataFrame =
@@ -86,5 +94,47 @@ class WriterJobCountSpec extends SparkSpec {
     capped("AggView.applyFeed")(AggView.applyFeed(spark, view, feed, 0L))
     assert(AggView.read(spark, view).count() ==
       Compaction.read(spark, table).count())
+  }
+
+  test("merge-on-read, compaction, rebucket and repartition writers of " +
+      "every kind stay within their Spark job caps") {
+    val root = tmpDir("writer-jobs-kinds")
+    val hist = s"$root/hist"
+    Scd2.init(rows(1L to 200L, 0L).drop("price"), hist, Seq("id"),
+      "version", "deleted", 8)
+    capped("Scd2.merge (merge-on-read)") {
+      Scd2.merge(spark, hist,
+        rows(190L to 210L, 1L, _ == 195L).drop("price"), mergeOnRead = true)
+    }
+    assert(Scd2.deltaStats(spark, hist).nonEmpty)
+    capped("Scd2.compact")(Scd2.compact(spark, hist))
+    assert(Scd2.deltaStats(spark, hist).isEmpty)
+    capped("Scd2.rebucket")(Scd2.rebucket(spark, hist, 16))
+    assert(Scd2.current(spark, hist).count() == 209L)
+
+    val view = s"$root/view"
+    def measure(ids: Seq[Long]) = rows(ids, 0L).select("id", "price")
+    AggView.init(measure(1L to 200L), view, "id", "price", nBuckets = 8)
+    capped("AggView.merge (copy-on-write)") {
+      AggView.merge(spark, view, measure(190L to 210L), batchId = 1L)
+    }
+    capped("AggView.merge (merge-on-read)") {
+      AggView.merge(spark, view, measure(5L to 25L), batchId = 2L,
+        mergeOnRead = true)
+    }
+    assert(AggView.deltaStats(spark, view).nonEmpty)
+    capped("AggView.compact")(AggView.compact(spark, view))
+    assert(AggView.deltaStats(spark, view).isEmpty)
+    capped("AggView.rebucket")(AggView.rebucket(spark, view, 16))
+    assert(AggView.read(spark, view).count() == 210L)
+
+    val table = s"$root/table"
+    Compaction.init(rows(1L to 200L, 0L)
+        .withColumn("ts", timestamp_seconds(col("id") * 86400L)),
+      table, Seq("id"), "version", "deleted", 8)
+    capped("Compaction.repartitionTime") {
+      Compaction.repartitionTime(spark, table, Some("days" -> "ts"))
+    }
+    assert(Compaction.countRows(spark, table) == 200L)
   }
 }
