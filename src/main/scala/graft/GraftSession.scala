@@ -20,6 +20,8 @@ import graft.io.NioLocalFileSystem
   *    feed, watermarks, CSV exports); this one sets the same modes in
   *    process. Hadoop caches the first `file:` FileSystem a JVM creates,
   *    so it applies only when this session is built before any other.
+  *    Streaming checkpoints, written through Hadoop's `FileContext`, get
+  *    the same filesystem from [[graft.io.NioLocalFs]].
   */
 object GraftSession {
 
@@ -70,6 +72,8 @@ object GraftSession {
       // explicitly rather than relying on the default.
       .config("spark.speculation", "false")
       .config(NioLocalFileSystem.ConfKey, NioLocalFileSystem.ClassName)
+      .config(NioLocalFileSystem.FileContextConfKey,
+        NioLocalFileSystem.FileContextClassName)
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
     // deployment/scale overrides without a code edit: every env entry

@@ -113,7 +113,12 @@ private[catalog] final case class GraftFoldPartition(bucket: Int,
   * Filters are also re-applied by Spark above the scan (every filter
   * is reported as post-scan), so pushdown — bucket pruning, parquet
   * row-group stats, dictionary filtering — is a pure data reduction,
-  * never a correctness dependency. At 100 TB the full-scan plan is
+  * never a correctness dependency. The exception is a point select
+  * (pushed filters that bind every key column and nothing else, and
+  * pin at most one bucket): the builder plans it as a
+  * [[GraftPointScan]] instead, which applies the key bindings itself
+  * and reads that bucket's planned partitions on the driver while the
+  * query is planned, EXPLAIN included ([[GraftPointRead]]). At 100 TB the full-scan plan is
   * partition-per-128MB vectorized parquet with zero conversion; the
   * pruned plan opens exactly the directories the programmatic API
   * would.
@@ -128,6 +133,16 @@ private[catalog] object GraftScan {
     */
   lazy val listingPool: java.util.concurrent.ExecutorService =
     Compaction.listingPool
+
+  /** `_order` (publish order) exists only on the changelog STREAM;
+    * stored table rows have none, so a batch read that selects it is
+    * refused rather than null-extended.
+    */
+  def refuseOrder(required: StructType): Unit =
+    require(!required.fieldNames.exists(_.equalsIgnoreCase("_order")),
+      "_order is a streaming-only metadata column: it is the change " +
+        "feed's publish order, which stored table rows do not have — " +
+        "select it on spark.readStream.table(...) reads")
 }
 
 /** `spark` is the session the scan plans and reads for: its confs size
@@ -156,12 +171,7 @@ private[catalog] final class GraftScan(spark: SparkSession, dir: String,
   override def readSchema(): StructType = required
 
   override def toBatch: Batch = {
-    // `_order` (publish order) exists only on the changelog STREAM;
-    // stored table rows have none — refuse rather than null-extend
-    require(!required.fieldNames.exists(_.equalsIgnoreCase("_order")),
-      "_order is a streaming-only metadata column: it is the change " +
-        "feed's publish order, which stored table rows do not have — " +
-        "select it on spark.readStream.table(...) reads")
+    GraftScan.refuseOrder(required)
     this
   }
 
@@ -956,6 +966,12 @@ private[catalog] object GraftFold {
     } finally it.close()
   }
 
+  /** The row form of the null-tombstone rule: a NULL delete flag is
+    * live. Its Column form is [[graft.cdc.Compaction.isDeleted]].
+    */
+  def isDeleted(r: InternalRow, delIdx: Int): Boolean =
+    !r.isNullAt(delIdx) && r.getBoolean(delIdx)
+
   private def keyProjOf(spec: GraftFoldSpec): UnsafeProjection = {
     val in = spec.foldInput
     UnsafeProjection.create(spec.keys.map(k =>
@@ -1000,7 +1016,7 @@ private[catalog] object GraftFold {
           nullable = true)).toSeq)
     import scala.jdk.CollectionConverters._
     best.values().iterator().asScala
-      .filter(r => r.isNullAt(delIdx) || !r.getBoolean(delIdx))
+      .filter(r => !isDeleted(r, delIdx))
       .map(outProj)
   }
 
@@ -1062,7 +1078,7 @@ private[catalog] object GraftFold {
           val r = history(i)
           val validTo = if (i + 1 < history.size)
             history(i + 1).get(vIdx, vType) else null
-          val deleted = !r.isNullAt(delIdx) && r.getBoolean(delIdx)
+          val deleted = isDeleted(r, delIdx)
           // keep unless expire would have dropped it: fully-superseded
           // before the floor, or a tombstone at/below it
           !((validTo != null && vOrd.lteq(validTo, cut)) ||
@@ -1072,8 +1088,7 @@ private[catalog] object GraftFold {
         val r = history(i)
         val validTo = if (i + 1 < history.size)
           history(i + 1).get(vIdx, vType) else null
-        val isCurrent = i + 1 == history.size &&
-          !(!r.isNullAt(delIdx) && r.getBoolean(delIdx))
+        val isCurrent = i + 1 == history.size && !isDeleted(r, delIdx)
         val out = new GenericInternalRow(fields.length)
         var j = 0
         while (j < fields.length) {
@@ -1600,68 +1615,124 @@ private[catalog] object GraftPrune {
     }
     // per-key literal sets from the predicates' IN / = / <=> atoms;
     // several atoms on one key intersect (all must hold)
-    val perKey = scala.collection.mutable.Map.empty[String, Set[Literal]]
-    def bind(key: String, vals: Set[Literal]): Unit =
-      perKey(key) = perKey.get(key).map(_ intersect vals).getOrElse(vals)
+    val perKey = scala.collection.mutable.Map.empty[String, Seq[Literal]]
+    def bind(key: String, vals: Seq[Literal]): Unit = {
+      val in = vals.toSet
+      perKey(key) = perKey.get(key).map(_.filter(in.contains))
+        .getOrElse(vals.distinct)
+    }
     predicates.flatMap(flat).foreach { p =>
       p.name() match {
         case "IN" if p.children().nonEmpty =>
           keyRef(p.children()(0)).foreach { k =>
             val ls = p.children().drop(1).toSeq.map(lit(_, k))
-            if (!ls.exists(_.isEmpty)) bind(k, ls.flatten.toSet)
+            if (!ls.exists(_.isEmpty)) bind(k, ls.flatten)
           }
         case "=" | "<=>" if p.children().length == 2 =>
           val Array(a, b) = p.children()
-          keyRef(a).foreach(k => lit(b, k).foreach(l => bind(k, Set(l))))
-          keyRef(b).foreach(k => lit(a, k).foreach(l => bind(k, Set(l))))
+          keyRef(a).foreach(k => lit(b, k).foreach(l => bind(k, Seq(l))))
+          keyRef(b).foreach(k => lit(a, k).foreach(l => bind(k, Seq(l))))
         case _ => ()
       }
     }
-    if (!meta.keys.forall(perKey.contains)) return None
-    val sets = meta.keys.map(perKey)
-    if (sets.exists(_.isEmpty))
-      return Some(Set.empty) // a key bound to nothing
-    // overflow-safe product cap: multiply with an early exit — a
-    // plain .product of four ~55k-literal sets wraps a Long negative
-    // and would sail past the guard into an astronomic cross product
-    val cap = 4L * meta.nBuckets + 1
-    var product = 1L
-    sets.foreach { s =>
-      product = product * s.size
-      if (product > cap || product <= 0) return None
-    }
-    def cross(ss: Seq[Set[Literal]]): Seq[Seq[Literal]] = ss match {
-      case Seq() => Seq(Seq.empty)
-      case head +: tail =>
-        for (h <- head.toSeq; t <- cross(tail)) yield h +: t
-    }
-    Some(cross(sets).map(tuple =>
+    keyProduct(meta, perKey.toMap).map(_.map(tuple =>
       Bucketing.bucketOfLiterals(tuple, meta.nBuckets)).toSet)
   }
 
-  /** Composite-key point pruning: conjuncts binding EVERY key column
-    * to a same-typed literal pin exactly one bucket (the SQL form of
-    * the tuple lookup). Conflicting duplicate bindings pick one
-    * arbitrarily — sound, the residual filter matches nothing.
+  /** The key tuples that per-key literal sets allow: their cross
+    * product, in `meta.keys` order; no tuple when a key is bound to
+    * nothing. None when a key column is unbound, or when the product
+    * exceeds 4·nBuckets + 1 tuples, beyond which driver-side hashing
+    * cannot pay for itself. The cap is checked before each multiply,
+    * so four ~55k-literal sets cannot wrap a Long past it.
+    */
+  private def keyProduct(meta: ScanMeta,
+      perKey: Map[String, Seq[Literal]]): Option[Seq[Seq[Literal]]] = {
+    if (!meta.keys.forall(perKey.contains)) return None
+    val sets = meta.keys.map(perKey)
+    if (sets.exists(_.isEmpty)) return Some(Seq.empty)
+    val cap = 4L * meta.nBuckets + 1
+    var product = 1L
+    sets.foreach { s =>
+      if (product > cap / s.size) return None
+      product *= s.size
+    }
+    Some(sets.foldRight(Seq(Seq.empty[Literal])) { (set, tails) =>
+      for (h <- set; t <- tails) yield h +: t
+    })
+  }
+
+  private def conjuncts(f: Filter): Seq[Filter] = f match {
+    case s.And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case o => Seq(o)
+  }
+
+  /** The key tuples a SQL point select reads, when every pushed filter
+    * is a key binding or the `IsNotNull(key)` Spark infers from one
+    * ([[keyTuples]]) and the tuples pin at most one bucket, so that the
+    * driver read is bounded by the one bucket a `key = k` select
+    * reads. None (the query takes [[GraftScan]], whose partitions read
+    * in parallel) otherwise. `meta` is forced only when every filter
+    * has a binding shape.
+    */
+  def pointTuples(filters: Array[Filter],
+      meta: => ScanMeta): Option[Seq[Seq[Literal]]] = {
+    val fs = filters.toSeq.flatMap(conjuncts)
+    val shaped = fs.nonEmpty && fs.forall {
+      case s.EqualTo(_, _) | s.In(_, _) | s.IsNotNull(_) => true
+      case s.EqualNullSafe(_, v) => v != null
+      case _ => false
+    }
+    if (!shaped) return None
+    val m = meta
+    val (tuples, exact) = keyTuples(m, fs)
+    if (!exact) None
+    else tuples.filter(_.map(Bucketing.bucketOfLiterals(_, m.nBuckets))
+      .distinct.size <= 1)
+  }
+
+  /** The key tuples the key-binding conjuncts in `fs` allow
+    * ([[keyProduct]] of the per-key sets): `=` or `<=>` to a non-null
+    * literal of the key column's type, or `IN` such literals. Bindings
+    * of one key intersect, so `id = 7 AND id = 8` allows no tuple.
+    * `exact` is true when every conjunct was a binding or an
+    * `IsNotNull` on a key column, so that the tuples alone decide
+    * which rows match.
+    */
+  private def keyTuples(meta: ScanMeta,
+      fs: Seq[Filter]): (Option[Seq[Seq[Literal]]], Boolean) = {
+    val cap = 4L * meta.nBuckets + 1
+    def keyOf(a: String): Option[String] =
+      meta.keys.find(a.equalsIgnoreCase)
+    val perKey = scala.collection.mutable.Map.empty[String, Seq[Literal]]
+    def bind(a: String, vs: Seq[Any]): Boolean = keyOf(a) match {
+      case Some(k) if vs.length <= cap =>
+        val ls = vs.map(typedLit(meta, a, _))
+        ls.forall(_.isDefined) && {
+          val set = ls.flatten.distinct
+          perKey(k) = perKey.get(k).map(_.filter(set.contains)).getOrElse(set)
+          true
+        }
+      case _ => false
+    }
+    val exact = fs.map {
+      case s.EqualTo(a, v) => bind(a, Seq(v))
+      case s.EqualNullSafe(a, v) => v != null && bind(a, Seq(v))
+      case s.In(a, vs) => bind(a, vs.toSeq)
+      case s.IsNotNull(a) => keyOf(a).isDefined
+      case _ => false
+    }.forall(identity)
+    (keyProduct(meta, perKey.toMap), exact)
+  }
+
+  /** Composite-key pruning: conjuncts binding EVERY key column (the SQL
+    * form of the tuple lookup) keep only the buckets of their tuples;
+    * contradictory bindings keep none, and the residual filter would
+    * match nothing there.
     */
   private def compositeBucket(meta: ScanMeta,
-      pushed: Array[Filter]): Option[Set[Int]] = {
-    if (meta.keys.size <= 1) return None
-    def conjuncts(f: Filter): Seq[Filter] = f match {
-      case s.And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case o => Seq(o)
-    }
-    val bindings: Map[String, Literal] = pushed.toSeq.flatMap(conjuncts)
-      .flatMap {
-        case s.EqualTo(a, v) => typedLit(meta, a, v)
-          .map(a.toLowerCase -> _)
-        case s.EqualNullSafe(a, v) if v != null =>
-          typedLit(meta, a, v).map(a.toLowerCase -> _)
-        case _ => None
-      }.toMap
-    if (meta.keys.forall(k => bindings.contains(k.toLowerCase)))
-      Some(Set(Bucketing.bucketOfLiterals(
-        meta.keys.map(k => bindings(k.toLowerCase)), meta.nBuckets)))
-    else None
-  }
+      pushed: Array[Filter]): Option[Set[Int]] =
+    if (meta.keys.size <= 1) None
+    else keyTuples(meta, pushed.toSeq.flatMap(conjuncts))._1.map(
+      _.map(Bucketing.bucketOfLiterals(_, meta.nBuckets)).toSet)
 }

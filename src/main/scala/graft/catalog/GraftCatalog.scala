@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, SupportsNamespaces, SupportsRead, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
@@ -56,8 +57,15 @@ import graft.cdc.{Compaction, Scd2, TxLog}
   * their partition reader. Pushed filters are also re-applied by
   * Spark above the scan (we return every filter as post-scan), so
   * pushdown here is a data reduction, never a correctness
-  * dependency. Scd2/AggView tables route through the same scan with
-  * their own fold readers, read-only.
+  * dependency. The one exception is a point select, whose filters
+  * bind every key column to literals (`WHERE id = 7`, `id IN (…)`,
+  * a whole composite-key tuple) and pin at most one bucket: it
+  * becomes a `LocalScan`
+  * ([[GraftPointScan]]) whose rows the same planner and fold produce
+  * on the driver ([[GraftPointRead]], which also serves the API
+  * lookups), so the select runs no Spark job, and reads its bucket
+  * while it is planned. Scd2/AggView tables route through the same
+  * scans with their own fold readers, read-only.
   *
   * Write path: `V1Write` → `InsertableRelation` → one
   * [[Compaction.merge]] (append = upsert-by-version, the reference's
@@ -1070,7 +1078,7 @@ final class GraftTable(tableName: String, val dir: String,
     * the engine's own merge recognizes `_order` as its sanctioned
     * tiebreak channel and never stores it. Streaming-only: stored
     * table rows have no publish order, so a batch read selecting it
-    * refuses (see [[GraftScan.toBatch]]). `_order` is a reserved
+    * refuses (see [[GraftScan.refuseOrder]]). `_order` is a reserved
     * column name, so it can never shadow table data.
     */
   override def metadataColumns()
@@ -1161,9 +1169,17 @@ final class GraftTable(tableName: String, val dir: String,
   * column pushdown reach the parquet readers and the driver-side
   * bucket/zone-map pruning directly, and a bare `COUNT(*)` on a
   * compacted table short-circuits to manifest stats with zero file
-  * reads ([[GraftCountScan]]). Every filter is ALSO returned as
+  * reads ([[GraftStatsScan]]). Every filter is ALSO returned as
   * post-scan (Spark re-applies it above), so pushdown is purely a
-  * data reduction, never a correctness dependency.
+  * data reduction, never a correctness dependency — with one
+  * exception: when the pushed filters are all key bindings that pin
+  * every key column and pin at most one bucket
+  * ([[GraftPrune.pointTuples]]), none is returned and the scan is a
+  * [[GraftPointScan]], which applies exactly those bindings. An `IN`
+  * list spanning buckets keeps the [[GraftScan]], whose partitions read
+  * in parallel. It reads its bucket on the driver while the query is
+  * planned (under EXPLAIN too), and collecting it runs no Spark job.
+  * Row-level (`tracker`) scans never take that path.
   */
 private[catalog] final class GraftScanBuilder(spark: SparkSession,
     dir: String, asOf: Option[Long], tableSchema: StructType,
@@ -1176,11 +1192,23 @@ private[catalog] final class GraftScanBuilder(spark: SparkSession,
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = tableSchema
   private var aggStats: Option[(StructType, Array[Any])] = None
+  // the manifest, when pushFilters had to resolve it; the scan built
+  // reads this one
+  private var meta: Option[ScanMeta] = None
+  private var point: Option[Seq[Seq[Literal]]] = None
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters.filter(f =>
       GraftScanBuilder.translate(f).isDefined)
-    filters // all re-applied post-scan: pushdown is best-effort
+    if (tracker.isEmpty)
+      point = GraftPrune.pointTuples(filters, meta.getOrElse {
+        val m = ScanMeta.load(spark, dir, asOf)
+        meta = Some(m)
+        m
+      })
+    // a point scan applies its key bindings exactly; any other scan
+    // prunes best-effort and Spark re-applies every filter above it
+    if (point.isDefined) Array.empty else filters
   }
 
   override def pushedFilters(): Array[Filter] = pushed
@@ -1315,10 +1343,13 @@ private[catalog] final class GraftScanBuilder(spark: SparkSession,
     Some((StructType(pairs.map(_._1)), pairs.map(_._2).toArray))
   }
 
-  override def build(): Scan = aggStats match {
-    case Some((schema, values)) => new GraftStatsScan(dir, schema, values)
-    case None => new GraftScan(spark, dir, asOf, required, pushed,
-      tracker, options)
+  override def build(): Scan = (aggStats, point) match {
+    case (Some((schema, values)), _) =>
+      new GraftStatsScan(dir, schema, values)
+    case (None, Some(tuples)) =>
+      new GraftPointScan(spark, meta.get, asOf, required, tuples)
+    case (None, None) => new GraftScan(spark, dir, asOf, required,
+      pushed, tracker, options, resolved = meta)
   }
 }
 

@@ -5,9 +5,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BasePredicate, BoundReference, CreateStruct, InSet, Literal, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BasePredicate, BoundReference, CreateStruct, InSet, Literal, Predicate, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.connector.read.{LocalScan, Statistics, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.streaming.SparkDataStream
 import org.apache.spark.sql.execution.FileRelation
 import org.apache.spark.sql.sources
@@ -31,18 +32,67 @@ private[graft] class GraftPointRelation(output: Seq[Attribute],
   override protected def otherCopyArgs: Seq[AnyRef] = Seq(files)
 }
 
+/** A catalog SELECT whose pushed filters bind every key column and pin
+  * at most one bucket ([[GraftPrune.pointTuples]]). Spark plans a `LocalScan` as a
+  * `LocalTableScanExec`, whose `collect()` and `take()` run no Spark
+  * job. The rows are [[GraftPointRead.rows]] of the one manifest the
+  * scan builder resolved (`meta`: the latest, or the `VERSION AS OF`
+  * one), projected to the pruned columns. They are read the first
+  * time Spark asks for them or for statistics, which is while the
+  * query is planned, EXPLAIN included.
+  */
+private[catalog] final class GraftPointScan(val spark: SparkSession,
+    val meta: ScanMeta, asOf: Option[Long], required: StructType,
+    tuples: Seq[Seq[Literal]]) extends LocalScan
+    with SupportsReportStatistics {
+
+  GraftScan.refuseOrder(required)
+
+  private lazy val read = GraftPointRead.rows(spark, meta, required, tuples)
+
+  override def readSchema(): StructType = required
+
+  override def rows(): Array[InternalRow] = read.rows.toArray
+
+  /** Every file the read opened, with its length. */
+  def plannedFiles: Seq[(String, Long)] = read.files
+
+  override def description(): String =
+    s"GraftPointScan ${meta.dir}" +
+      s"${asOf.map(v => s" asOf=$v").getOrElse("")} keys=${tuples.size}"
+
+  /** Exact rows, and the opened files' bytes, as [[GraftScan]] reports
+    * its pruned listing: a point select stays small to join planning.
+    */
+  override def estimateStatistics(): Statistics = {
+    val r = read
+    new Statistics {
+      override def sizeInBytes(): java.util.OptionalLong =
+        java.util.OptionalLong.of(math.max(r.files.map(_._2).sum, 1L))
+      override def numRows(): java.util.OptionalLong =
+        java.util.OptionalLong.of(r.rows.size.toLong)
+    }
+  }
+}
+
 /** Driver-local point read of a maintained table of any kind (merge,
   * scd2, aggview): the catalog scan ([[GraftScan]]) plans the pinned
-  * buckets, exactly as it would for a SQL point select, and the
-  * planned partitions are then read and folded ([[GraftFold]]) on the
-  * calling thread instead of in a Spark job. Rows are filtered to the
-  * looked-up keys before the fold. Key equality is fold-safe, because
-  * every row a key folds from carries the key, so driver memory stays
-  * at those keys' rows. The result is a
-  * [[GraftPointRelation]] holding the rows already read: collecting it
-  * runs no Spark job and analyzes no fold plan.
+  * buckets and the planned partitions are then read and folded
+  * ([[GraftFold]]) on the calling thread instead of in a Spark job.
+  * Rows are filtered to the looked-up keys before the fold. Key
+  * equality is fold-safe, because every row a key folds from carries
+  * the key, so driver memory stays at those keys' rows. [[rows]] is
+  * the read itself, shared by the API lookups ([[read]], which wraps
+  * the rows in a [[GraftPointRelation]]) and the catalog's SQL point
+  * select ([[GraftPointScan]]): neither runs a Spark job or analyzes
+  * a fold plan.
   */
 private[graft] object GraftPointRead {
+
+  /** A point read's live rows, in the layout of the columns it was
+    * asked for, and every file it opened with its length.
+    */
+  final case class Rows(rows: Vector[InternalRow], files: Seq[(String, Long)])
 
   /** The live rows of `keyValues`, read from the buckets they hash
     * into, planned and read under `spark`'s confs. A key value is the
@@ -63,24 +113,44 @@ private[graft] object GraftPointRead {
         s"!= table key (${meta.keys.mkString(", ")})")
       Bucketing.keyLiterals(schema, meta.keys, vals, tz)
     }
-    // a null key value equals no key
+    val got = rows(spark, meta, schema, tuples)
+    val output = DataTypeUtils.toAttributes(GraftBridge.asNullable(schema))
+    GraftBridge.ofRows(spark, new GraftPointRelation(output, got.rows,
+      isStreaming = false, stream = None, got.files.map(_._1)))
+  }
+
+  /** The live rows of the key `tuples` (literals typed as the key
+    * columns, in `meta.keys` order) in `meta`'s snapshot, projected to
+    * `required`. A tuple holding a null matches no key. The key
+    * columns are read whether or not `required` holds them, since the
+    * rows are filtered on them here.
+    */
+  def rows(spark: SparkSession, meta: ScanMeta, required: StructType,
+      tuples: Seq[Seq[Literal]]): Rows = {
     val wanted = tuples.filterNot(_.exists(_.value == null))
-    val scan = new GraftScan(spark, dir, None, schema,
+    val missing = meta.keys.filterNot(k =>
+      required.fieldNames.exists(_.equalsIgnoreCase(k)))
+    val readSchema = StructType(required.fields ++ missing.map(k =>
+      meta.schema.fields.find(_.name.equalsIgnoreCase(k)).get))
+    val scan = new GraftScan(spark, meta.dir, None, readSchema,
       pushedOf(meta.keys, wanted), resolved = Some(meta),
       pin = Some(wanted.map(Bucketing.bucketOfLiterals(_, meta.nBuckets))
         .toSet))
     val files = scan.plannedFiles
-    val rows =
+    val read =
       if (files.isEmpty) Vector.empty[InternalRow]
       else {
         val factory = scan.createReaderFactory()
           .asInstanceOf[GraftReaderFactory]
         readAll(factory, scan.planInputPartitions().toSeq, meta.keys,
-          wanted, schema)
+          wanted, readSchema)
       }
-    val output = DataTypeUtils.toAttributes(GraftBridge.asNullable(schema))
-    GraftBridge.ofRows(spark, new GraftPointRelation(output, rows,
-      isStreaming = false, stream = None, files.map(_._1)))
+    if (missing.isEmpty) Rows(read, files)
+    else {
+      val proj = UnsafeProjection.create(required.fields.indices.map(i =>
+        BoundReference(i, required.fields(i).dataType, nullable = true)))
+      Rows(read.map(r => proj(r).copy()), files)
+    }
   }
 
   private def readAll(factory: GraftReaderFactory,

@@ -42,6 +42,16 @@ class GraftBatchScanSpec extends SparkSpec {
         df.queryExecution.executedPlan.toString))
   }
 
+  /** The point scan of a key-pinned select: `LocalTableScanExec` keeps
+    * only its rows, so it is found in the optimized plan.
+    */
+  private def pointOf(df: DataFrame): GraftPointScan =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2
+          .DataSourceV2ScanRelation => r.scan
+    }.collect { case p: GraftPointScan => p }.getOrElse(
+      fail(s"no GraftPointScan in:\n" + df.queryExecution.optimizedPlan))
+
   private def mkTable(name: String, rows: Int, buckets: Int): String = {
     sqlc(s"""CREATE TABLE gbatch.$name (
         id BIGINT, name STRING, version BIGINT, deleted BOOLEAN)
@@ -67,13 +77,7 @@ class GraftBatchScanSpec extends SparkSpec {
   test("key equality prunes the planned files to exactly one bucket dir") {
     val dir = mkTable("t2", 1000, 16)
     val df = sqlc("SELECT name FROM gbatch.t2 WHERE id = 7")
-    val scan = scanOf(df)
-    val parts = scan.inputRDD.partitions.length
-    val files = scan.scan.asInstanceOf[GraftScan].toBatch
-      .planInputPartitions().flatMap {
-        case f: GraftCleanPartition => f.files.map(_.urlEncodedPath)
-        case _ => Array.empty[String]
-      }
+    val files = pointOf(df).plannedFiles.map(_._1)
     // the one bucket dir the programmatic lookup opens
     val bucket = keyBucket(Seq(7L), 16)
     val expectDir = Compaction.livePaths(spark, dir)(bucket)
@@ -82,7 +86,6 @@ class GraftBatchScanSpec extends SparkSpec {
     assert(files.forall(f =>
       java.net.URLDecoder.decode(f, "UTF-8").stripPrefix("file:")
         .startsWith(expectDir.stripPrefix("file:"))))
-    assert(parts >= 1)
     assert(df.as[String].collect().toSeq == Seq("u7"))
   }
 
@@ -174,7 +177,7 @@ class GraftBatchScanSpec extends SparkSpec {
     mkTable("t6", 100, 4)
     sqlc("INSERT INTO gbatch.t6 SELECT 5L, 'after', 1L, false")
     val v0 = sqlc("SELECT name FROM gbatch.t6 VERSION AS OF 1 WHERE id = 5")
-    assert(scanOf(v0).scan.isInstanceOf[GraftScan])
+    assert(pointOf(v0).meta.version == 1L)
     assert(v0.as[String].head() == "u5")
     assert(sqlc("SELECT name FROM gbatch.t6 WHERE id = 5")
       .as[String].head() == "after")

@@ -9,12 +9,13 @@ import scala.jdk.CollectionConverters._
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
 
 import graft.SparkSpec
 import graft.cdc.{CdcEngine, Compaction, TxLog, UserRow, WatermarkStore}
+import graft.streaming.CdcStream
 
 /** The engine's `file:` filesystem starts no process for a write, and
   * leaves the same modes as Hadoop's own local filesystem.
@@ -132,6 +133,38 @@ class NioLocalFileSystemSpec extends SparkSpec {
       assert(engine.incrementalExport("c").rowsExported > 0L)
     }
     assert(Compaction.countRows(spark, table) == 110L)
+    assert(started.isEmpty, s"processes started: ${started.mkString("; ")}")
+  }
+
+  test("a streaming export's checkpoints start no filesystem process") {
+    val root = tmpDir("niofs-stream")
+    val created = Timestamp.valueOf("2026-01-01 00:00:00")
+    (1 to 50).map(i => UserRow(i, s"u$i", s"u$i@x.com", created,
+        new Timestamp(created.getTime + i * 60000L), i % 10 == 0))
+      .toDF().write.parquet(s"$root/users")
+    // the control: Hadoop's own FileContext filesystem forks for a
+    // create (chmod, without native IO) and for a rename (readlink)
+    val stock = FileContext.getFileContext(URI.create("file:///"),
+      new Configuration())
+    val control = hadoopProcessStarts {
+      stock.create(new Path(s"$root/control"),
+        java.util.EnumSet.of(CreateFlag.CREATE)).close()
+      stock.rename(new Path(s"$root/control"), new Path(s"$root/control2"))
+    }
+    assert(control.nonEmpty, "the recording saw no process from the stock FileContext")
+    // a session with the FileContext setting the engine session carries
+    val s = spark.newSession()
+    s.conf.set(NioLocalFileSystem.FileContextConfKey.stripPrefix("spark.hadoop."),
+      NioLocalFileSystem.FileContextClassName)
+    assert(FileContext.getFileContext(URI.create("file:///"),
+      s.sessionState.newHadoopConf()).getDefaultFileSystem
+      .isInstanceOf[NioLocalFs])
+    val started = hadoopProcessStarts {
+      new CdcStream(s, s"$root/users", s"$root/ckpt", s"$root/out")
+        .deltaExport("c").awaitTermination()
+    }
+    assert(new java.io.File(s"$root/out").list().exists(_.endsWith(".csv")))
+    assert(new java.io.File(s"$root/ckpt/c-delta/commits").list().nonEmpty)
     assert(started.isEmpty, s"processes started: ${started.mkString("; ")}")
   }
 }
